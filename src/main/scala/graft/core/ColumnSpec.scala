@@ -17,7 +17,11 @@ import org.apache.spark.sql.types._
   *
   * Cleaners run *before* the cast (reference applies pydantic
   * BeforeValidators, customer.py:25-41) and must be pure `Column => Column`
-  * functions so the whole validation stays inside whole-stage codegen.
+  * functions. Cleaners and checks keep the validation inside whole-stage
+  * codegen only while they build no `CodegenFallback` expression (a
+  * higher-order function such as `filter` or `transform`): one such
+  * expression pulls the source's entire validate projection out of
+  * generated code.
   *
   * @param name      target column name (lowercase snake_case)
   * @param dataType  declared Spark type (see SURVEY §1.2 type mapping)

@@ -6,17 +6,24 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Result of validating one file's rows. All three frames share one cached
+/** Result of validating one file's rows. All three frames read one cached
   * plan; `valid`/`dlq` are filters over `all` (the reference's tagged-row
   * union stream, validator.py:97-148, split at write/base.py:50-75).
+  *
+  * `release()` uncaches that plan. Callers must use it (not
+  * `all.unpersist()`): `all` is a projection of the per-file constants
+  * OVER the cached rows, and unpersisting a projection is a no-op (the
+  * same trap as [[Publish.MergeResult]]).
   */
 final case class ValidationResult(
     all: DataFrame,
     valid: DataFrame,
     dlq: DataFrame,
     totalCount: Long,
-    errorCount: Long) {
+    errorCount: Long,
+    release: () => Unit) {
   def errorRate: Double = if (totalCount == 0) 0.0 else errorCount.toDouble / totalCount
+  def validCount: Long = totalCount - errorCount
 }
 
 /** The typed-filter core (reference src/pipeline/validate/validator.py:97-148).
@@ -33,8 +40,13 @@ final case class ValidationResult(
   *   - `file_record_data` — JSON of the raw pre-cast record for DLQ payloads
   *     (reference db_utils.py:261-275).
   *
-  * Everything is `Column` expressions — no UDFs — so the whole validation
-  * stays inside whole-stage codegen and scales linearly with partitions.
+  * Everything is `Column` expressions with a generated-code path — no
+  * UDFs, and no `CodegenFallback` expression such as the `filter`
+  * higher-order function — so the whole validate projection compiles into
+  * one whole-stage-codegen loop and scales linearly with partitions. The
+  * `_errors` array is a `concat` of one `when(rule, [error]) else []` per
+  * rule, not a filtered array of nullable errors: `ArrayFilter` has no
+  * generated code and would pull the entire projection out of codegen.
   */
 object Validator {
 
@@ -42,12 +54,18 @@ object Validator {
   val IsValidCol = "is_valid"
   val RawRecordCol = "file_record_data"
 
-  private val errorStruct = (colName: String, value: Column, errType: String, msg: Column) =>
-    struct(
+  private val NoErrors = array().cast(ArrayType(StructType(
+    Seq("column_name", "column_value", "error_type", "error_message")
+      .map(StructField(_, StringType)))))
+
+  /** One rule: a one-error array where `violated` holds, else empty. */
+  private def rule(violated: Column, colName: String, value: Column,
+                   errType: String, msg: String): Column =
+    when(violated, array(struct(
       lit(colName).as("column_name"),
       value.cast(StringType).as("column_value"),
       lit(errType).as("error_type"),
-      msg.as("error_message"))
+      lit(msg).as("error_message")))).otherwise(NoErrors)
 
   /** Excel serial epoch: 1899-12-30 (reference excel.py:21-23). */
   private val ExcelEpochDays = lit(java.sql.Date.valueOf("1899-12-30"))
@@ -95,7 +113,16 @@ object Validator {
     */
   def compile(raw: DataFrame, source: SourceConfig, fileName: String,
               logId: Long, excelDates: Boolean = false,
-              withRawRecord: Boolean = true): DataFrame = {
+              withRawRecord: Boolean = true): DataFrame =
+    withFileConstants(rowLevel(raw, source, excelDates, withRawRecord),
+      source, fileName, logId)
+
+  /** The columns of [[compile]] that vary by row: every cast target column,
+    * `file_row_number` when the input is numbered, the optional raw record,
+    * `_errors`, `is_valid` and `etl_row_hash`.
+    */
+  private def rowLevel(raw: DataFrame, source: SourceConfig,
+                       excelDates: Boolean, withRawRecord: Boolean): DataFrame = {
     val specs = source.columns
 
     // P1 alias rename + projection: unmapped file columns drop here
@@ -104,49 +131,43 @@ object Validator {
     // file_row_number is optional on input: the happy path validates an
     // unnumbered frame (no zipWithIndex pass) and only error files get
     // re-validated with real numbers for DLQ records
-    val rowNum = if (present.contains(Reader.RowNumCol)) col(Reader.RowNumCol)
-                 else lit(-1L)
+    val rowNum = if (present.contains(Reader.RowNumCol)) Seq("file_row_number") else Nil
     val aliased = raw.select(
       specs.map(s => (if (present.contains(s.fileAlias)) col(s.fileAlias)
-                      else lit(null).cast(StringType)).as(s.name)) :+
-        rowNum.as("file_row_number"): _*)
+                      else lit(null).cast(StringType)).as(s.name)) ++
+        rowNum.map(col(Reader.RowNumCol).as(_)): _*)
 
     val rawRecord =
       if (withRawRecord) Seq(to_json(struct(specs.map(s => col(s.name)): _*)).as(RawRecordCol))
       else Seq.empty[Column]
 
     // Per-spec: cleaned -> cast, with every violated rule contributing one
-    // error struct. array(...) of conditional nulls -> filter = compact.
+    // error struct, concatenated in spec then rule order.
     val castCols = specs.map { s =>
       castExpr(cleaned(s), s.dataType, excelDates).as(s.name)
     }
-    val errorExprs: Seq[Column] = specs.flatMap { s =>
+    val rules: Seq[Column] = specs.flatMap { s =>
       val c = cleaned(s)
       val casted = castExpr(c, s.dataType, excelDates)
-      val typeErr = when(c.isNotNull && casted.isNull,
-        errorStruct(s.name, c, "type_error",
-          lit(s"value is not a valid ${s.dataType.simpleString}")))
-      val nullErr = if (s.nullable) lit(null) else when(c.isNull,
-        errorStruct(s.name, c, "missing",
-          lit("field required")))
-      val lenErr = s.maxLength.map(n => when(casted.cast(StringType).isNotNull &&
-          length(casted.cast(StringType)) > n,
-        errorStruct(s.name, c, "string_too_long",
-          lit(s"string should have at most $n characters")))).getOrElse(lit(null))
-      val emailErr = if (!s.email) lit(null) else when(casted.isNotNull &&
-          !casted.rlike(ColumnSpec.EmailRegex),
-        errorStruct(s.name, c, "value_error",
-          lit("value is not a valid email address")))
-      val customErr = s.check.map { case (label, fn) => when(casted.isNotNull &&
-          !fn(casted),
-        errorStruct(s.name, c, "value_error", lit(label)))
-      }.getOrElse(lit(null))
-      Seq(typeErr, nullErr, lenErr, emailErr, customErr)
+      Seq(
+        Some(rule(c.isNotNull && casted.isNull, s.name, c, "type_error",
+          s"value is not a valid ${s.dataType.simpleString}")),
+        Option.when(!s.nullable)(rule(c.isNull, s.name, c, "missing",
+          "field required")),
+        s.maxLength.map(n => rule(casted.cast(StringType).isNotNull &&
+            length(casted.cast(StringType)) > n, s.name, c, "string_too_long",
+          s"string should have at most $n characters")),
+        Option.when(s.email)(rule(casted.isNotNull &&
+            !casted.rlike(ColumnSpec.EmailRegex), s.name, c, "value_error",
+          "value is not a valid email address")),
+        s.check.map { case (label, fn) =>
+          rule(casted.isNotNull && !fn(casted), s.name, c, "value_error", label)
+        }).flatten
     }
-    val errorsArr = filter(array(errorExprs: _*), e => e.isNotNull).as(ErrorsCol)
+    val errorsArr = (if (rules.isEmpty) NoErrors else concat(rules: _*)).as(ErrorsCol)
 
     val projected = aliased.select(
-      castCols ++ Seq(col("file_row_number")) ++ rawRecord ++ Seq(errorsArr): _*)
+      castCols ++ rowNum.map(col) ++ rawRecord ++ Seq(errorsArr): _*)
 
     // V4 row hash over sorted model fields (applied to the CAST values; the
     // reference hashes the validated/coerced record, validator.py:110-112).
@@ -157,11 +178,28 @@ object Validator {
     projected
       .withColumn(IsValidCol, size(col(ErrorsCol)) === 0)
       .withColumn("etl_row_hash", xxhash64(hashInput))
-      .withColumn("source_filename", lit(fileName))
-      .withColumn("file_load_log_id", lit(logId))
+  }
+
+  /** [[rowLevel]] plus the per-file constants, in [[compile]]'s column
+    * order: `file_row_number` (-1 on an unnumbered input),
+    * `source_filename` and `file_load_log_id`.
+    */
+  private def withFileConstants(rows: DataFrame, source: SourceConfig,
+                                fileName: String, logId: Long): DataFrame = {
+    val rowNum =
+      if (rows.columns.contains("file_row_number")) col("file_row_number")
+      else lit(-1L).as("file_row_number")
+    val rest = rows.columns.filterNot(c =>
+      c == "file_row_number" || source.columns.exists(_.name == c))
+    rows.select(source.columns.map(s => col(s.name)) ++ (rowNum +: rest.map(col)) ++
+      Seq(lit(fileName).as("source_filename"), lit(logId).as("file_load_log_id")): _*)
   }
 
   /** Run validation, cache, count, apply the threshold gate.
+    *
+    * The cache holds only [[rowLevel]]'s columns; the per-file constants
+    * are projected over it, so no row stores them and the cached plan's
+    * generated code is the same for every file of a source.
     *
     * The gate is `error_rate >= threshold` — the default 0.0 fails on ANY
     * error; a rate strictly below the threshold passes and still writes its
@@ -172,14 +210,14 @@ object Validator {
   def validate(raw: DataFrame, source: SourceConfig, fileName: String,
                logId: Long, excelDates: Boolean = false,
                withRawRecord: Boolean = true): ValidationResult = {
-    val all = compile(raw, source, fileName, logId, excelDates, withRawRecord).cache()
-    val counts = all.agg(
+    val rows = rowLevel(raw, source, excelDates, withRawRecord).cache()
+    val counts = rows.agg(
       count(lit(1)).as("total"),
       count(when(!col(IsValidCol), 1)).as("errors")).head()
     val (total, errors) = (counts.getLong(0), counts.getLong(1))
-    val valid = all.filter(col(IsValidCol))
-    val dlq = all.filter(!col(IsValidCol))
-    ValidationResult(all, valid, dlq, total, errors)
+    val all = withFileConstants(rows, source, fileName, logId)
+    ValidationResult(all, all.filter(col(IsValidCol)), all.filter(!col(IsValidCol)),
+      total, errors, release = () => { rows.unpersist(); () })
   }
 
   /** Throws [[ValidationThresholdExceededError]] when the gate trips. */

@@ -126,25 +126,10 @@ final class PipelineRunner(
     // numbering pass nor a to_json over every row. Files with errors
     // re-validate over the numbered frame with payloads enabled so DLQ
     // records carry real file_row_numbers and file_record_data.
-    // A single-file drop often scans as one task (one parquet row group /
-    // one CSV split): fan the validation out across the cluster when the
-    // scan itself can't. Only fires on under-partitioned reads — large
-    // multi-split files keep their native layout, no gratuitous shuffle.
-    // Parallelism comes from graft.core.ScanEstimate (parquet footer
-    // row-group counts; gzip = 1 task; otherwise one task per 128 MB) —
-    // `df.rdd.getNumPartitions` forced a full logical→RDD plan conversion
-    // per file on this hot path.
-    val par = spark.sparkContext.defaultParallelism
-    val estTasks =
-      try graft.core.ScanEstimate.effectiveTasks(
-        spark.sparkContext.hadoopConfiguration, path)
-      catch { case _: java.io.IOException => par.toLong }
-    val validationInput =
-      if (estTasks * 2 <= par) raw.df.repartition(par)
-      else raw.df
+    val fanOut = fanOutFor(path, source)
     val vr = graft.core.Trace.span("validate", "file" -> fileName)(
       graft.core.Trace.withJobDesc(spark, s"pipeline:validate $fileName")(
-        Validator.validate(validationInput, source, fileName, logId,
+        Validator.validate(fanOut(raw.df), source, fileName, logId,
           excelDates = reader.isInstanceOf[ExcelReader],
           withRawRecord = false)))
     var vrNumbered: Option[graft.operators.ValidationResult] = None
@@ -152,8 +137,10 @@ final class PipelineRunner(
       // WRITE: DLQ rows always persist (even below-threshold successes keep
       // their DLQ rows, reference test_csv.py:100-131).
       if (vr.errorCount > 0) {
+        // number in file order first, then fan out: the numbering pass
+        // needs the scan's own partition order
         val vrN = {
-          val n = Validator.validate(raw.numbered(), source, fileName, logId,
+          val n = Validator.validate(fanOut(raw.numbered()), source, fileName, logId,
             excelDates = reader.isInstanceOf[ExcelReader])
           vrNumbered = Some(n)
           n
@@ -230,7 +217,8 @@ final class PipelineRunner(
         // otherwise read -> Spark-side merge -> overwrite, with counts
         // observed during the overwrite's own write job (no separate cached
         // count pass) and first publishes skipping the merge join entirely
-        val cnt = sink.mergeInPlace(source.tableName, stage, source, now) match {
+        val cnt = sink.mergeInPlace(source.tableName, stage, source, now,
+            stageRows = vr.validCount) match {
           case Some(c) =>
             appendSidecar()
             c
@@ -298,8 +286,44 @@ final class PipelineRunner(
         publishInserts = mInserts,
         publishUpdates = mUpdates)
     } finally {
-      vr.all.unpersist()
-      vrNumbered.foreach(_.all.unpersist())
+      vr.release()
+      vrNumbered.foreach(_.release())
+    }
+  }
+
+  /** The validation input's fan-out for the file at `path`.
+    *
+    * A single-file drop often scans as one task (one parquet row group /
+    * one CSV split): fan the validation out across the cluster when the
+    * scan itself can't. Only fires on under-partitioned reads — large
+    * multi-split files keep their native layout, no gratuitous shuffle.
+    * Parallelism comes from graft.core.ScanEstimate (parquet footer
+    * row-group counts; gzip = 1 task; otherwise one task per 128 MB) —
+    * `df.rdd.getNumPartitions` forced a full logical→RDD plan conversion
+    * per file on this hot path.
+    *
+    * The fan-out hash-partitions on the grain's file columns. A round-robin
+    * repartition would first sort every row inside the single scan task
+    * (Spark sorts before a round-robin repartition so retries are
+    * deterministic); the hash needs no sort, and it leaves the cached
+    * validation clustered by grain, so the grain audit aggregates with no
+    * Exchange when the grain columns pass through uncast. Rows sharing one
+    * grain value land in one task — a file skewed that way fails the grain
+    * audit anyway. A file carrying none of the grain columns falls back to
+    * round-robin.
+    */
+  private def fanOutFor(path: String, source: SourceConfig): DataFrame => DataFrame = {
+    val par = spark.sparkContext.defaultParallelism
+    val estTasks =
+      try graft.core.ScanEstimate.effectiveTasks(
+        spark.sparkContext.hadoopConfiguration, path)
+      catch { case _: java.io.IOException => par.toLong }
+    if (estTasks * 2 > par) identity
+    else { df =>
+      val present = df.columns.toSet
+      val keys = source.columns.filter(c => source.grain.contains(c.name))
+        .map(_.fileAlias).filter(present)
+      if (keys.isEmpty) df.repartition(par) else df.repartition(par, keys.map(col): _*)
     }
   }
 

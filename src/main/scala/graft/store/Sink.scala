@@ -47,6 +47,15 @@ trait Sink {
   def mergeInPlace(name: String, stage: DataFrame, source: SourceConfig,
                    now: java.sql.Timestamp): Option[(Long, Long)] = None
 
+  /** [[mergeInPlace]] given the caller's exact row count of `stage` (the
+    * pipeline's validator has already counted it): a sink that sizes a new
+    * table's layout from the delta uses it instead of counting again. Sinks
+    * with no such sizing ignore it.
+    */
+  def mergeInPlace(name: String, stage: DataFrame, source: SourceConfig,
+                   now: java.sql.Timestamp, stageRows: Long): Option[(Long, Long)] =
+    mergeInPlace(name, stage, source, now)
+
   /** Post-publish layout policy hook: sinks with a physically pinned
     * layout (the bucketed parquet store) re-size it when the table has
     * outgrown it ([[TableStore.maybeRebucket]]); relational sinks have no

@@ -651,6 +651,14 @@ final class TableStore(spark: SparkSession, root: String,
                             now: java.sql.Timestamp): Option[(Long, Long)] =
     mergeInPlace(name, stage, source, now, planned = None)
 
+  /** [[mergeInPlace]] whose first publish sizes the buckets from
+    * `stageRows` instead of a count job over `stage`.
+    */
+  override def mergeInPlace(name: String, stage: DataFrame,
+                            source: SourceConfig, now: java.sql.Timestamp,
+                            stageRows: Long): Option[(Long, Long)] =
+    mergeInPlace(name, stage, source, now, planned = None, Some(stageRows))
+
   /** [[mergeInPlace]] with a pre-computed [[plannedBuckets]] hint: the
     * caller already paid the stage's touched-bucket probe (to bucket-prune
     * another read of the same publish, e.g. the release loop's card-delta
@@ -658,10 +666,12 @@ final class TableStore(spark: SparkSession, root: String,
     * ONLY when its bucket sizing matches the manifest the merge resolves —
     * a concurrent rebucket between the probe and the merge would make the
     * ids meaningless, and a silently-wrong touched set LOSES rows.
+    * `stageRows`, when given, is `stage`'s exact row count.
     */
   def mergeInPlace(name: String, stage: DataFrame, source: SourceConfig,
                    now: java.sql.Timestamp,
-                   planned: Option[(Int, Set[Int])]): Option[(Long, Long)] = {
+                   planned: Option[(Int, Set[Int])],
+                   stageRows: Option[Long] = None): Option[(Long, Long)] = {
     if (source.targetPartitionBy.nonEmpty) return None
     val cur = currentVersion(name)
     val man = cur.flatMap(v => readManifest(name, v))
@@ -682,7 +692,8 @@ final class TableStore(spark: SparkSession, root: String,
     // initial load maxes out the pruning granularity. Migration of a legacy
     // table implies maturity — take the max.
     val n = man.map(_.numBuckets).getOrElse {
-      if (tableIsEmpty) chooseBucketCount(stage.count()) else publishBuckets
+      if (tableIsEmpty) chooseBucketCount(stageRows.getOrElse(stage.count()))
+      else publishBuckets
     }
     def bucketOf(grain: Seq[String]): Column =
       pmod(xxhash64(grain.map(col): _*), lit(n.toLong))

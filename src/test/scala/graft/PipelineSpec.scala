@@ -212,6 +212,29 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(!Files.exists(dropDir.resolve("unknown_stuff.csv")))
   }
 
+  test("processFile leaves no cached relation: clean file, DLQ rows below " +
+       "the threshold, and a file failing the gate") {
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    def leaves(name: String, lines: Seq[String])(expect: FileResult => Boolean): Unit = {
+      val r = processor.processFile(dropFile(name, lines)).get
+      assert(expect(r), s"$name: $r")
+      assert(cache.isEmpty, s"$name left a cached relation")
+    }
+    leaves("sales_clean.csv", Seq(SalesHeader, salesRow("TXN001"), salesRow("TXN002"))) { r =>
+      r.success && r.errorName.isEmpty && r.publishInserts == 2
+    }
+    leaves("threshold_sales_3.csv", Seq(SalesHeader) ++
+      (1 to 9).map(i => salesRow(f"TXN2$i%02d")) :+
+      salesRow("TXN210").replace("10.5", "oops")) { r =>
+      r.success && r.recordsFailedValidation == 1 && r.publishInserts == 9
+    }
+    leaves("sales_gate.csv", Seq(SalesHeader,
+      salesRow("TXN101").replace("10.5", "asdf"), salesRow("TXN102"))) { r =>
+      !r.success && r.errorName.contains("ValidationThresholdExceededError")
+    }
+  }
+
   test("processAll summary counts") {
     dropFile("sales_s1.csv", Seq(SalesHeader, salesRow("TXN001")))
     dropFile("sales_s2.csv", Seq(SalesHeader, salesRow("TXN002", qty = 3)))

@@ -1,6 +1,10 @@
 package graft
 
+import graft.operators.Validator
+import graft.queries.PipelineBench.OrdersSource
 import graft.queries.Relational
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression guards: the properties that make these queries
@@ -543,5 +547,127 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("rangepartitioning(user_id") &&
       !p.contains("rangepartitioning(tus"),
       "no global sort of the event stream")
+  }
+  /** An [[OrdersSource]]-shaped frame of `n` clean rows. */
+  private def ordersRaw(n: Long): DataFrame = spark.range(n).select(
+    col("id").as("o_orderkey"), (col("id") % 7).as("o_custkey"),
+    when(col("id") % 3 === 0, "O").when(col("id") % 3 === 1, "F").otherwise("P")
+      .as("o_orderstatus"),
+    (col("id") + 1.5).as("o_totalprice"),
+    timestamp_seconds(col("id") * 86400L).as("o_orderdate"),
+    lit("1-URGENT").as("o_orderpriority"))
+
+  private object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  test("validate projection: no CodegenFallback rule, all of it inside " +
+       "whole-stage codegen") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    // every rule kind: cast, missing, max length, email, custom check
+    val sales = TestSources.salesCsv.copy(columns = TestSources.transactions :+
+      graft.core.ColumnSpec(name = "rep_email", dataType = org.apache.spark.sql.types.StringType,
+        email = true, maxLength = Some(64)))
+    val salesRaw = spark.range(20).select(
+      concat(lit("TXN"), col("id")).as("transaction_id"), lit("C1").as("customer_id"),
+      lit("SKU").as("product_sku"), col("id").cast("string").as("quantity"),
+      lit("10.5").as("unit_price"), lit("x").as("total_amount"),
+      lit("2024-01-15").as("sale_date"), lit("rep").as("sales_rep"),
+      lit("a@b.co").as("rep_email"))
+    for ((src, raw) <- Seq(OrdersSource -> ordersRaw(20), sales -> salesRaw)) {
+      val plan = Validator.compile(raw, src, "f", 0L).queryExecution.executedPlan
+      val fallbacks = Aqe.flatMap(plan)(_.expressions.flatMap(
+        _.collect { case e: CodegenFallback => e.prettyName }))
+      assert(fallbacks.isEmpty, s"${src.name}: no generated code for $fallbacks")
+      val projects = Aqe.collect(plan) { case p: ProjectExec => p }
+      val fused = Aqe.collect(plan) { case w: WholeStageCodegenExec =>
+        w.child.collect { case p: ProjectExec => p } }.flatten
+      assert(projects.nonEmpty && projects.forall(p => fused.exists(_ eq p)),
+        s"${src.name}: a validate Project runs outside whole-stage codegen:\n$plan")
+    }
+  }
+
+  test("validation cache holds only row-varying columns; release() uncaches it") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    def cached(df: DataFrame) =
+      spark.sessionState.executePlan(df.queryExecution.logical).withCachedData
+        .collect { case r: InMemoryRelation => r.output.map(_.name) }
+    val vr = Validator.validate(ordersRaw(50), OrdersSource, "orders_x.parquet", 42L)
+    try {
+      val cols = cached(vr.all)
+      assert(cols.size == 1, s"one cached relation, got $cols")
+      assert(cols.head.intersect(Seq("source_filename", "file_load_log_id",
+        "file_row_number")).isEmpty, s"per-file constant cached: ${cols.head}")
+      assert(vr.all.select("source_filename", "file_load_log_id", "file_row_number")
+        .distinct().collect().toSeq == Seq(Row("orders_x.parquet", 42L, -1L)))
+      assert(vr.totalCount == 50 && vr.validCount == 50)
+    } finally vr.release()
+    assert(cached(vr.all).isEmpty, "release() must drop the cache entry")
+  }
+
+  test("clean single-row-group parquet load: at most 13 Spark jobs, grain " +
+       "audit aggregates the cached stage with no Exchange") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+    val work = java.nio.file.Files.createTempDirectory("graft_budget")
+    ordersRaw(2000).coalesce(1).write.parquet(work.resolve("src").toString)
+    val part = java.nio.file.Files.list(work.resolve("src")).toArray
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    val drop = java.nio.file.Files.createDirectories(work.resolve("drop"))
+    def load(name: String) = {
+      val f = java.nio.file.Files.copy(part, drop.resolve(name))
+      new graft.run.Processor(spark, new graft.core.SourceRegistry(Seq(OrdersSource)),
+        new graft.store.TableStore(spark, work.resolve(s"wh_$name").toString),
+        new graft.run.FileOps(spark.sparkContext.hadoopConfiguration,
+          work.resolve("archive").toString, work.resolve("dup").toString),
+        new graft.run.CollectingNotifier, drop.toString).processFile(f.toString).get
+    }
+    assert(load("orders_warm.parquet").success)
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val barrier = new java.util.concurrent.CountDownLatch(1)
+    val auditPlans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlanInfo]
+    val auditExecs = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties.getProperty("spark.jobGroup.id")) match {
+          case Some("budget") => jobs.incrementAndGet()
+          case Some("budget-barrier") => barrier.countDown()
+          case _ =>
+        }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.description.startsWith("pipeline:audit") =>
+          auditExecs.add(s.executionId)
+          auditPlans.add(s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate if auditExecs.contains(u.executionId) =>
+          auditPlans.add(u.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("budget", "clean load")
+      val r = try load("orders_budget.parquet") finally sc.clearJobGroup()
+      assert(r.success && r.errorName.isEmpty && r.publishInserts == 2000, r.toString)
+      // listener events arrive in order: once the barrier job is seen, so
+      // is every job of the load
+      sc.setJobGroup("budget-barrier", "barrier")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      assert(barrier.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get() <= 13, s"a clean load submitted ${jobs.get()} Spark jobs")
+
+    // nodes above the cached stage (a cache scan's child is the cached plan)
+    def aboveCache(p: SparkPlanInfo): Seq[String] =
+      p.nodeName +: (if (p.nodeName == "InMemoryTableScan") Nil
+                     else p.children.toSeq.flatMap(aboveCache))
+    import scala.jdk.CollectionConverters._
+    val grain = auditPlans.asScala.toSeq.map(aboveCache)
+      .filter(_.exists(_.startsWith("TakeOrderedAndProject")))
+    assert(grain.nonEmpty, "grain audit plan not seen")
+    grain.foreach(nodes => assert(!nodes.exists(_.contains("Exchange")),
+      s"grain audit shuffles: ${nodes.mkString(" > ")}"))
   }
 }
