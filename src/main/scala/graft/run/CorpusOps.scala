@@ -193,7 +193,8 @@ object CorpusOps {
     graft.core.Chaos.point("corpus.after-invalidate")
     val counts = phase(spark, "bucketed merge") {
       store.withTableLock(cs.tableName) {
-        store.mergeInPlace(cs.tableName, stage, cs, now, planned)
+        store.mergeInPlace(cs.tableName, stage, cs, now, planned,
+          stageRows = None)
       }
     }
     // crash seam between the merge commit and every piece of index/card

@@ -126,10 +126,9 @@ final class PipelineRunner(
     // numbering pass nor a to_json over every row. Files with errors
     // re-validate over the numbered frame with payloads enabled so DLQ
     // records carry real file_row_numbers and file_record_data.
-    val fanOut = fanOutFor(path, source)
     val vr = graft.core.Trace.span("validate", "file" -> fileName)(
       graft.core.Trace.withJobDesc(spark, s"pipeline:validate $fileName")(
-        Validator.validate(fanOut(raw.df), source, fileName, logId,
+        Validator.validate(fannedOut(raw.df, path, source), source, fileName, logId,
           excelDates = reader.isInstanceOf[ExcelReader],
           withRawRecord = false)))
     var vrNumbered: Option[graft.operators.ValidationResult] = None
@@ -137,10 +136,8 @@ final class PipelineRunner(
       // WRITE: DLQ rows always persist (even below-threshold successes keep
       // their DLQ rows, reference test_csv.py:100-131).
       if (vr.errorCount > 0) {
-        // number in file order first, then fan out: the numbering pass
-        // needs the scan's own partition order
         val vrN = {
-          val n = Validator.validate(fanOut(raw.numbered()), source, fileName, logId,
+          val n = Validator.validate(raw.numbered(), source, fileName, logId,
             excelDates = reader.isInstanceOf[ExcelReader])
           vrNumbered = Some(n)
           n
@@ -218,7 +215,7 @@ final class PipelineRunner(
         // observed during the overwrite's own write job (no separate cached
         // count pass) and first publishes skipping the merge join entirely
         val cnt = sink.mergeInPlace(source.tableName, stage, source, now,
-            stageRows = vr.validCount) match {
+            stageRows = Some(vr.validCount)) match {
           case Some(c) =>
             appendSidecar()
             c
@@ -291,7 +288,7 @@ final class PipelineRunner(
     }
   }
 
-  /** The validation input's fan-out for the file at `path`.
+  /** `df`, the read of the file at `path`, fanned out for validation.
     *
     * A single-file drop often scans as one task (one parquet row group /
     * one CSV split): fan the validation out across the cluster when the
@@ -308,18 +305,21 @@ final class PipelineRunner(
     * deterministic); the hash needs no sort, and it leaves the cached
     * validation clustered by grain, so the grain audit aggregates with no
     * Exchange when the grain columns pass through uncast. Rows sharing one
-    * grain value land in one task — a file skewed that way fails the grain
-    * audit anyway. A file carrying none of the grain columns falls back to
-    * round-robin.
+    * grain value land in one validate task, and that includes every row
+    * whose grain is null or will not cast (those rows go to the DLQ). Only
+    * duplicates among the valid rows fail the grain audit, so under a
+    * nonzero validation-error threshold such a skewed file still loads,
+    * just with one task doing that share of the work. A file carrying none
+    * of the grain columns falls back to round-robin.
     */
-  private def fanOutFor(path: String, source: SourceConfig): DataFrame => DataFrame = {
+  private def fannedOut(df: DataFrame, path: String, source: SourceConfig): DataFrame = {
     val par = spark.sparkContext.defaultParallelism
     val estTasks =
       try graft.core.ScanEstimate.effectiveTasks(
         spark.sparkContext.hadoopConfiguration, path)
       catch { case _: java.io.IOException => par.toLong }
-    if (estTasks * 2 > par) identity
-    else { df =>
+    if (estTasks * 2 > par) df
+    else {
       val present = df.columns.toSet
       val keys = source.columns.filter(c => source.grain.contains(c.name))
         .map(_.fileAlias).filter(present)

@@ -43,18 +43,15 @@ trait Sink {
     * target — the overwrite fallback rewrites the whole table every
     * publish, which is fine for the versioned parquet store (O(1) pointer
     * swap, rewrite is the contract) but quadratic-over-time for a database.
+    *
+    * `stageRows`, when the caller has already counted `stage` (the
+    * pipeline's validator has), is that exact row count: a sink that sizes
+    * a new table's layout from the delta uses it instead of counting again.
+    * Sinks with no such sizing ignore it.
     */
   def mergeInPlace(name: String, stage: DataFrame, source: SourceConfig,
-                   now: java.sql.Timestamp): Option[(Long, Long)] = None
-
-  /** [[mergeInPlace]] given the caller's exact row count of `stage` (the
-    * pipeline's validator has already counted it): a sink that sizes a new
-    * table's layout from the delta uses it instead of counting again. Sinks
-    * with no such sizing ignore it.
-    */
-  def mergeInPlace(name: String, stage: DataFrame, source: SourceConfig,
-                   now: java.sql.Timestamp, stageRows: Long): Option[(Long, Long)] =
-    mergeInPlace(name, stage, source, now)
+                   now: java.sql.Timestamp,
+                   stageRows: Option[Long] = None): Option[(Long, Long)] = None
 
   /** Post-publish layout policy hook: sinks with a physically pinned
     * layout (the bucketed parquet store) re-size it when the table has
@@ -184,8 +181,8 @@ final class JdbcSink(
     * never with the accumulated target.
     */
   override def mergeInPlace(name: String, stage: DataFrame,
-                            source: SourceConfig,
-                            now: java.sql.Timestamp): Option[(Long, Long)] =
+                            source: SourceConfig, now: java.sql.Timestamp,
+                            stageRows: Option[Long]): Option[(Long, Long)] =
     Some(mergeImpl(name, stage, source, now, epoch = None))
 
   /** Exactly-once variant for Structured Streaming `foreachBatch`: the

@@ -647,17 +647,9 @@ final class TableStore(spark: SparkSession, root: String,
     * fall back to the full merge-overwrite path (None).
     */
   override def mergeInPlace(name: String, stage: DataFrame,
-                            source: SourceConfig,
-                            now: java.sql.Timestamp): Option[(Long, Long)] =
-    mergeInPlace(name, stage, source, now, planned = None)
-
-  /** [[mergeInPlace]] whose first publish sizes the buckets from
-    * `stageRows` instead of a count job over `stage`.
-    */
-  override def mergeInPlace(name: String, stage: DataFrame,
                             source: SourceConfig, now: java.sql.Timestamp,
-                            stageRows: Long): Option[(Long, Long)] =
-    mergeInPlace(name, stage, source, now, planned = None, Some(stageRows))
+                            stageRows: Option[Long]): Option[(Long, Long)] =
+    mergeInPlace(name, stage, source, now, planned = None, stageRows)
 
   /** [[mergeInPlace]] with a pre-computed [[plannedBuckets]] hint: the
     * caller already paid the stage's touched-bucket probe (to bucket-prune
@@ -671,7 +663,7 @@ final class TableStore(spark: SparkSession, root: String,
   def mergeInPlace(name: String, stage: DataFrame, source: SourceConfig,
                    now: java.sql.Timestamp,
                    planned: Option[(Int, Set[Int])],
-                   stageRows: Option[Long] = None): Option[(Long, Long)] = {
+                   stageRows: Option[Long]): Option[(Long, Long)] = {
     if (source.targetPartitionBy.nonEmpty) return None
     val cur = currentVersion(name)
     val man = cur.flatMap(v => readManifest(name, v))

@@ -101,7 +101,7 @@ object BucketSweep {
       }
       val (_, mergeKrows, mergeSec) = measured {
         store.mergeInPlace(cs.tableName, batch, cs,
-          new java.sql.Timestamp(1L), planned)
+          new java.sql.Timestamp(1L), planned, stageRows = None)
       }
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()

@@ -151,7 +151,7 @@ object ReleaseCost {
     val (counts, mergeKrows) = measured {
       store.withTableLock(cs.tableName) {
         store.mergeInPlace(cs.tableName, stage, cs,
-          new java.sql.Timestamp(1000L), planned)
+          new java.sql.Timestamp(1000L), planned, stageRows = None)
       }
     }
     // stage 4: the index append of the admitted docs
