@@ -1,5 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
+import graft.queries.{PipelineBench, TrainingData}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     // sample machine load BEFORE the session/warmup spin up their own
@@ -15,14 +17,7 @@ object Bench {
     // start and end are what let the artifact label that case itself
     val calibStart = graft.tools.Calib.best()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     // ERROR: Spark's "function X replaced a previously registered function"
     // WARNs (and executor chatter) must not interleave with the one-line
     // JSON result the driver parses from stdout.
@@ -136,8 +131,7 @@ object Bench {
     def colMin(reps: Seq[Seq[Double]], i: Int): Double = reps.map(_(i)).min
     // SPARK_GRAFT_ONLY=a,b,c: time just the named queries (local iteration
     // on one plan without paying the full 87-query sweep); unset = all.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).toSet).filter(_.nonEmpty)
+    val only = SparkEntry.selected()
     // pipeline_etl / pipeline_incremental / pipeline_mor are timed through
     // their *Timed variants below so the main entries measure the pipeline
     // work, not the scratch-dir teardown (the round-8 fix covered only
@@ -151,90 +145,57 @@ object Bench {
       .map { case (name, fn) =>
         name -> bestOf { fn(spark, sfDir).count(); () }
       }
-    val etlSplit = if (only.exists(!_("pipeline_etl"))) Seq.empty else {
-      val reps = guardedReps("pipeline_etl") {
-        val (df, r, c) = graft.queries.PipelineBench.pipelineEtlTimed(spark, sfDir)
-        df.count()
-        Seq(r, c)
-      }
-      if (reps.isEmpty) Seq("pipeline_etl" -> -1.0)
-      else Seq("pipeline_etl" -> colMin(reps, 0),
-        "pipeline_etl_cleanup" -> colMin(reps, 1))
+    // Split entries: one runner per gate entry counts its scenario frame
+    // and returns one wall per label; `headline` > 0 adds an entry named
+    // after the gate holding the sum of the first `headline` walls. The one-time index BUILDs are split from the
+    // steady-state PROBEs (the 100 TB steady state) and the base-layout
+    // publishes from the O(delta) publishes, so each stays trackable
+    // round-over-round; the pipelines' scratch-dir teardown is its own
+    // *_cleanup entry. pipeline_mor's delta is the O(delta) upsert-segment
+    // publish, directly comparable against pipeline_incremental_delta's
+    // copy-on-write rewrite.
+    final case class Split(gate: String, labels: Seq[String],
+                           headline: Int = 0)(
+        val run: (SparkSession, String) => Seq[Double])
+    def walls2(t: (DataFrame, Double, Double)) = {
+      t._1.count(); Seq(t._2, t._3)
     }
-    // sim_topk_ivf_index conflates the one-time index BUILD with the
-    // steady-state PROBE; report them as separate entries too, so the probe
-    // path (the 100 TB steady state) is trackable round-over-round.
-    val ivfSplit = if (only.exists(!_("sim_topk_ivf_index"))) Seq.empty else {
+    def walls3(t: (DataFrame, Double, Double, Double)) = {
+      t._1.count(); Seq(t._2, t._3, t._4)
+    }
+    val splits = Seq(
+      Split("pipeline_etl", Seq("pipeline_etl", "pipeline_etl_cleanup"))(
+        (s, d) => walls2(PipelineBench.pipelineEtlTimed(s, d))),
+      Split("sim_topk_ivf_index", Seq("sim_topk_ivf_index_build",
+        "sim_topk_ivf_index_probe"))(
+        (s, d) => walls2(TrainingData.simTopkIvfIndexTimed(s, d))),
+      Split("dedup_index_novel", Seq("dedup_index_novel_build",
+        "dedup_index_novel_probe"))(
+        (s, d) => walls2(TrainingData.dedupIndexNovelTimed(s, d))),
+      Split("decontam_index", Seq("decontam_index_build",
+        "decontam_index_probe"))(
+        (s, d) => walls2(TrainingData.decontamIndexTimed(s, d))),
+      Split("pipeline_incremental", Seq("pipeline_incremental_base",
+        "pipeline_incremental_delta", "pipeline_incremental_cleanup"),
+        headline = 2)(
+        (s, d) => walls3(PipelineBench.pipelineIncrementalTimedFull(s, d))),
+      Split("pipeline_mor", Seq("pipeline_mor_base", "pipeline_mor_delta",
+        "pipeline_mor_cleanup"), headline = 2)(
+        (s, d) => walls3(PipelineBench.pipelineMorTimedFull(s, d))))
+    val splitEntries = splits.filter(sp => only.forall(_(sp.gate))).map { sp =>
+      val reps = guardedReps(sp.gate)(sp.run(spark, sfDir))
       // a consistently failing split must SURFACE (stderr + -1 sentinel),
-      // not silently vanish from the JSON like an --only filter would
-      val reps = guardedReps("sim_topk_ivf_index") {
-        val (df, b, p) = graft.queries.TrainingData.simTopkIvfIndexTimed(spark, sfDir)
-        df.count()
-        Seq(b, p)
+      // not silently vanish from the JSON like an --only filter would:
+      // on the gate's own entry when the split has one, else on every label
+      val ownsGate = sp.headline > 0 || sp.labels.contains(sp.gate)
+      if (reps.isEmpty)
+        (if (ownsGate) Seq(sp.gate) else sp.labels).map(_ -> -1.0)
+      else {
+        val walls = sp.labels.indices.map(colMin(reps, _))
+        (if (sp.headline > 0) Seq(sp.gate -> walls.take(sp.headline).sum)
+         else Nil) ++ sp.labels.zip(walls)
       }
-      if (reps.isEmpty) Seq("sim_topk_ivf_index_build" -> -1.0,
-        "sim_topk_ivf_index_probe" -> -1.0)
-      else Seq("sim_topk_ivf_index_build" -> colMin(reps, 0),
-        "sim_topk_ivf_index_probe" -> colMin(reps, 1))
-    }
-    // same split for the persisted MinHash dedup index: the one-time
-    // corpus build amortizes over probe batches, so probe regressions must
-    // be visible on their own
-    val mhSplit = if (only.exists(!_("dedup_index_novel"))) Seq.empty else {
-      val reps = guardedReps("dedup_index_novel") {
-        val (df, b, p) = graft.queries.TrainingData.dedupIndexNovelTimed(spark, sfDir)
-        df.count()
-        Seq(b, p)
-      }
-      if (reps.isEmpty) Seq("dedup_index_novel_build" -> -1.0,
-        "dedup_index_novel_probe" -> -1.0)
-      else Seq("dedup_index_novel_build" -> colMin(reps, 0),
-        "dedup_index_novel_probe" -> colMin(reps, 1))
-    }
-    // same split for the persisted contamination index: eval-gram
-    // evidence builds once, the probe is the per-release steady state
-    val ctSplit = if (only.exists(!_("decontam_index"))) Seq.empty else {
-      val reps = guardedReps("decontam_index") {
-        val (df, b, p) = graft.queries.TrainingData.decontamIndexTimed(spark, sfDir)
-        df.count()
-        Seq(b, p)
-      }
-      if (reps.isEmpty) Seq("decontam_index_build" -> -1.0,
-        "decontam_index_probe" -> -1.0)
-      else Seq("decontam_index_build" -> colMin(reps, 0),
-        "decontam_index_probe" -> colMin(reps, 1))
-    }
-    // pipeline_incremental likewise conflates base-layout publish with the
-    // O(delta) steady state; split entries keep the delta path trackable
-    val incSplit = if (only.exists(!_("pipeline_incremental"))) Seq.empty else {
-      val reps = guardedReps("pipeline_incremental") {
-        val (df, b, d, c) = graft.queries.PipelineBench
-          .pipelineIncrementalTimedFull(spark, sfDir)
-        df.count()
-        Seq(b, d, c)
-      }
-      if (reps.isEmpty) Seq("pipeline_incremental" -> -1.0)
-      // headline = base + delta (the pipeline work), teardown separate
-      else Seq(
-        "pipeline_incremental" -> (colMin(reps, 0) + colMin(reps, 1)),
-        "pipeline_incremental_base" -> colMin(reps, 0),
-        "pipeline_incremental_delta" -> colMin(reps, 1),
-        "pipeline_incremental_cleanup" -> colMin(reps, 2))
-    }
-    // pipeline_mor's split: the O(delta) upsert-segment publish, directly
-    // comparable against pipeline_incremental_delta's copy-on-write rewrite
-    val morSplit = if (only.exists(!_("pipeline_mor"))) Seq.empty else {
-      val reps = guardedReps("pipeline_mor") {
-        val (df, b, d, c) = graft.queries.PipelineBench.pipelineMorTimedFull(spark, sfDir)
-        df.count()
-        Seq(b, d, c)
-      }
-      if (reps.isEmpty) Seq("pipeline_mor" -> -1.0)
-      else Seq("pipeline_mor" -> (colMin(reps, 0) + colMin(reps, 1)),
-        "pipeline_mor_base" -> colMin(reps, 0),
-        "pipeline_mor_delta" -> colMin(reps, 1),
-        "pipeline_mor_cleanup" -> colMin(reps, 2))
-    }
+    }.flatten
     // the dup-cluster rollups (dup_clusters / dup_cluster_sizes) share one
     // memoized label frame (DirMemo), so their entries report rollup cost
     // only; this entry times the label propagation itself FRESH each rep,
@@ -246,7 +207,7 @@ object Bench {
         Seq.empty
       else
       Seq("dup_cluster_labels" -> bestOf {
-        graft.queries.TrainingData.dupClusterLabelsFresh(spark, sfDir).count()
+        TrainingData.dupClusterLabelsFresh(spark, sfDir).count()
         ()
       })
     // 3 decimals keeps the single JSON line compact enough that all 84+
@@ -254,16 +215,14 @@ object Bench {
     // the line length for sub-millisecond precision the bench doesn't have)
     def fmt(v: Double): String = // ROOT locale: '.' decimal point always
       "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val all = results ++ etlSplit ++ ivfSplit ++ mhSplit ++ ctSplit ++ incSplit ++
-      morSplit ++ labelsSplit
+    val all = results ++ splitEntries ++ labelsSplit
     val qs = all.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     // total covers the declared queries (the three pipelines via their
     // splits' main entries); the auxiliary
     // *_cleanup/_build/_probe/_base/_delta/dup_cluster_labels entries are
     // diagnostics, not additional queries
-    val mains = results ++
-      (etlSplit ++ incSplit ++ morSplit).filter(e => timedSeparately(e._1))
+    val mains = results ++ splitEntries.filter(e => timedSeparately(e._1))
     val total = mains.filter(_._2 >= 0).map(_._2).sum
     val failed = mains.count(_._2 < 0)
     // corpus size in the result line: round-over-round comparisons must be

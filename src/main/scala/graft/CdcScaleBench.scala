@@ -1,7 +1,7 @@
 package graft
 
-import graft.core.{ColumnSpec, SourceConfig}
-import org.apache.spark.sql.SparkSession
+import graft.core.{ColumnSpec, GraftSession, SourceConfig}
+import graft.tools.Gauge
 import org.apache.spark.sql.functions._
 
 /** CDC-read scale rehearsal: measure [[graft.store.TableStore
@@ -33,14 +33,7 @@ object CdcScaleBench {
     val work = args(0)
     val rows = args.lift(1).map(_.toLong).getOrElse(3000000L)
     val deltaKeys = args.lift(2).map(_.toInt).getOrElse(30)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
     val wh = s"$work/wh"
     val p = new org.apache.hadoop.fs.Path(wh)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
@@ -79,46 +72,23 @@ object CdcScaleBench {
     store.mergeInPlace("cdc", delta, source, new java.sql.Timestamp(2000L))
     val deltaSec = (System.nanoTime() - tDelta0) / 1e9
 
-    // rows, not bytes: `recordsRead` is incremented by the scan itself
-    // and is exact, while `bytesRead` relies on FileSystem.Statistics,
-    // which the parquet vectored-IO read path bypasses on local FS — it
-    // captures footers and cache reads only (measured: a 128 MB column
-    // scan reported 0.04 MB). Input rows measure the pruning claim
-    // directly: the pruned feed may only read the changed buckets' rows.
-    val rowsRead = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          Option(te.taskMetrics)
-            .foreach(m => rowsRead.addAndGet(m.inputMetrics.recordsRead))
-          ()
-        }
-      })
-    def measured[T](f: => T): (T, Double, Double) = {
-      val r0 = rowsRead.get(); val t0 = System.nanoTime()
-      val r = f
-      val wall = (System.nanoTime() - t0) / 1e9
-      // listener-bus delivery is async (private API to drain it) — settle
-      // briefly before reading the gauge; telemetry-grade, like the
-      // StreamScaleBench axis, which is all the ratio claim needs
-      Thread.sleep(500)
-      (r, wall, (rowsRead.get() - r0) / 1e3)
-    }
+    // input rows measure the pruning claim directly: the pruned feed may
+    // only read the changed buckets' rows
+    val gauge = new Gauge(spark)
 
     // O(1) metadata answer
-    val (changed, metaSec, _) = measured {
+    val (changed, metaSec, _) = gauge.measured {
       store.snapshotChangedBuckets("cdc", "t0").get
     }
     // the pruned CDC feed
-    val (feed, cdcSec, cdcKrows) = measured {
+    val (feed, cdcSec, cdcKrows) = gauge.measured {
       store.snapshotDelta("cdc", "t0").get
         .groupBy("change").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
     }
     // the naive full two-sided diff (what a consumer without the
     // ownership maps pays): both states whole, same join + hash compare
-    val (naive, naiveSec, naiveKrows) = measured {
+    val (naive, naiveSec, naiveKrows) = gauge.measured {
       val o = store.readSnapshot("cdc", "t0").get
         .select(col("id"), col("etl_row_hash").as("_o"))
       val n = store.readIfExists("cdc").get
@@ -144,7 +114,7 @@ object CdcScaleBench {
     store.mergeInPlace("cdc",
       staged(bigKeys.select(col("id"), payload(col("id"), "upd2").as("v"))),
       source, new java.sql.Timestamp(3000L))
-    val (big, bigSec, bigKrows) = measured {
+    val (big, bigSec, bigKrows) = gauge.measured {
       store.snapshotDelta("cdc", "t1").get
         .groupBy("change").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -161,7 +131,7 @@ object CdcScaleBench {
     store.snapshot("cdc", "t2")
     val delKeys = spark.range(deltaKeys.toLong)
       .select((col("id") * (rows / deltaKeys) + 2L).as("id"))
-    val (deleted, delSec, delKrows) = measured {
+    val (deleted, delSec, delKrows) = gauge.measured {
       store.deleteRows("cdc", delKeys, Seq("id"))
     }
     val delChanged = store.snapshotChangedBuckets("cdc", "t2").get.size

@@ -21,6 +21,17 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q11NationRevenue(spark, "/root/testdata/sf0.001")
 
+  /** The entry names `SPARK_GRAFT_ONLY=a,b,c` restricts a Bench or Verify
+    * run to, or None (every entry) when it is unset or names nothing:
+    * blank names are dropped, so `""` or `" , "` can never select an
+    * empty set and make the run vacuous.
+    */
+  def selected(env: collection.Map[String, String] = sys.env)
+      : Option[Set[String]] =
+    env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+      .filter(_.nonEmpty)
+
   /** One entry per implemented operator from SURVEY.md §2 plus the
     * training-data-pipeline operators (dedup / similarity / text analysis /
     * multimodal).

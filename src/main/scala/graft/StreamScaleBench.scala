@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
+import graft.tools.Gauge
 import org.apache.spark.sql.functions._
 
 /** Streaming-release scale rehearsal: drain a (synthetic, see
@@ -36,15 +37,7 @@ object StreamScaleBench {
     val src = args(0)
     val work = args(1)
     val nBatches = args.lift(2).map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
     val feed = s"$work/feed"
     val wh = s"$work/wh"
     val cp = s"$work/cp"
@@ -71,69 +64,17 @@ object StreamScaleBench {
     // can hide an O(corpus) read term behind fixed per-epoch overhead at
     // small corpus sizes — the rows axis exposes it directly (the r13
     // card-delta full-corpus scan would have shown as per-epoch input
-    // rows growing with the accumulated corpus). Rows, not bytes:
-    // `inputMetrics.recordsRead` is incremented by the scan itself and is
-    // exact, while `bytesRead` relies on FileSystem.Statistics, which the
-    // parquet vectored-IO read path bypasses on local FS — it captures
-    // footers and cache reads only (measured: a 128 MB column scan
-    // reported 0.04 MB). Listener-bus delivery is async, so a boundary
-    // task can land in the neighbor epoch — telemetry-grade, which is
-    // all the growth-shape check needs.
-    val rowsRead = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          Option(te.taskMetrics)
-            .foreach(m => rowsRead.addAndGet(m.inputMetrics.recordsRead))
-          ()
-        }
-      })
-    // GRAFT_STREAMSCALE_JOBS=1: per-job input-row lines on stderr for
-    // attribution forensics (the [[graft.tools.ReleaseCost]] instrument)
-    if (sys.env.contains("GRAFT_STREAMSCALE_JOBS")) {
-      val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-      val jobRows = new java.util.concurrent.ConcurrentHashMap[Int,
-        java.util.concurrent.atomic.AtomicLong]()
-      val jobDesc = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            js.stageIds.foreach(s => stageToJob.put(s, js.jobId))
-            jobDesc.put(js.jobId, Option(js.properties)
-              .flatMap(p => Option(p.getProperty("spark.job.description"))
-                .orElse(Option(p.getProperty("callSite.short"))))
-              .getOrElse("?"))
-            ()
-          }
-          override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val j = stageToJob.getOrDefault(te.stageId, -1)
-            if (j >= 0) Option(te.taskMetrics).foreach { m =>
-              jobRows.computeIfAbsent(j,
-                _ => new java.util.concurrent.atomic.AtomicLong())
-                .addAndGet(m.inputMetrics.recordsRead)
-            }
-            ()
-          }
-          override def onJobEnd(
-              je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val r = Option(jobRows.get(je.jobId)).map(_.get()).getOrElse(0L)
-            if (r > 10000)
-              System.err.println(s"[job ${je.jobId}] rows=$r " +
-                s"site=${jobDesc.getOrDefault(je.jobId, "?")}")
-            ()
-          }
-        })
-    }
+    // rows growing with the accumulated corpus). Listener-bus delivery is
+    // async, so a boundary task can land in the neighbor epoch —
+    // telemetry-grade, which is all the growth-shape check needs.
+    val gauge = new Gauge(spark)
     val walls = scala.collection.mutable.ArrayBuffer[(Long, Double, Long)]()
     val lastRows = new java.util.concurrent.atomic.AtomicLong()
     val t0 = System.nanoTime()
     graft.streaming.StreamingPipeline.corpusReleaseStream(
       spark, store, feed, wh, None, cp,
       onEpoch = (id, w) => walls.synchronized {
-        val now = rowsRead.get()
+        val now = gauge.rows()
         walls += ((id, w, now - lastRows.getAndSet(now)))
         ()
       })
@@ -142,11 +83,11 @@ object StreamScaleBench {
     // replay drain: nothing new behind the checkpoint — bounded catch-up
     // run with zero epochs
     val tr = System.nanoTime()
-    val replayRows0 = rowsRead.get()
+    val replayRows0 = gauge.rows()
     graft.streaming.StreamingPipeline.corpusReleaseStream(
       spark, store, feed, wh, None, cp).awaitTermination()
     val replay = (System.nanoTime() - tr) / 1e9
-    val replayKrows = (rowsRead.get() - replayRows0) / 1e3
+    val replayKrows = (gauge.rows() - replayRows0) / 1e3
     val corpusRows = store.readIfExists("corpus_docs").map(_.count())
       .getOrElse(0L)
 
@@ -196,12 +137,12 @@ object StreamScaleBench {
       dir.listFiles.foreach(_.delete()); dir.delete()
     }
     val steady = scala.collection.mutable.ArrayBuffer[(Long, Double, Long)]()
-    lastRows.set(rowsRead.get()) // the fold's reads are not epoch reads
+    lastRows.set(gauge.rows()) // the fold's reads are not epoch reads
     val tS = System.nanoTime()
     graft.streaming.StreamingPipeline.corpusReleaseStream(
       spark, store, feed, wh, None, cp,
       onEpoch = (id, w) => steady.synchronized {
-        val now = rowsRead.get()
+        val now = gauge.rows()
         steady += ((id, w, now - lastRows.getAndSet(now)))
         ()
       }).awaitTermination()

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Deterministic N× replication of an sf dir — the scale-rehearsal input
@@ -41,15 +41,7 @@ object SynthScale {
     val src = args(0); val out = args(1)
     val mult = args.lift(2).map(_.toInt).getOrElse(10)
     require(mult >= 1 && mult <= 702, "mult must be in [1, 702]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
     val lower = "abcdefghijklmnopqrstuvwxyz"
     val upper = lower.toUpperCase
     def shifted(s: String, i: Int) = s.drop(i) + s.take(i)

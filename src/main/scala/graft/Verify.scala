@@ -1,28 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.getOrCreate()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=a,b,c: dump + oracle just the named queries (local
     // iteration on a new operator; the driver never sets it)
-    // .filter(_.nonEmpty) (as in Bench): an empty-but-set variable means
-    // "all queries" — Some(Set("")) would silently filter out every query
-    // and write an empty dump + empty oracle_sql.json (a vacuous pass)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").filter(_.nonEmpty)
-      .map(_.split(',').map(_.trim).toSet)
+    val only = SparkEntry.selected()
     def keep(name: String): Boolean = only.forall(_(name))
     SparkEntry.queries.filter(e => keep(e._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

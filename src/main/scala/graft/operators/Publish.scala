@@ -30,19 +30,10 @@ import org.apache.spark.sql.types.TimestampType
   */
 object Publish {
 
-  /** `release()` uncaches the merge's internal cached join. Callers must
-    * use it (not `merged.unpersist()`): `merged` is a projection OVER the
-    * cached plan, and Dataset.unpersist only drops a cache entry whose plan
-    * equals the dataset's own — unpersisting the projection is a no-op and
-    * leaks one cached copy of the target per merge.
-    */
-  final case class MergeResult(merged: DataFrame, inserts: Long, updates: Long,
-                               release: () => Unit = () => ())
-
   /** Pre-merge insert/update counts, the reference's standalone A4 semantics
     * (publish/base.py:40-74): inserts = staged - matched;
     * updates = matched with differing hash. Kept for API parity and tests;
-    * [[merge]] derives the same numbers from its single join.
+    * [[mergePlan]] derives the same numbers from its single join.
     */
   def counts(stage: DataFrame, target: DataFrame, grain: Seq[String]): (Long, Long) = {
     val stagedTotal = stage.count()
@@ -56,23 +47,10 @@ object Publish {
     (stagedTotal - matched, updates)
   }
 
-  def merge(stage: DataFrame, target: DataFrame, source: SourceConfig,
-            now: java.sql.Timestamp): MergeResult = {
-    val tagged = taggedMerge(stage, target, source, now).cache()
-
-    val cnt = tagged.agg(
-      count(when(col("_action") === "insert", 1)).as("inserts"),
-      count(when(col("_action") === "update", 1)).as("updates")).head()
-
-    val merged = tagged.drop("_action")
-    MergeResult(merged, cnt.getLong(0), cnt.getLong(1),
-      release = () => { tagged.unpersist(); () })
-  }
-
   /** The merged relation with an `_action` tag column, uncached. Exposed
     * within the engine so callers that only AGGREGATE the merge result
     * (bench/verify queries) can fold the insert/update counts into their
-    * own single pass instead of paying [[merge]]'s eager count action.
+    * own single pass.
     */
   private[graft] def taggedMerge(stage: DataFrame, target: DataFrame,
                           source: SourceConfig,

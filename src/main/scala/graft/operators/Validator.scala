@@ -12,8 +12,9 @@ import org.apache.spark.sql.types._
   *
   * `release()` uncaches that plan. Callers must use it (not
   * `all.unpersist()`): `all` is a projection of the per-file constants
-  * OVER the cached rows, and unpersisting a projection is a no-op (the
-  * same trap as [[Publish.MergeResult]]).
+  * OVER the cached rows, and Dataset.unpersist only drops a cache entry
+  * whose plan equals the dataset's own — unpersisting the projection is a
+  * no-op.
   */
 final case class ValidationResult(
     all: DataFrame,

@@ -109,7 +109,8 @@ object Relational {
         round(col("errors").cast(DoubleType) / col("total"), 6))
   }
 
-  /** q5: MERGE upsert (J1) through the engine's real [[Publish.merge]]:
+  /** q5: MERGE upsert (J1) through the engine's real merge relation
+    * ([[Publish.taggedMerge]], the frame [[Publish.mergePlan]] writes):
     * target = orders with key % 3 != 0; stage = orders with key % 2 = 0 and
     * +1 price when key % 4 = 0. Exercises matched-and-changed (update),
     * matched-same-hash (no-op), not-matched (insert), and target-only
@@ -142,8 +143,6 @@ object Relational {
     // ONE pass over the engine's tagged merge relation (the same frame
     // Publish.mergePlan writes): final count, action counts, and the price
     // sum fold into a single aggregation over a single full-outer join.
-    // Publish.merge would run the join twice — an eager count action plus
-    // the caller's aggregation — and hold a cache between them.
     Publish.taggedMerge(stage, target, source, new java.sql.Timestamp(0L))
       .agg(
         count(lit(1)).as("final_count"),

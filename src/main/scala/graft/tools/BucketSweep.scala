@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Bucket-count sweep over the release loop's two touched-bucket read
@@ -29,34 +29,8 @@ object BucketSweep {
     val arms = args.lift(0).getOrElse("64,256,1024")
       .split(',').map(_.trim.toInt).toSeq
     val batchDocs = args.lift(1).map(_.toInt).getOrElse(100)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val rowsRead = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          Option(te.taskMetrics)
-            .foreach(m => rowsRead.addAndGet(m.inputMetrics.recordsRead))
-          ()
-        }
-      })
-    def measured[T](f: => T): (T, Double, Double) = {
-      Thread.sleep(300)
-      val r0 = rowsRead.get()
-      val t0 = System.nanoTime()
-      val r = f
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // listener-bus settle, telemetry-grade
-      (r, (rowsRead.get() - r0) / 1e3, wall)
-    }
+    val spark = GraftSession.getOrCreate()
+    val gauge = new Gauge(spark)
 
     val cs = graft.run.DemoSources.CorpusRelease
     // the release loop's stage shape: model columns + V4 hash + lineage
@@ -94,12 +68,12 @@ object BucketSweep {
       val touched = planned.map(_._2.size).getOrElse(-1)
       val existing = store.readIfExists(cs.tableName)
         .map(_.select("doc_id", "text", "lang", "source", "n_tokens"))
-      val (_, oldsliceKrows, oldsliceSec) = measured {
+      val (_, oldsliceSec, oldsliceKrows) = gauge.measured {
         graft.run.CorpusOps
           .cardOldSlice(store, cs.tableName, planned, existing, batch)
           .foreach(_.count())
       }
-      val (_, mergeKrows, mergeSec) = measured {
+      val (_, mergeSec, mergeKrows) = gauge.measured {
         store.mergeInPlace(cs.tableName, batch, cs,
           new java.sql.Timestamp(1L), planned, stageRows = None)
       }

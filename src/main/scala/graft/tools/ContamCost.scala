@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Per-round input-ROW attribution for the contamination gate as its
@@ -42,38 +42,8 @@ object ContamCost {
     val accrete = args.lift(2).map(_.toInt).getOrElse(5000)
     val probeN = args.lift(3).map(_.toInt).getOrElse(1000)
     val evalDocs = args.lift(4).map(_.toInt).getOrElse(200)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val rowsRead = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          Option(te.taskMetrics)
-            .foreach(m => rowsRead.addAndGet(m.inputMetrics.recordsRead))
-          ()
-        }
-      })
-    // serial process: wait out the async listener bus until the gauge
-    // stops moving, then attribute the delta to the measured block
-    def measured[T](f: => T): (T, Double) = {
-      Thread.sleep(300)
-      val r0 = rowsRead.get()
-      val r = f
-      var prev = -1L; var v = rowsRead.get(); var waited = 0
-      while (v != prev && waited < 5000) {
-        Thread.sleep(150); waited += 150; prev = v; v = rowsRead.get()
-      }
-      (r, (v - r0) / 1e3)
-    }
+    val spark = GraftSession.getOrCreate()
+    val gauge = new Gauge(spark)
 
     val CI = graft.operators.ContamIndex
     val docs = spark.read.parquet(s"$src/documents.parquet")
@@ -102,10 +72,11 @@ object ContamCost {
           concat(col("text"), lit(s" round$r "),
             col("doc_id").cast("string")).as("text"))
         .localCheckpoint()
-      val (_, recKrows) = measured { CI.recordTrainDf(offered, idx) }
-      var gated = 0L
-      val (_, gateKrows) = measured {
-        gated = CI.decontaminate(spark, probe, idx).count()
+      val (_, _, recKrows) = gauge.measured {
+        CI.recordTrainDf(offered, idx)
+      }
+      val (gated, _, gateKrows) = gauge.measured {
+        CI.decontaminate(spark, probe, idx).count()
       }
       // steady-state maintenance between rounds, unmeasured (the fold is
       // amortized; its trigger count is reported)

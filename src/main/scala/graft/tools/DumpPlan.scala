@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Write a declared query's physical plan (`explain("formatted")`) to a
@@ -16,14 +16,7 @@ object DumpPlan {
     val name = args(0)
     val dir = args(1)
     val out = args(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.VectorFunctions.register(spark)
     val df = graft.queries.TrainingData.planOnly.withValue(true) {

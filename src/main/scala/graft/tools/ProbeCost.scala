@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Rows-axis cost of ONE bulk [[graft.operators.MinhashIndex.novelDocs]]
@@ -39,16 +39,10 @@ object ProbeCost {
     val idxDir = args(0)
     val src = args(1)
     val nDocs = args.lift(2).map(_.toInt).getOrElse(15000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
     // GRAFT_NO_RUNTIME_FILTERS=1: mechanism-isolation arm — Spark's own
     // runtime (bloom/semi-join) filter injection off, so the probe's
     // reads show what the STATIC pushed literals alone buy
+    val b0 = GraftSession.builder()
     val spark = (if (sys.env.contains("GRAFT_NO_RUNTIME_FILTERS"))
         b0.config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
           .config(
@@ -56,55 +50,7 @@ object ProbeCost {
             "false")
       else b0).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    val rowsRead = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          Option(te.taskMetrics)
-            .foreach(m => rowsRead.addAndGet(m.inputMetrics.recordsRead))
-          ()
-        }
-      })
-    // GRAFT_PROBECOST_JOBS=1: per-job input-row lines on stderr
-    // (the [[ReleaseCost]] forensics block)
-    if (sys.env.contains("GRAFT_PROBECOST_JOBS")) {
-      val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-      val jobRows = new java.util.concurrent.ConcurrentHashMap[Int,
-        java.util.concurrent.atomic.AtomicLong]()
-      val jobDesc = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            js.stageIds.foreach(s => stageToJob.put(s, js.jobId))
-            jobDesc.put(js.jobId, Option(js.properties)
-              .flatMap(p => Option(p.getProperty("spark.job.description"))
-                .orElse(Option(p.getProperty("callSite.short"))))
-              .getOrElse("?"))
-            ()
-          }
-          override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val j = stageToJob.getOrDefault(te.stageId, -1)
-            if (j >= 0) Option(te.taskMetrics).foreach { m =>
-              jobRows.computeIfAbsent(j,
-                _ => new java.util.concurrent.atomic.AtomicLong())
-                .addAndGet(m.inputMetrics.recordsRead)
-            }
-            ()
-          }
-          override def onJobEnd(
-              je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val r = Option(jobRows.get(je.jobId)).map(_.get()).getOrElse(0L)
-            if (r >= 0)
-              System.err.println(s"[job ${je.jobId}] rows=$r " +
-                s"site=${jobDesc.getOrDefault(je.jobId, "?")}")
-            ()
-          }
-        })
-    }
+    val gauge = new Gauge(spark)
 
     val lower = "abcdefghijklmnopqrstuvwxyz"
     val upper = lower.toUpperCase
@@ -137,17 +83,9 @@ object ProbeCost {
     val postingsRows = spark.read.parquet(postingsDir).count()
     val hashesRows = spark.read.parquet(graft.operators.MinhashIndex
       .genHashesDir(spark, idxDir, postingsDir)).count()
-    Thread.sleep(500)
-    val r0 = rowsRead.get()
-    val t0 = System.nanoTime()
-    val novel = graft.operators.MinhashIndex
-      .novelDocs(spark, batch, idxDir).count()
-    val wall = (System.nanoTime() - t0) / 1e9
-    var prev = -1L; var v = rowsRead.get(); var waited = 0
-    while (v != prev && waited < 5000) {
-      Thread.sleep(150); waited += 150; prev = v; v = rowsRead.get()
+    val (novel, wall, probeKrows) = gauge.measured {
+      graft.operators.MinhashIndex.novelDocs(spark, batch, idxDir).count()
     }
-    val probeKrows = (v - r0) / 1e3
     // EXACT distinct band count: the corpus's internal near-dup families
     // collapse bands far below docs x 8 (measured 49.4k for 15k docs of
     // sf0.1 replicas), and WHICH side of the single-In cap the batch

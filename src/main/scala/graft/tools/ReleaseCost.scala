@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Per-stage input-ROW attribution for ONE steady-state corpus release —
@@ -32,32 +32,8 @@ object ReleaseCost {
     val wh = args(0)
     val src = args(1)
     val batchDocs = args.lift(2).map(_.toInt).getOrElse(2000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val rowsRead = new java.util.concurrent.atomic.AtomicLong()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          Option(te.taskMetrics)
-            .foreach(m => rowsRead.addAndGet(m.inputMetrics.recordsRead))
-          ()
-        }
-      })
-    def measured[T](f: => T): (T, Double) = {
-      val r0 = rowsRead.get()
-      val r = f
-      Thread.sleep(500) // listener-bus settle, telemetry-grade
-      (r, (rowsRead.get() - r0) / 1e3)
-    }
+    val spark = GraftSession.getOrCreate()
+    val gauge = new Gauge(spark)
 
     // scratch copy so the release never mutates the measured warehouse
     val scratch = java.nio.file.Files
@@ -112,10 +88,9 @@ object ReleaseCost {
         spark.read.parquet(h.toString).count()
       else 0L
     }.getOrElse(0L)
-    Thread.sleep(500)
 
     // stage 1: the dedup-index probe alone
-    val (novel, probeKrows) = measured {
+    val (novel, _, probeKrows) = gauge.measured {
       graft.operators.MinhashIndex
         .novelDocs(spark, batch.select("doc_id", "text"), idxDir).count()
     }
@@ -138,24 +113,23 @@ object ReleaseCost {
       .withColumn("source_filename", lit("releasecost"))
       .withColumn("file_load_log_id", lit(0L))
       .localCheckpoint()
-    Thread.sleep(500)
     // stage 2: the card delta's old-slice (the CURRENT rows the stage's
     // doc_ids touch — bucket-pruned, but a uniform batch touches all)
     val planned = store.plannedBuckets(cs.tableName, cs.grain, stage)
     val existing = store.readIfExists(cs.tableName)
-    val (oldSliceRows, oldsliceKrows) = measured {
+    val (oldSliceRows, _, oldsliceKrows) = gauge.measured {
       graft.run.CorpusOps.cardOldSlice(store, cs.tableName, planned,
         existing, stage).map(_.count()).getOrElse(0L)
     }
     // stage 3: the bucketed COW merge of the stage
-    val (counts, mergeKrows) = measured {
+    val (counts, _, mergeKrows) = gauge.measured {
       store.withTableLock(cs.tableName) {
         store.mergeInPlace(cs.tableName, stage, cs,
           new java.sql.Timestamp(1000L), planned, stageRows = None)
       }
     }
     // stage 4: the index append of the admitted docs
-    val (_, appendKrows) = measured {
+    val (_, _, appendKrows) = gauge.measured {
       graft.operators.MinhashIndex.append(
         kept.select("doc_id", "text"), idxDir)
     }
@@ -167,46 +141,7 @@ object ReleaseCost {
     org.apache.hadoop.fs.FileUtil.copy(srcPath.getFileSystem(conf), srcPath,
       dst2.getFileSystem(conf), dst2, false, conf)
     val store2 = new graft.store.TableStore(spark, dst2.toString)
-    Thread.sleep(500)
-    // GRAFT_RELEASECOST_JOBS=1: per-job input-row lines on stderr for
-    // attribution forensics (jobId, rows, first line of the call site)
-    if (sys.env.contains("GRAFT_RELEASECOST_JOBS")) {
-      val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-      val jobRows = new java.util.concurrent.ConcurrentHashMap[Int,
-        java.util.concurrent.atomic.AtomicLong]()
-      val jobDesc = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            js.stageIds.foreach(s => stageToJob.put(s, js.jobId))
-            jobDesc.put(js.jobId, Option(js.properties)
-              .flatMap(p => Option(p.getProperty("spark.job.description"))
-                .orElse(Option(p.getProperty("callSite.short"))))
-              .getOrElse("?"))
-            ()
-          }
-          override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val j = stageToJob.getOrDefault(te.stageId, -1)
-            if (j >= 0) Option(te.taskMetrics).foreach { m =>
-              jobRows.computeIfAbsent(j,
-                _ => new java.util.concurrent.atomic.AtomicLong())
-                .addAndGet(m.inputMetrics.recordsRead)
-            }
-            ()
-          }
-          override def onJobEnd(
-              je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val r = Option(jobRows.get(je.jobId)).map(_.get()).getOrElse(0L)
-            if (r > 10000)
-              System.err.println(s"[job ${je.jobId}] rows=$r " +
-                s"site=${jobDesc.getOrDefault(je.jobId, "?")}")
-            ()
-          }
-        })
-    }
-    val ((ins2, upd2, _), releaseKrows) = measured {
+    val ((ins2, upd2, _), _, releaseKrows) = gauge.measured {
       graft.run.CorpusOps.release(spark, store2, dst2.toString, batch,
         "releasecost", None)
     }

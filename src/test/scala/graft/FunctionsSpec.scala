@@ -259,12 +259,14 @@ class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withColumn("etl_created_at", lit(null).cast(TimestampType))
       .withColumn("etl_updated_at", lit(null).cast(TimestampType))
     val now = new java.sql.Timestamp(0L)
-    val m1 = Publish.merge(stage, target, source, now)
-    assert(m1.inserts == 2 && m1.updates == 1) // 1,3 insert; 2 updated
+    // the counts are observed by the action that runs the plan: read them
+    // only after it
+    val m1 = Publish.mergePlan(stage, target, source, now)
     assert(m1.merged.count() == 4)
-    val m2 = Publish.merge(stage, m1.merged, source, now)
-    assert(m2.inserts == 0 && m2.updates == 0) // hash no-op fixpoint
+    assert(m1.counts() == ((2L, 1L))) // 1,3 insert; 2 updated
+    val m2 = Publish.mergePlan(stage, m1.merged, source, now)
     assert(m2.merged.count() == 4)
+    assert(m2.counts() == ((0L, 0L))) // hash no-op fixpoint
   }
 
   test("all-pairs cosine: blocked build side matches single-block result") {

@@ -1,0 +1,53 @@
+package graft
+
+import graft.tools.Gauge
+import java.nio.file.{Files, Path, Paths}
+import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+
+/** Contracts of the measurement harness shared by Bench, Verify and the
+  * tools: the `SPARK_GRAFT_ONLY` entry filter, the one session factory,
+  * and the input-rows gauge.
+  */
+class HarnessSpec extends AnyFunSuite {
+  private def spark = TestSpark.spark
+
+  test("SPARK_GRAFT_ONLY: unset or blank selects every entry") {
+    assert(SparkEntry.selected(Map.empty) === None)
+    assert(SparkEntry.selected(Map("SPARK_GRAFT_ONLY" -> "")) === None)
+    assert(SparkEntry.selected(Map("SPARK_GRAFT_ONLY" -> " , ")) === None)
+    assert(SparkEntry.selected(Map("SPARK_GRAFT_ONLY" -> "a, b")) ===
+      Some(Set("a", "b")))
+  }
+
+  test("only GraftSession calls SparkSession.builder() in main code") {
+    val main = Paths.get(sys.props("user.dir"), "src", "main", "scala")
+    assert(Files.isDirectory(main), s"no main source tree at $main")
+    val sources = Files.walk(main).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val factory = main.resolve(Paths.get("graft", "core", "GraftSession.scala"))
+    assert(sources.contains(factory))
+    def callsBuilder(p: Path) =
+      Files.readString(p).contains("SparkSession.builder()")
+    val offenders = sources.filter(p => p != factory && callsBuilder(p))
+      .map(main.relativize(_).toString).sorted
+    assert(offenders.isEmpty,
+      s"build sessions through graft.core.GraftSession.builder(): $offenders")
+  }
+
+  test("Gauge.measured reports exactly the rows its block read") {
+    val dir = Files.createTempDirectory("graft_gauge").resolve("t").toString
+    spark.range(1000).coalesce(1).write.parquet(dir)
+    val gauge = new Gauge(spark)
+    val (n, wall, krows) = gauge.measured(spark.read.parquet(dir).count())
+    assert(n === 1000L)
+    assert(wall > 0.0)
+    assert(krows === 1.0)
+    // back to back: neither block's rows leak into the other (a range
+    // scan counts its generated rows as input records)
+    val (_, _, again) = gauge.measured(spark.read.parquet(dir).count())
+    val (_, _, ten) = gauge.measured(spark.range(10).count())
+    assert(again === 1.0)
+    assert(ten === 0.01)
+  }
+}
