@@ -57,7 +57,7 @@ object CdcScaleBench {
     val base = staged(spark.range(rows).select(col("id"),
       payload(col("id"), "base").as("v")))
     val tBase0 = System.nanoTime()
-    store.mergeInPlace("cdc", base, source, new java.sql.Timestamp(1000L))
+    store.publish("cdc", base, source, new java.sql.Timestamp(1000L))
     val baseSec = (System.nanoTime() - tBase0) / 1e9
     store.snapshot("cdc", "t0")
 
@@ -69,7 +69,7 @@ object CdcScaleBench {
         .unionByName(keys.select((col("id") + rows * 2).as("id"),
           payload(col("id"), "ins").as("v"))))
     val tDelta0 = System.nanoTime()
-    store.mergeInPlace("cdc", delta, source, new java.sql.Timestamp(2000L))
+    store.publish("cdc", delta, source, new java.sql.Timestamp(2000L))
     val deltaSec = (System.nanoTime() - tDelta0) / 1e9
 
     // input rows measure the pruning claim directly: the pruned feed may
@@ -111,7 +111,7 @@ object CdcScaleBench {
     val bigN = deltaKeys * 100
     val bigKeys = spark.range(bigN.toLong)
       .select((col("id") * (rows / bigN) + 1L).as("id"))
-    store.mergeInPlace("cdc",
+    store.publish("cdc",
       staged(bigKeys.select(col("id"), payload(col("id"), "upd2").as("v"))),
       source, new java.sql.Timestamp(3000L))
     val (big, bigSec, bigKrows) = gauge.measured {

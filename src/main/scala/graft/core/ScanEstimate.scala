@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** Effective scan-parallelism estimate for a file or directory WITHOUT
   * converting a plan to an RDD (`df.rdd.getNumPartitions` forces full plan
@@ -37,6 +38,32 @@ object ScanEstimate {
       }
     }
     math.max(1L, est)
+  }
+
+  /** `df`, the scan of `path`, spread over the session's parallelism when
+    * the file layout cannot spread it. A single-row-group parquet file
+    * scans as ONE task no matter the split config, and every narrow
+    * per-row stage behind it (validation, shingling, vector math) would run
+    * single-threaded. Fires only when [[effectiveTasks]] is at most half
+    * the parallelism; multi-split data keeps its native, shuffle-free
+    * layout, and an unreadable estimate leaves `df` untouched.
+    *
+    * With `keys` the fan-out hash-partitions on them: a round-robin
+    * repartition first sorts every row inside the single scan task (Spark
+    * sorts before a round-robin repartition so retries are deterministic),
+    * the hash needs no sort, and the output stays clustered by the keys.
+    * Rows sharing one key value land in one task. Without `keys` it is
+    * round-robin.
+    */
+  def fanOut(df: DataFrame, path: String, keys: Seq[Column] = Nil): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    val par = sc.defaultParallelism
+    val estTasks =
+      try effectiveTasks(sc.hadoopConfiguration, path)
+      catch { case _: java.io.IOException => par.toLong } // unknown: don't touch
+    if (estTasks * 2 > par) df
+    else if (keys.isEmpty) df.repartition(par)
+    else df.repartition(par, keys: _*)
   }
 
   /** Row-group count from the parquet footer; None when the footer cannot

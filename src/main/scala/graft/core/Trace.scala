@@ -81,6 +81,13 @@ object Trace {
     }
   }
 
+  /** One pipeline stage: `f` inside the span `name` with `attrs`, its
+    * Spark jobs described as `jobDesc` ([[span]] around [[withJobDesc]]).
+    */
+  def stage[T](spark: org.apache.spark.sql.SparkSession, name: String,
+               jobDesc: String, attrs: (String, Any)*)(f: => T): T =
+    span(name, attrs: _*)(withJobDesc(spark, jobDesc)(f))
+
   /** Run `f` with a Spark job description so every job it submits is
     * attributable in the UI and per-job listeners (the optimization
     * guide's "label your jobs"; Spark 4 no longer carries call sites in

@@ -31,20 +31,25 @@ import org.apache.spark.sql.types.TimestampType
 object Publish {
 
   /** Pre-merge insert/update counts, the reference's standalone A4 semantics
-    * (publish/base.py:40-74): inserts = staged - matched;
-    * updates = matched with differing hash. Kept for API parity and tests;
-    * [[mergePlan]] derives the same numbers from its single join.
+    * (publish/base.py:40-74): inserts = staged - matched; updates = matched
+    * with differing hash. One left join of the stage's keys onto the
+    * target's, matched null-safe (`<=>`, the merge's own rule) and
+    * aggregated in one pass, so the staged total needs no separate count
+    * job. `target` must be unique on `grain`. [[mergePlan]] derives the same
+    * numbers from its single join; the merge-on-read publish, which writes
+    * no join, counts here.
     */
   def counts(stage: DataFrame, target: DataFrame, grain: Seq[String]): (Long, Long) = {
-    val stagedTotal = stage.count()
+    val s = stage.select(grain.map(col) :+ col("etl_row_hash").as("_s_hash"): _*)
+      .alias("s")
     val t = target.select(grain.map(col) :+ col("etl_row_hash").as("_t_hash"): _*)
-    val joined = stage.select(grain.map(col) :+ col("etl_row_hash").as("_s_hash"): _*)
-      .join(t, grain, "inner")
-    val agg = joined.agg(
-      count(lit(1)).as("matched"),
+      .alias("t")
+    val cond = grain.map(g => col(s"s.$g") <=> col(s"t.$g")).reduce(_ && _)
+    val a = s.join(t, cond, "left").agg(
+      count(lit(1)).as("staged"),
+      count(col("_t_hash")).as("matched"),
       count(when(col("_s_hash") =!= col("_t_hash"), 1)).as("updates")).head()
-    val (matched, updates) = (agg.getLong(0), agg.getLong(1))
-    (stagedTotal - matched, updates)
+    (a.getLong(0) - a.getLong(1), a.getLong(2))
   }
 
   /** The merged relation with an `_action` tag column, uncached. Exposed

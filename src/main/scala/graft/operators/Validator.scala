@@ -55,6 +55,20 @@ object Validator {
   val IsValidCol = "is_valid"
   val RawRecordCol = "file_record_data"
 
+  /** Valid rows as the publish stage takes them: the validation columns
+    * and the file row number dropped.
+    */
+  def staged(valid: DataFrame): DataFrame =
+    valid.drop(ErrorsCol, IsValidCol, RawRecordCol, "file_row_number")
+
+  /** One DLQ record per invalid row: filename, row number, the raw record
+    * and the errors as a JSON array, followed by `extra`.
+    */
+  def dlqRecords(dlq: DataFrame, extra: Column*): DataFrame =
+    dlq.select(Seq(col("source_filename"), col("file_row_number"),
+      col(RawRecordCol), to_json(col(ErrorsCol)).as("validation_errors")) ++
+      extra: _*)
+
   private val NoErrors = array().cast(ArrayType(StructType(
     Seq("column_name", "column_value", "error_type", "error_message")
       .map(StructField(_, StringType)))))

@@ -514,7 +514,7 @@ object Relational {
     // rank passes (sample + bucketed window) from a single scan task
     // (2× ~1.6 s single-task stages in the r19 profile); the guard
     // no-ops on production multi-row-group data.
-    val o = TrainingData.fanOut(t(spark, dir, "orders"),
+    val o = graft.core.ScanEstimate.fanOut(t(spark, dir, "orders"),
       s"$dir/orders.parquet")
     // rank and total count in ONE pass: the count(*) cross join this
     // replaced was a second full scan of orders
@@ -779,7 +779,7 @@ object Relational {
     // task. Same guard as TrainingData.docs — only fires when the footer
     // row-group estimate is far under the core count; production
     // multi-row-group data keeps its native shuffle-free layout.
-    val tbl = TrainingData.fanOut(t(spark, dir, "orders"),
+    val tbl = graft.core.ScanEstimate.fanOut(t(spark, dir, "orders"),
       s"$dir/orders.parquet")
     val aggs = ProfileColumns.flatMap(c => Seq(
       count(col(c)).as(s"cnt_$c"),

@@ -20,36 +20,13 @@ import org.apache.spark.sql.types._
   */
 object TrainingData {
 
-  /** Fan a scan out to the session's parallelism when the file layout
-    * cannot: the bench corpora are single-row-group parquet files, which
-    * scan as ONE effective task no matter the split config (byte-range
-    * splits of a single row group all no-op except the one holding the
-    * group's midpoint) — and every narrow per-row stage (shingling,
-    * signatures, vector math, the expensive part of these queries) would run
-    * single-threaded behind it. Effective scan parallelism comes from
-    * [[graft.core.ScanEstimate]] (parquet footer row-group counts; never
-    * `df.rdd.getNumPartitions`, which forces a full plan conversion at
-    * build time). The repartition only fires when that estimate is far below
-    * the core count; production multi-row-group data keeps its native
-    * (shuffle-free) layout.
-    */
-  private[queries] def fanOut(df: DataFrame, path: String): DataFrame = {
-    val spark = df.sparkSession
-    val par = spark.sparkContext.defaultParallelism
-    val estTasks =
-      try graft.core.ScanEstimate.effectiveTasks(
-        spark.sparkContext.hadoopConfiguration, path)
-      catch { case _: java.io.IOException => par.toLong } // unknown: don't touch
-    if (estTasks * 2 <= par) df.repartition(par) else df
-  }
-
   private def docs(spark: SparkSession, dir: String): DataFrame = {
     val p = s"$dir/documents.parquet"
-    fanOut(spark.read.parquet(p), p)
+    graft.core.ScanEstimate.fanOut(spark.read.parquet(p), p)
   }
   private def embs(spark: SparkSession, dir: String): DataFrame = {
     val p = s"$dir/embeddings.parquet"
-    fanOut(spark.read.parquet(p), p)
+    graft.core.ScanEstimate.fanOut(spark.read.parquet(p), p)
   }
 
   // ---------------------------------------------------------------- dedup
@@ -3546,7 +3523,7 @@ object TrainingData {
     */
   def driftPsi(spark: SparkSession, dir: String): DataFrame = {
     val p = s"$dir/events.parquet"
-    val e = fanOut(spark.read.parquet(p), p)
+    val e = graft.core.ScanEstimate.fanOut(spark.read.parquet(p), p)
     val base = e.select(Relational.epochMicros(e, "ts").as("ts_us"),
       col("value")).cache()
     val mid = base.agg(min("ts_us").as("t0"), max("ts_us").as("t1"))
@@ -3601,7 +3578,7 @@ object TrainingData {
   private def driftRef(spark: SparkSession,
                        dir: String): (Long, Double, Double, Array[Long]) = {
     val p = s"$dir/events.parquet"
-    val e = fanOut(spark.read.parquet(p), p)
+    val e = graft.core.ScanEstimate.fanOut(spark.read.parquet(p), p)
     val base = e.select(Relational.epochMicros(e, "ts").as("ts_us"),
       col("value"))
     val mid = base.agg(min("ts_us").as("t0"), max("ts_us").as("t1"))

@@ -191,11 +191,8 @@ object CorpusOps {
     // instead of trusting a stale index
     graft.operators.MinhashIndex.invalidate(spark, idxDir)
     graft.core.Chaos.point("corpus.after-invalidate")
-    val counts = phase(spark, "bucketed merge") {
-      store.withTableLock(cs.tableName) {
-        store.mergeInPlace(cs.tableName, stage, cs, now, planned,
-          stageRows = None)
-      }
+    val (ins, upd) = phase(spark, "bucketed merge") {
+      store.publish(cs.tableName, stage, cs, now, planned)
     }
     // crash seam between the merge commit and every piece of index/card
     // maintenance below: the absent commit marker routes the next release
@@ -235,7 +232,6 @@ object CorpusOps {
       return (0L, 0L, 0L)
     }
     val released = releasedOpt.get
-    val (ins, upd) = counts.getOrElse((0L, 0L))
     // datasheet maintenance — skipped entirely when the release changed
     // nothing (replayed/fully-deduped micro-batches). Steady state folds
     // the pre-computed O(batch) delta into the persisted accumulators and
@@ -417,7 +413,7 @@ object CorpusOps {
     // release through the full index/card self-heal rebuild
     require(store.canDeleteRows(cs.tableName),
       s"forget: ${cs.tableName} is not bucket-manifested or carries " +
-        "live segments — publish through a release (mergeInPlace) and " +
+        "live segments — publish through a release and " +
         "fold segments first; nothing was modified")
     val keys = docIds.select("doc_id").distinct().localCheckpoint()
     val planned = store.plannedBuckets(cs.tableName, cs.grain, keys)

@@ -180,27 +180,17 @@ object Main {
           // so a typo can never silently select streaming mode.
           val wh = req("warehouse")
           if (opts("stream") == "merge") {
-            // with --jdbc the micro-batch MERGE goes through the
-            // epoch-guarded exactly-once path (database txn = commit unit);
-            // otherwise the parquet store's bucketed O(delta) merge
-            targetSink match {
-              case Some(jdbc) =>
-                graft.streaming.StreamingPipeline.jdbcMergeStream(
-                  spark, DemoSources.Sales, jdbc, drop,
-                  checkpointDir = s"$wh/stream_merge_checkpoint")
-                  .awaitTermination()
-                val n = jdbc.readIfExists(DemoSources.Sales.tableName)
-                  .map(_.count()).getOrElse(0L)
-                println(s"stream-merge: target_rows=$n")
-              case None =>
-                graft.streaming.StreamingPipeline.dropFolderMergeStream(
-                  spark, DemoSources.Sales, store, drop,
-                  checkpointDir = s"$wh/stream_merge_checkpoint")
-                  .awaitTermination()
-                val n = store.readIfExists(DemoSources.Sales.tableName)
-                  .map(_.count()).getOrElse(0L)
-                println(s"stream-merge: target_rows=$n")
-            }
+            // --jdbc targets the database (each micro-batch's MERGE
+            // commits with its epoch record: exactly-once); otherwise the
+            // parquet store's bucketed O(delta) merge
+            val sink = targetSink.getOrElse(store)
+            graft.streaming.StreamingPipeline.dropFolderMergeStream(
+              spark, DemoSources.Sales, sink, drop,
+              checkpointDir = s"$wh/stream_merge_checkpoint")
+              .awaitTermination()
+            val n = sink.readIfExists(DemoSources.Sales.tableName)
+              .map(_.count()).getOrElse(0L)
+            println(s"stream-merge: target_rows=$n")
           } else {
             graft.streaming.StreamingPipeline.dropFolderStream(
               spark, DemoSources.Sales, drop,

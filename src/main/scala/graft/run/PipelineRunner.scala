@@ -1,10 +1,10 @@
 package graft.run
 
 import graft.core._
-import graft.operators.{Audit, Publish, Validator}
-import graft.sources.{ExcelReader, Reader, ReaderFactory}
-import graft.store.{Schemas, TableStore}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import graft.operators.{Audit, Validator}
+import graft.sources.{ExcelReader, ReaderFactory}
+import graft.store.{Schemas, Sink, TableStore}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Outcome of processing one file (reference returns `(success, file,
@@ -40,12 +40,11 @@ final class PipelineRunner(
     files: FileOps,
     notifier: Notifier,
     /** Where published TARGETS live (K5 writer dispatch: the reference picks
-      * a DB writer per deployment, write/factory.py:13-43). Run metadata —
-      * log, DLQ, filename sidecars — always stays in the parquet store.
+      * a DB writer per deployment, write/factory.py:13-43): `store` itself
+      * or a relational sink. Run metadata — log, DLQ, filename sidecars —
+      * always stays in the parquet store.
       */
-    targetSink: graft.store.Sink = null) {
-
-  private val sink: graft.store.Sink = Option(targetSink).getOrElse(store)
+    sink: Sink) {
 
   def run(path: String, source: SourceConfig): FileResult = {
     val fileName = FileUtils.bareName(path)
@@ -61,7 +60,7 @@ final class PipelineRunner(
     // finally deletes unconditionally, runner.py:270.)
     var safeToDelete = false
     try {
-      graft.core.Trace.withJobDesc(spark, s"pipeline:dup-probe $fileName") {
+      Trace.withJobDesc(spark, s"pipeline:dup-probe $fileName") {
         checkDuplicate(fileName, source)
       }
       files.archive(path) // copy-before-processing (runner.py:142-149)
@@ -116,9 +115,8 @@ final class PipelineRunner(
                         logId: Long): FileResult = {
     val sidecar = s"${source.tableName}__filenames"
     val reader = ReaderFactory.readerFor(fileName)
-    val raw = graft.core.Trace.span("read", "file" -> fileName)(
-      graft.core.Trace.withJobDesc(spark, s"pipeline:read $fileName")(
-        reader.read(spark, path, source)))
+    val raw = Trace.stage(spark, "read", s"pipeline:read $fileName",
+      "file" -> fileName)(reader.read(spark, path, source))
     log(logId, fileName, Some(source.tableName), "read", success = Some(true))
 
     // Validate the UNNUMBERED frame first, without the DLQ JSON payload —
@@ -126,11 +124,23 @@ final class PipelineRunner(
     // numbering pass nor a to_json over every row. Files with errors
     // re-validate over the numbered frame with payloads enabled so DLQ
     // records carry real file_row_numbers and file_record_data.
-    val vr = graft.core.Trace.span("validate", "file" -> fileName)(
-      graft.core.Trace.withJobDesc(spark, s"pipeline:validate $fileName")(
-        Validator.validate(fannedOut(raw.df, path, source), source, fileName, logId,
-          excelDates = reader.isInstanceOf[ExcelReader],
-          withRawRecord = false)))
+    //
+    // A single-file drop often scans as one task; the fan-out hash-partitions
+    // on the grain's file columns, so the cached validation is clustered by
+    // grain and the grain audit aggregates with no Exchange when the grain
+    // columns pass through uncast. Rows sharing one grain value land in one
+    // validate task, including every row whose grain is null or will not
+    // cast (those go to the DLQ): under a nonzero error threshold such a
+    // skewed file still loads, with one task doing that share of the work.
+    // A file carrying none of the grain columns fans out round-robin.
+    val grainKeys = source.columns.filter(c => source.grain.contains(c.name))
+      .map(_.fileAlias).filter(raw.df.columns.toSet).map(col)
+    val vr = Trace.stage(spark, "validate", s"pipeline:validate $fileName",
+        "file" -> fileName) {
+      Validator.validate(ScanEstimate.fanOut(raw.df, path, grainKeys), source,
+        fileName, logId, excelDates = reader.isInstanceOf[ExcelReader],
+        withRawRecord = false)
+    }
     var vrNumbered: Option[graft.operators.ValidationResult] = None
     try {
       // WRITE: DLQ rows always persist (even below-threshold successes keep
@@ -143,18 +153,14 @@ final class PipelineRunner(
           n
         }
         val now = new java.sql.Timestamp(System.currentTimeMillis())
-        val dlqRows = vrN.dlq.select(
-          col("source_filename"),
-          col("file_row_number"),
-          col(Validator.RawRecordCol).as("file_record_data"),
-          to_json(col(Validator.ErrorsCol)).as("validation_errors"),
+        val dlqRows = Validator.dlqRecords(vrN.dlq,
           col("file_load_log_id"),
           lit(source.tableName).as("target_table_name"),
           lit(now).as("failed_at"))
         // locked: a concurrent DLQ-cleanup overwrite snapshots-and-deletes
         // segments — an unlocked append could land in that window and be
         // dropped
-        graft.core.Trace.withJobDesc(spark, s"pipeline:dlq-write $fileName") {
+        Trace.withJobDesc(spark, s"pipeline:dlq-write $fileName") {
           store.withTableLock(Schemas.DlqTable) {
             store.append(Schemas.DlqTable, dlqRows)
           }
@@ -167,79 +173,46 @@ final class PipelineRunner(
           read = vr.totalCount, failed = vr.errorCount)
       }
 
-      val stage = vr.valid.drop(Validator.ErrorsCol, Validator.IsValidCol,
-        Validator.RawRecordCol, "file_row_number")
+      val stage = Validator.staged(vr.valid)
 
       // AUDIT (A1/A2 grain, A3 custom) on staged rows — independent jobs,
       // submitted concurrently so the scheduler overlaps them
-      graft.core.Trace.span("audit", "file" -> fileName) {
-        graft.core.Trace.withJobDesc(spark, s"pipeline:audit $fileName") {
-          Audit.runAll(spark, stage, source, fileName)
-        }
+      Trace.stage(spark, "audit", s"pipeline:audit $fileName", "file" -> fileName) {
+        Audit.runAll(spark, stage, source, fileName)
       }
       log(logId, fileName, Some(source.tableName), "audit", success = Some(true))
 
-      // PUBLISH: merge upsert + atomic swap. The read->merge->swap sequence
-      // holds the per-table lock: two files publishing into the same target
-      // concurrently would otherwise both read the old version and the last
-      // swap would drop the other's rows. Different targets publish in
-      // parallel; the reference got this serialization for free from the
-      // database's MERGE.
-      val (mInserts, mUpdates) =
-          graft.core.Trace.span("publish", "file" -> fileName,
-            "table" -> source.tableName) {
-          graft.core.Trace.withJobDesc(spark,
-            s"pipeline:publish ${source.tableName}") {
+      // PUBLISH: the sink's merge publish, then the filename sidecar append.
+      // The sink serializes publishes to one target itself; the table lock
+      // held here (re-entrant) spans the sidecar backfill, the publish and
+      // the sidecar append, so the sidecar and the target move together
+      // for a concurrent file into the same target. Different targets
+      // publish in parallel.
+      val (mInserts, mUpdates) = Trace.stage(spark, "publish",
+          s"pipeline:publish ${source.tableName}",
+          "file" -> fileName, "table" -> source.tableName) {
         store.withTableLock(source.tableName) {
-        val now = new java.sql.Timestamp(System.currentTimeMillis())
-        // one-time sidecar backfill for tables populated before the sidecar
-        // existed — otherwise filenames loaded pre-sidecar would stop being
-        // detected as duplicates once the sidecar appears
-        if (!store.exists(sidecar)) sink.readIfExists(source.tableName).foreach { t =>
-          store.append(sidecar, t.select(col("source_filename")).distinct()
-            .withColumn("file_load_log_id", lit(-1L))
-            .withColumn("published_at", lit(now)))
-        }
-        // record the filename in the probe sidecar (atomic segment append)
-        def appendSidecar(): Unit = {
+          val now = new java.sql.Timestamp(System.currentTimeMillis())
+          // one-time sidecar backfill for tables populated before the sidecar
+          // existed — otherwise filenames loaded pre-sidecar would stop being
+          // detected as duplicates once the sidecar appears
+          if (!store.exists(sidecar)) sink.readIfExists(source.tableName).foreach { t =>
+            store.append(sidecar, t.select(col("source_filename")).distinct()
+              .withColumn("file_load_log_id", lit(-1L))
+              .withColumn("published_at", lit(now)))
+          }
+          val counts = sink.publish(source.tableName, stage, source, now,
+            stageRows = Some(vr.validCount))
+          // record the filename in the probe sidecar (atomic segment append)
           val sp = spark
           import sp.implicits._
-          graft.core.Trace.withJobDesc(spark,
-            s"pipeline:sidecar-append ${source.tableName}") {
+          Trace.withJobDesc(spark, s"pipeline:sidecar-append ${source.tableName}") {
             store.append(sidecar, Seq((fileName, logId, now))
               .toDF("source_filename", "file_load_log_id", "published_at"))
           }
+          counts
         }
-        // backends with a native MERGE (JDBC) publish O(delta) in place;
-        // otherwise read -> Spark-side merge -> overwrite, with counts
-        // observed during the overwrite's own write job (no separate cached
-        // count pass) and first publishes skipping the merge join entirely
-        val cnt = sink.mergeInPlace(source.tableName, stage, source, now,
-            stageRows = Some(vr.validCount)) match {
-          case Some(c) =>
-            appendSidecar()
-            c
-          case None =>
-            val existing = sink.readIfExists(source.tableName)
-            val target = existing.getOrElse(Publish.emptyTarget(spark, source))
-            val m = Publish.mergePlan(stage, target, source, now,
-              targetKnownEmpty = existing.isEmpty)
-            sink.overwrite(source.tableName, m.merged, source.targetPartitionBy)
-            // post-write housekeeping: the vacuum (a driver-side FS
-            // metadata walk dropping superseded versions) and the sidecar
-            // append (one small Spark write job) are INDEPENDENT — overlap
-            // them (guide §2.6) instead of serializing two latency-bound
-            // steps. Crash domains unmerged: each keeps its own failure,
-            // both are awaited, and neither orders against the other —
-            // the version swap inside overwrite() remains the commit
-            // point, exactly as before.
-            graft.operators.Audit.inParallel(spark)(
-              sink.vacuum(source.tableName),
-              appendSidecar())
-            m.counts()
-        }
-        cnt
-      } } }
+      }
       log(logId, fileName, Some(source.tableName), "publish", success = Some(true),
         inserts = mInserts, updates = mUpdates)
       // post-publish housekeeping, overlapped (guide §2.6): the layout
@@ -250,9 +223,8 @@ final class PipelineRunner(
       // neither orders against the other — only their combined completion
       // gates the file's result. Failure domains stay separate: each arm
       // keeps its own lock scope and rethrows independently.
-      graft.operators.Audit.inParallel(spark)(
-        graft.core.Trace.withJobDesc(spark,
-          s"pipeline:rebucket-gauge ${source.tableName}") {
+      Audit.inParallel(spark)(
+        Trace.withJobDesc(spark, s"pipeline:rebucket-gauge ${source.tableName}") {
           sink.maybeRebucket(source.tableName, source.grain).foreach(n =>
             System.err.println(
               s"${source.tableName}: rebucketed outgrown layout to $n buckets"))
@@ -264,7 +236,7 @@ final class PipelineRunner(
         // probe is one scan with the filename filter pushed to the parquet
         // row groups, where the unconditional rewrite paid an O(DLQ) write
         // on EVERY publish regardless.
-        graft.core.Trace.withJobDesc(spark, s"pipeline:dlq-cleanup $fileName") {
+        Trace.withJobDesc(spark, s"pipeline:dlq-cleanup $fileName") {
           store.withTableLock(Schemas.DlqTable) {
             store.readIfExists(Schemas.DlqTable).foreach { dlq =>
               val stale = col("source_filename") === fileName &&
@@ -285,45 +257,6 @@ final class PipelineRunner(
     } finally {
       vr.release()
       vrNumbered.foreach(_.release())
-    }
-  }
-
-  /** `df`, the read of the file at `path`, fanned out for validation.
-    *
-    * A single-file drop often scans as one task (one parquet row group /
-    * one CSV split): fan the validation out across the cluster when the
-    * scan itself can't. Only fires on under-partitioned reads — large
-    * multi-split files keep their native layout, no gratuitous shuffle.
-    * Parallelism comes from graft.core.ScanEstimate (parquet footer
-    * row-group counts; gzip = 1 task; otherwise one task per 128 MB) —
-    * `df.rdd.getNumPartitions` forced a full logical→RDD plan conversion
-    * per file on this hot path.
-    *
-    * The fan-out hash-partitions on the grain's file columns. A round-robin
-    * repartition would first sort every row inside the single scan task
-    * (Spark sorts before a round-robin repartition so retries are
-    * deterministic); the hash needs no sort, and it leaves the cached
-    * validation clustered by grain, so the grain audit aggregates with no
-    * Exchange when the grain columns pass through uncast. Rows sharing one
-    * grain value land in one validate task, and that includes every row
-    * whose grain is null or will not cast (those rows go to the DLQ). Only
-    * duplicates among the valid rows fail the grain audit, so under a
-    * nonzero validation-error threshold such a skewed file still loads,
-    * just with one task doing that share of the work. A file carrying none
-    * of the grain columns falls back to round-robin.
-    */
-  private def fannedOut(df: DataFrame, path: String, source: SourceConfig): DataFrame = {
-    val par = spark.sparkContext.defaultParallelism
-    val estTasks =
-      try graft.core.ScanEstimate.effectiveTasks(
-        spark.sparkContext.hadoopConfiguration, path)
-      catch { case _: java.io.IOException => par.toLong }
-    if (estTasks * 2 > par) df
-    else {
-      val present = df.columns.toSet
-      val keys = source.columns.filter(c => source.grain.contains(c.name))
-        .map(_.fileAlias).filter(present)
-      if (keys.isEmpty) df.repartition(par) else df.repartition(par, keys.map(col): _*)
     }
   }
 
@@ -355,7 +288,7 @@ final class PipelineRunner(
     val rows = logBuffer.get()
     if (rows.nonEmpty) {
       import scala.jdk.CollectionConverters._
-      graft.core.Trace.withJobDesc(spark, "pipeline:log-append") {
+      Trace.withJobDesc(spark, "pipeline:log-append") {
         store.append(Schemas.LogTable,
           spark.createDataFrame(rows.asJava, Schemas.LogSchema))
       }

@@ -45,7 +45,7 @@ final class Processor(
     onProgress: (Int, Int) => Unit = (_, _) => ()) {
 
   private val runner =
-    new PipelineRunner(spark, store, files, notifier, targetSink.orNull)
+    new PipelineRunner(spark, store, files, notifier, targetSink.getOrElse(store))
 
   /** Single-file entry, the test/library surface (reference
     * Processor.process_file, processor.py:62-87).

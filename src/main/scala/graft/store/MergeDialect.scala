@@ -1,6 +1,6 @@
 package graft.store
 
-/** Upsert-statement dialects for [[JdbcSink.mergeInPlace]] (reference
+/** Upsert-statement dialects for [[JdbcSink.publish]] (reference
   * write/factory.py:13-43 dispatches writers by driver name, and
   * publish/{postgresql,mysql,mssql,sqlite}.py each carry their database's
   * upsert flavor).

@@ -23,35 +23,28 @@ trait Sink {
   /** The current contents of the target, or None if never published. */
   def readIfExists(name: String): Option[DataFrame]
 
-  /** Replace the target's contents with `df` — atomically or as close as the
-    * backend allows. `partitionBy` is a storage layout hint; backends without
-    * physical partitioning ignore it.
-    */
-  def overwrite(name: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit
-
-  /** Reclaim superseded storage; no-op unless the backend versions. */
-  def vacuum(name: String): Unit = ()
-
-  /** Keyed in-place merge publish, for backends with a NATIVE merge: land
-    * the validated delta, merge O(delta) rows inside the backend, return
-    * Some((inserts, updates)). None means "not supported here" — the caller
-    * falls back to read → Spark-side merge → overwrite.
-    *
-    * This is the reference's actual publish mechanism (per-dialect MERGE,
-    * publish/postgresql.py:24-43 etc.) and the 100 TB shape for relational
-    * targets: per-file work scales with the FILE, not the accumulated
-    * target — the overwrite fallback rewrites the whole table every
-    * publish, which is fine for the versioned parquet store (O(1) pointer
-    * swap, rewrite is the contract) but quadratic-over-time for a database.
+  /** Merge-publish `stage` into the target `name` and return (inserts,
+    * updates). Every sink always publishes: the layout decisions (bucketed
+    * copy-on-write, merge-on-read, hive-partitioned rewrite, in-database
+    * MERGE) live behind this one call, as the reference's per-dialect MERGE
+    * does (publish/base.py:76-97, chosen by write/factory.py:13-43).
+    * Semantics are [[graft.operators.Publish]]'s hash-guarded upsert:
+    * matched-and-changed rows update, hash-equal rows are untouched, new
+    * grains insert, unmatched target rows are kept. The sink serializes
+    * publishes to one target itself.
     *
     * `stageRows`, when the caller has already counted `stage` (the
     * pipeline's validator has), is that exact row count: a sink that sizes
     * a new table's layout from the delta uses it instead of counting again.
-    * Sinks with no such sizing ignore it.
+    *
+    * `epoch` is a stream's micro-batch id. Where the backend supports it,
+    * the publish is exactly-once per epoch: a replayed epoch is skipped and
+    * returns the counts it recorded ([[JdbcSink]]). Backends without an
+    * epoch record ignore it, because a replayed batch is a hash no-op.
     */
-  def mergeInPlace(name: String, stage: DataFrame, source: SourceConfig,
-                   now: java.sql.Timestamp,
-                   stageRows: Option[Long] = None): Option[(Long, Long)] = None
+  def publish(name: String, stage: DataFrame, source: SourceConfig,
+              now: java.sql.Timestamp, stageRows: Option[Long] = None,
+              epoch: Option[Long] = None): (Long, Long)
 
   /** Post-publish layout policy hook: sinks with a physically pinned
     * layout (the bucketed parquet store) re-size it when the table has
@@ -108,21 +101,10 @@ object JdbcSink {
   * JDBC option — each executor task inserts `batchSize`-row prepared-statement
   * batches in parallel).
   *
-  * Overwrite protocol — two phases, for two reasons:
-  *
-  *   1. `df`'s plan usually READS the table being replaced (the publish merge
-  *      joins new rows against the current target). A direct truncate + insert
-  *      would have the insert job scan the just-truncated table (the classic
-  *      JDBC self-overwrite trap), so the new contents are first landed in a
-  *      `<name>__swap` stage table while the target is still intact.
-  *   2. The swap itself (DELETE all + INSERT..SELECT from stage) runs in ONE
-  *      driver-side transaction, so readers never observe a half-replaced
-  *      table — the closest relational analogue of [[TableStore]]'s atomic
-  *      version-pointer rename.
-  *
-  * At scale the parallel phase (executors batch-inserting the stage table) is
-  * the data-volume work; the transactional swap is a single set-based
-  * INSERT..SELECT the database executes internally.
+  * [[publish]] always merges in the database: the delta lands in a stage
+  * table and one set-based upsert runs in a single transaction. With an
+  * `epoch` the upsert and an epoch record commit together
+  * ([[mergeExactlyOnce]]), so a replayed stream batch is skipped.
   */
 final class JdbcSink(
     spark: SparkSession,
@@ -179,11 +161,18 @@ final class JdbcSink(
     * executor-parallel; the MERGE is one set-based statement the database
     * runs against its own key index — per-file cost scales with the file,
     * never with the accumulated target.
+    *
+    * With `epoch = Some(batchId)` the upsert goes through
+    * [[mergeExactlyOnce]]'s epoch-guarded transaction.
     */
-  override def mergeInPlace(name: String, stage: DataFrame,
-                            source: SourceConfig, now: java.sql.Timestamp,
-                            stageRows: Option[Long]): Option[(Long, Long)] =
-    Some(mergeImpl(name, stage, source, now, epoch = None))
+  override def publish(name: String, stage: DataFrame, source: SourceConfig,
+                       now: java.sql.Timestamp, stageRows: Option[Long],
+                       epoch: Option[Long]): (Long, Long) = epoch match {
+    case Some(batchId) =>
+      val (i, u, _) = mergeExactlyOnce(name, stage, source, now, batchId)
+      (i, u)
+    case None => mergeImpl(name, stage, source, now, epoch = None)
+  }
 
   /** Exactly-once variant for Structured Streaming `foreachBatch`: the
     * micro-batch MERGE and an epoch record (`<name>__epochs`, keyed by the
@@ -321,38 +310,5 @@ final class JdbcSink(
       try st.executeUpdate(s"DROP TABLE $delta") finally st.close()
     }
     counts
-  }
-
-  override def overwrite(name: String, df: DataFrame,
-                         partitionBy: Seq[String]): Unit = {
-    val stage = s"${name}__swap"
-    // Phase 1 (parallel, executors): land the new contents while the target
-    // is still readable by df's own plan.
-    df.write.mode(SaveMode.Overwrite)
-      .option("batchsize", batchSize.toString)
-      .jdbc(url, stage, connectionProperties)
-    // Phase 2 (transactional, driver): swap contents set-based.
-    val cols = df.schema.fieldNames.map(c => "\"" + c + "\"").mkString(", ")
-    withConnection { conn =>
-      conn.setAutoCommit(false)
-      val st = conn.createStatement()
-      try {
-        if (!exists(name)) {
-          // first publish: clone the stage's shape (Spark created it with
-          // dialect-mapped types), then fill inside the same transaction
-          st.executeUpdate(s"CREATE TABLE $name AS SELECT * FROM $stage WITH NO DATA")
-        } else {
-          st.executeUpdate(s"DELETE FROM $name")
-        }
-        st.executeUpdate(s"INSERT INTO $name ($cols) SELECT $cols FROM $stage")
-        conn.commit()
-      } catch {
-        case e: Throwable => conn.rollback(); throw e
-      } finally st.close()
-    }
-    withConnection { conn =>
-      val st = conn.createStatement()
-      try st.executeUpdate(s"DROP TABLE $stage") finally st.close()
-    }
   }
 }

@@ -4,7 +4,7 @@ import graft.core.SourceConfig
 import graft.operators.Publish
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit, max_by, md5, pmod, struct, to_json, when, xxhash64}
+import org.apache.spark.sql.functions.{col, lit, max_by, md5, pmod, struct, to_json, when, xxhash64}
 import org.apache.spark.sql.types.StructType
 
 import java.nio.charset.StandardCharsets
@@ -36,7 +36,7 @@ import java.util.concurrent.atomic.AtomicLong
   *
   * A naive versioned publish rewrites the WHOLE target per file — fatal at
   * 100 TB where each drop-file is a sliver of the accumulated table. The
-  * [[mergeInPlace]] path instead lays targets out in `publishBuckets`
+  * [[publish]] path instead lays targets out in `publishBuckets`
   * grain-hash bucket directories (`_bucket=K/`, K = pmod(xxhash64(grain),
   * N)) and each version carries a `_MANIFEST` file mapping every bucket to
   * the version directory that OWNS its current files. A publish:
@@ -54,7 +54,7 @@ import java.util.concurrent.atomic.AtomicLong
   *
   * Per-publish cost is O(delta + touched-bucket data), matching the
   * reference's in-database MERGE (src/pipeline/publish/base.py:76-97) and
-  * our own JDBC path ([[JdbcSink.mergeInPlace]]). Readers resolve the
+  * our own JDBC path ([[JdbcSink.publish]]). Readers resolve the
   * manifest and scan each bucket from its owning version; crash safety is
   * unchanged (nothing is visible until the pointer flips). [[vacuum]]
   * understands manifests: it keeps every referenced version and prunes
@@ -420,7 +420,7 @@ final class TableStore(spark: SparkSession, root: String,
     * or never merge-published). One O(df) distinct-collect bounded by the
     * bucket count. Computed ONCE per release and shared: the card-delta's
     * bucket-pruned old-slice read ([[readBuckets]]) and the merge's own
-    * touched-bucket probe ([[mergeInPlace]]'s `planned` hint) need the
+    * touched-bucket probe ([[publish]]'s `planned` hint) need the
     * same set, and each recomputation is a full pass over the stage.
     */
   def plannedBuckets(name: String, grain: Seq[String],
@@ -434,7 +434,7 @@ final class TableStore(spark: SparkSession, root: String,
     }
 
   /** Read ONLY the given buckets' files of a manifested table — the exact
-    * path-level pruning [[mergeInPlace]] performs for its touched-bucket
+    * path-level pruning [[publish]] performs for its touched-bucket
     * merge, exposed for readers that only need the rows a delta's grain
     * keys can reach (the release loop's card-delta old-slice: a doc_id
     * semi-join against the full table would scan EVERY bucket, because
@@ -468,7 +468,7 @@ final class TableStore(spark: SparkSession, root: String,
     * diff reports it as changed). Returns the deleted-row count.
     *
     * Contract: bucket-manifested tables only (publish through
-    * [[mergeInPlace]] first), with no live segments (fold first —
+    * [[publish]] first), with no live segments (fold first —
     * segments are not bucketed, so a pruned delete could miss rows in
     * them). Snapshots keep serving the PRE-delete state for their tags'
     * lives by design (they pin the old ownership): a legal-erasure
@@ -487,7 +487,7 @@ final class TableStore(spark: SparkSession, root: String,
                  grain: Seq[String]): Long = withTableLock(name) {
     val man = currentManifest(name).getOrElse(throw new IllegalStateException(
       s"deleteRows($name): only bucket-manifested tables take pruned " +
-        "deletes — publish through mergeInPlace first"))
+        "deletes — merge-publish the table first"))
     require(segments(name).isEmpty && upsertSegments(name).isEmpty,
       s"deleteRows($name): fold live segments first — segments are not " +
         "bucketed, so a pruned delete could miss rows in them")
@@ -559,8 +559,8 @@ final class TableStore(spark: SparkSession, root: String,
     * partition-pruned reads (date-ranged queries on a date-partitioned
     * target) skip directories entirely.
     */
-  override def overwrite(name: String, df: DataFrame,
-                         partitionBy: Seq[String]): Unit =
+  def overwrite(name: String, df: DataFrame,
+                partitionBy: Seq[String] = Nil): Unit =
     overwriteFolding(name, df, partitionBy, segments(name))
 
   /** [[overwrite]] with an EXPLICIT list of segments to fold away: the
@@ -580,7 +580,7 @@ final class TableStore(spark: SparkSession, root: String,
     writer.mode("overwrite").parquet(new Path(dir, version).toString)
     // the swing is a read-modify-write of the pointer's retired list —
     // unserialized, it could drop the names a concurrent LOCKED fold
-    // (mergeInPlace/deleteRows) just retired, making folded segments
+    // (publish/deleteRows) just retired, making folded segments
     // visible again (double count). withTableLock is re-entrant
     // (object monitor), so callers already holding it are fine.
     withTableLock(name) { swingAndRetire(name, version, priorSegs) }
@@ -639,32 +639,53 @@ final class TableStore(spark: SparkSession, root: String,
     }
   }
 
-  /** O(delta) bucketed copy-on-write merge publish — see the class doc.
-    *
-    * The caller (PipelineRunner's publish stage) holds [[withTableLock]];
-    * like [[JdbcSink.mergeInPlace]] this method does not re-acquire it.
-    * Targets with user-declared hive partitioning keep their layout and
-    * fall back to the full merge-overwrite path (None).
+  /** Merge publish — see the class doc. Takes the table lock itself
+    * ([[withTableLock]] is re-entrant, so a caller holding it across a
+    * wider sequence is fine). Targets with user-declared hive partitioning
+    * keep their layout: read, merge, rewrite the whole version, vacuum.
+    * Everything else takes the bucketed copy-on-write or merge-on-read
+    * path. `epoch` is ignored: a replayed batch is a hash no-op.
     */
-  override def mergeInPlace(name: String, stage: DataFrame,
-                            source: SourceConfig, now: java.sql.Timestamp,
-                            stageRows: Option[Long]): Option[(Long, Long)] =
-    mergeInPlace(name, stage, source, now, planned = None, stageRows)
+  override def publish(name: String, stage: DataFrame, source: SourceConfig,
+                       now: java.sql.Timestamp, stageRows: Option[Long],
+                       epoch: Option[Long]): (Long, Long) =
+    publishLocked(name, stage, source, now, planned = None, stageRows)
 
-  /** [[mergeInPlace]] with a pre-computed [[plannedBuckets]] hint: the
+  /** [[publish]] with a pre-computed [[plannedBuckets]] hint: the
     * caller already paid the stage's touched-bucket probe (to bucket-prune
     * another read of the same publish, e.g. the release loop's card-delta
     * old-slice) and this merge must not pay it twice. The hint is trusted
     * ONLY when its bucket sizing matches the manifest the merge resolves —
     * a concurrent rebucket between the probe and the merge would make the
     * ids meaningless, and a silently-wrong touched set LOSES rows.
-    * `stageRows`, when given, is `stage`'s exact row count.
     */
-  def mergeInPlace(name: String, stage: DataFrame, source: SourceConfig,
-                   now: java.sql.Timestamp,
-                   planned: Option[(Int, Set[Int])],
-                   stageRows: Option[Long]): Option[(Long, Long)] = {
-    if (source.targetPartitionBy.nonEmpty) return None
+  def publish(name: String, stage: DataFrame, source: SourceConfig,
+              now: java.sql.Timestamp,
+              planned: Option[(Int, Set[Int])]): (Long, Long) =
+    publishLocked(name, stage, source, now, planned, stageRows = None)
+
+  private def publishLocked(name: String, stage: DataFrame,
+                            source: SourceConfig, now: java.sql.Timestamp,
+                            planned: Option[(Int, Set[Int])],
+                            stageRows: Option[Long]): (Long, Long) =
+    withTableLock(name) {
+      if (source.targetPartitionBy.isEmpty)
+        bucketedPublish(name, stage, source, now, planned, stageRows)
+      else {
+        val existing = readIfExists(name)
+        val plan = Publish.mergePlan(stage,
+          existing.getOrElse(Publish.emptyTarget(spark, source)), source, now,
+          targetKnownEmpty = existing.isEmpty)
+        overwrite(name, plan.merged, source.targetPartitionBy)
+        vacuum(name)
+        plan.counts()
+      }
+    }
+
+  private def bucketedPublish(name: String, stage: DataFrame,
+                              source: SourceConfig, now: java.sql.Timestamp,
+                              planned: Option[(Int, Set[Int])],
+                              stageRows: Option[Long]): (Long, Long) = {
     val cur = currentVersion(name)
     val man = cur.flatMap(v => readManifest(name, v))
     val segs = segments(name)
@@ -676,7 +697,7 @@ final class TableStore(spark: SparkSession, root: String,
     // COW path below into a full rewrite). Legacy layouts and stray append
     // segments still take the COW path once to migrate.
     if (source.mergeOnRead && man.isDefined && segs.isEmpty)
-      return Some(morPublish(name, stage, source, now, man.get))
+      return morPublish(name, stage, source, now, man.get)
     val tableIsEmpty = cur.isEmpty && segs.isEmpty
     // Bucket count: manifest-pinned once chosen; a first publish sizes it
     // from the file (~RowsPerBucket rows each) so small tables don't pay
@@ -727,7 +748,7 @@ final class TableStore(spark: SparkSession, root: String,
       carried, segs)
     val c = plan.counts()
     bumpRowsGauge(name, c._1, emptyBefore = tableIsEmpty)
-    Some(c)
+    c
   }
 
   /** Merge-on-read publish: O(delta) segment commit + pre-merge counts.
@@ -735,11 +756,11 @@ final class TableStore(spark: SparkSession, root: String,
     * Counts come from a column-pruned scan — parquet reads ONLY the grain
     * and hash columns of the base buckets and segments (a sliver of a wide
     * table), reduced latest-wins to the current effective hash per grain,
-    * then left-joined (null-safe, like the COW merge's `<=>`) against the
-    * stage's keys. The delta itself lands as one tmp-write + atomic-rename
-    * segment; past [[morCompactSegments]] the segments fold back into the
-    * bucketed base (one full publish amortized over the threshold's
-    * O(delta) commits). Caller holds the table lock.
+    * then counted against the stage's keys by [[Publish.counts]]. The
+    * delta itself lands as one tmp-write + atomic-rename segment; past
+    * [[morCompactSegments]] the segments fold back into the bucketed base
+    * (one full publish amortized over the threshold's O(delta) commits).
+    * Caller holds the table lock.
     */
   private def morPublish(name: String, stage: DataFrame, source: SourceConfig,
                          now: java.sql.Timestamp,
@@ -756,17 +777,8 @@ final class TableStore(spark: SparkSession, root: String,
     }
     val curKv = (baseKv +: segKv).reduce(_ unionByName _)
       .groupBy(grain.map(col): _*)
-      .agg(max_by(col("etl_row_hash"), col("_gen")).as("_t_hash"))
-      .alias("t")
-    val s = stage
-      .select(grain.map(col) :+ col("etl_row_hash").as("_s_hash"): _*)
-      .alias("s")
-    val cond = grain.map(g => col(s"s.$g") <=> col(s"t.$g")).reduce(_ && _)
-    val a = s.join(curKv, cond, "left").agg(
-      count(lit(1)).as("staged"),
-      count(col("_t_hash")).as("matched"),
-      count(when(col("_s_hash") =!= col("_t_hash"), 1)).as("updates")).head()
-    val (staged, matched, updates) = (a.getLong(0), a.getLong(1), a.getLong(2))
+      .agg(max_by(col("etl_row_hash"), col("_gen")).as("etl_row_hash"))
+    val (inserts, updates) = Publish.counts(stage, curKv, grain)
 
     writeGrain(name, grain)
     // never reuse a name the retired list still carries (see append)
@@ -789,8 +801,8 @@ final class TableStore(spark: SparkSession, root: String,
         touchedCount = man.numBuckets, carried = Map.empty,
         foldSegs = upsertSegments(name).map(_._2))
     }
-    bumpRowsGauge(name, staged - matched, emptyBefore = false)
-    (staged - matched, updates)
+    bumpRowsGauge(name, inserts, emptyBefore = false)
+    (inserts, updates)
   }
 
   /** First-publish / rebucket sizing rule — see the `publishBuckets` doc. */
@@ -976,7 +988,7 @@ final class TableStore(spark: SparkSession, root: String,
   def compact(name: String, maxSegments: Int = 16): Boolean =
     withTableLock(name) {
       // Bucket-manifested targets never accumulate segments (publishes go
-      // through mergeInPlace) and an unpartitioned fold would destroy their
+      // through publish) and an unpartitioned fold would destroy their
       // layout — leave them to the publish path.
       if (currentManifest(name).isDefined) false
       else {
@@ -1462,7 +1474,7 @@ final class TableStore(spark: SparkSession, root: String,
     * exempt from bucket pruning, and nothing more — dropping the tag
     * returns the table to the ~1× bound.
     */
-  override def vacuum(name: String): Unit = {
+  def vacuum(name: String): Unit = {
     currentVersion(name).foreach { cur =>
       val man = readManifest(name, cur)
       val snaps = liveSnapshots(name)

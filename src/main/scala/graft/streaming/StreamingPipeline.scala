@@ -47,17 +47,6 @@ object StreamingPipeline {
       dropDir: String,
       outDir: String,
       checkpointDir: String): StreamingQuery = {
-    val allStrings = StructType(source.columns.map(c =>
-      StructField(c.fileAlias, StringType, nullable = true)))
-    val raw = spark.readStream
-      .option("header", "true")
-      .schema(allStrings)
-      .csv(dropDir)
-      .withColumn(Reader.RowNumCol, lit(-1L))
-    val validated = Validator.compile(raw, source,
-      fileName = "<stream>", logId = -1L)
-      .withColumn("source_filename", input_file_name())
-
     // The replay key is (runId, batchId), not batchId alone: batchId restarts
     // at 0 whenever the checkpoint is recreated, so a batchId-keyed overwrite
     // over a pre-existing outDir would silently clobber an earlier run's
@@ -66,7 +55,7 @@ object StreamingPipeline {
     // checkpoint ⇒ new runId ⇒ prior runs' output is never touched (the
     // cross-run duplicate is then visible and auditable, not silent loss).
     val runId = runIdFor(spark, checkpointDir)
-    validated.writeStream
+    validatedDropStream(spark, source, dropDir).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -89,10 +78,7 @@ object StreamingPipeline {
             .write.mode("append")
             .partitionBy("_run_id", "_batch_id")
             .parquet(s"$outDir/valid")
-          cached.filter(!col(Validator.IsValidCol))
-            .select(col("source_filename"), col("file_row_number"),
-              col(Validator.RawRecordCol).as("file_record_data"),
-              to_json(col(Validator.ErrorsCol)).as("validation_errors"))
+          Validator.dlqRecords(cached.filter(!col(Validator.IsValidCol)))
             .withColumn("_run_id", lit(runId))
             .withColumn("_batch_id", lit(batchId))
             .write.mode("append")
@@ -102,6 +88,23 @@ object StreamingPipeline {
         ()
       }
       .start()
+  }
+
+  /** `dropDir`'s CSV files as a stream, every row validated by the batch
+    * rule compiler (all-strings read, so a bad value is a DLQ row rather
+    * than a parse failure) and tagged with its file name.
+    */
+  private def validatedDropStream(spark: SparkSession, source: SourceConfig,
+                                  dropDir: String): DataFrame = {
+    val allStrings = StructType(source.columns.map(c =>
+      StructField(c.fileAlias, StringType, nullable = true)))
+    val raw = spark.readStream
+      .option("header", "true")
+      .schema(allStrings)
+      .csv(dropDir)
+      .withColumn(Reader.RowNumCol, lit(-1L))
+    Validator.compile(raw, source, fileName = "<stream>", logId = -1L)
+      .withColumn("source_filename", input_file_name())
   }
 
   /** Stable per-checkpoint run id: read `<checkpointDir>/_graft_run_id`, or
@@ -203,109 +206,42 @@ object StreamingPipeline {
   }
 
   /** Continuous drop-folder ingest with MERGE-publish: like
-    * [[dropFolderStream]], but each micro-batch's valid rows merge-upsert
-    * into a [[graft.store.TableStore]] target with the SAME hash-guarded
-    * semantics as the batch publish — matched-and-changed rows update,
-    * identical rows no-op, new grains insert. foreachBatch gives the
-    * exactly-once batchId + the table store's atomic version swap gives
-    * idempotent re-delivery (replaying a batch is a hash no-op).
+    * [[dropFolderStream]], but each micro-batch's valid rows merge-publish
+    * into `sink`'s target with the SAME hash-guarded semantics as the batch
+    * publish — matched-and-changed rows update, identical rows no-op, new
+    * grains insert.
+    *
+    * The micro-batch id is the publish epoch. foreachBatch alone is
+    * at-least-once: a crash between the sink commit and the checkpoint
+    * commit replays the batch. A [[graft.store.JdbcSink]] commits the MERGE
+    * and an epoch record in ONE database transaction and skips a replayed
+    * epoch, which makes the stream exactly-once without any idempotence
+    * assumption on timestamps; on the [[graft.store.TableStore]] a replayed
+    * batch is a hash no-op.
+    *
+    * Scale: per-batch work is O(batch) — the bucketed store's O(delta)
+    * merge, or an executor-parallel delta insert plus one set-based MERGE
+    * in the database — never a full-table rewrite per batch, except on a
+    * user-partitioned target.
     */
   def dropFolderMergeStream(
       spark: SparkSession,
       source: SourceConfig,
-      store: graft.store.TableStore,
+      sink: graft.store.Sink,
       dropDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val allStrings = StructType(source.columns.map(c =>
-      StructField(c.fileAlias, StringType, nullable = true)))
-    val raw = spark.readStream
-      .option("header", "true")
-      .schema(allStrings)
-      .csv(dropDir)
-      .withColumn(Reader.RowNumCol, lit(-1L))
-    val validated = Validator.compile(raw, source,
-      fileName = "<stream>", logId = -1L)
-      .withColumn("source_filename", input_file_name())
-
-    validated.writeStream
+      checkpointDir: String): StreamingQuery =
+    validatedDropStream(spark, source, dropDir).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val stage = batch.filter(col(Validator.IsValidCol))
-          .drop(Validator.ErrorsCol, Validator.IsValidCol,
-            Validator.RawRecordCol, "file_row_number")
-        if (!stage.isEmpty) {
-          store.withTableLock(source.tableName) {
-            val now = new java.sql.Timestamp(System.currentTimeMillis())
-            // O(delta) bucketed merge first — a micro-batch stream publishes
-            // FAR more often than the file pipeline, so a full-table rewrite
-            // per batch is quadratic over the stream's life. Falls back to
-            // the full merge-overwrite only for user-partitioned targets.
-            store.mergeInPlace(source.tableName, stage, source, now)
-              .getOrElse {
-                val existing = store.readIfExists(source.tableName)
-                val target = existing.getOrElse(graft.operators.Publish.emptyTarget(
-                  batch.sparkSession, source))
-                val mr = graft.operators.Publish.mergePlan(stage, target, source,
-                  now, targetKnownEmpty = existing.isEmpty)
-                store.overwrite(source.tableName, mr.merged, source.targetPartitionBy)
-                mr.counts()
-              }
-          }
-        }
+        val stage = Validator.staged(batch.filter(col(Validator.IsValidCol)))
+        if (!stage.isEmpty)
+          sink.publish(source.tableName, stage, source,
+            new java.sql.Timestamp(System.currentTimeMillis()),
+            epoch = Some(batchId))
         ()
       }
       .start()
-  }
-
-  /** Drop-folder ingest into a RELATIONAL target with end-to-end
-    * exactly-once semantics: the same compiled validation as
-    * [[dropFolderMergeStream]], but each micro-batch publishes through
-    * [[graft.store.JdbcSink.mergeExactlyOnce]] — the in-database MERGE and
-    * an epoch record keyed by the stream's batchId commit in ONE database
-    * transaction. foreachBatch alone is at-least-once (a crash between the
-    * database commit and the checkpoint commit replays the batch); the
-    * epoch guard detects the replay and skips it, which upgrades the sink
-    * to exactly-once without any idempotence assumption on timestamps or
-    * notification side effects.
-    *
-    * Scale: per-batch work is O(batch) executor-parallel delta insert plus
-    * one set-based MERGE the database runs against its key index — the
-    * same per-publish shape as the batch JDBC path, amortized over the
-    * stream's life with no dependence on accumulated target size.
-    */
-  def jdbcMergeStream(
-      spark: SparkSession,
-      source: SourceConfig,
-      jdbc: graft.store.JdbcSink,
-      dropDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val allStrings = StructType(source.columns.map(c =>
-      StructField(c.fileAlias, StringType, nullable = true)))
-    val raw = spark.readStream
-      .option("header", "true")
-      .schema(allStrings)
-      .csv(dropDir)
-      .withColumn(Reader.RowNumCol, lit(-1L))
-    val validated = Validator.compile(raw, source,
-      fileName = "<stream>", logId = -1L)
-      .withColumn("source_filename", input_file_name())
-
-    validated.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val stage = batch.filter(col(Validator.IsValidCol))
-          .drop(Validator.ErrorsCol, Validator.IsValidCol,
-            Validator.RawRecordCol, "file_row_number")
-        if (!stage.isEmpty) {
-          val now = new java.sql.Timestamp(System.currentTimeMillis())
-          jdbc.mergeExactlyOnce(source.tableName, stage, source, now, batchId)
-        }
-        ()
-      }
-      .start()
-  }
 
   /** Streaming ANN-index maintenance: every micro-batch of
     * `(vec_id: long, nv: array<double>)` unit vectors appends into a

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Bucket-count sweep over the release loop's two touched-bucket read
   * terms — the card-delta old slice ([[graft.run.CorpusOps
   * .cardOldSlice]]: bucket-pruned victim read) and the COW merge's
-  * touched-bucket read ([[graft.store.TableStore.mergeInPlace]]) — the
+  * touched-bucket read ([[graft.store.TableStore.publish]]) — the
   * ONLY steady-state release reads that are O(touched-buckets) rather
   * than O(batch). At the 20× drain's toy 64-bucket geometry a 1000-doc
   * batch touches every bucket, so these terms spanned the whole corpus
@@ -58,7 +58,7 @@ object BucketSweep {
       val store = new graft.store.TableStore(spark, scratch,
         publishBuckets = b)
       val t0 = new java.sql.Timestamp(0L)
-      store.mergeInPlace(cs.tableName, stageOf(spark.range(corpusRows)
+      store.publish(cs.tableName, stageOf(spark.range(corpusRows)
         .toDF("id")), cs, t0)
       // all-novel fixed-size batch, materialized OUTSIDE the gauges
       val batch = stageOf(spark.range(corpusRows,
@@ -74,8 +74,8 @@ object BucketSweep {
           .foreach(_.count())
       }
       val (_, mergeSec, mergeKrows) = gauge.measured {
-        store.mergeInPlace(cs.tableName, batch, cs,
-          new java.sql.Timestamp(1L), planned, stageRows = None)
+        store.publish(cs.tableName, batch, cs,
+          new java.sql.Timestamp(1L), planned)
       }
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()

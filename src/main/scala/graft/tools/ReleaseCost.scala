@@ -122,18 +122,15 @@ object ReleaseCost {
         existing, stage).map(_.count()).getOrElse(0L)
     }
     // stage 3: the bucketed COW merge of the stage
-    val (counts, _, mergeKrows) = gauge.measured {
-      store.withTableLock(cs.tableName) {
-        store.mergeInPlace(cs.tableName, stage, cs,
-          new java.sql.Timestamp(1000L), planned, stageRows = None)
-      }
+    val ((ins, upd), _, mergeKrows) = gauge.measured {
+      store.publish(cs.tableName, stage, cs,
+        new java.sql.Timestamp(1000L), planned)
     }
     // stage 4: the index append of the admitted docs
     val (_, _, appendKrows) = gauge.measured {
       graft.operators.MinhashIndex.append(
         kept.select("doc_id", "text"), idxDir)
     }
-    val (ins, upd) = counts.getOrElse((0L, 0L))
 
     // the full release of the same batch against a SECOND fresh copy —
     // the end-to-end number the pieces should roughly sum to

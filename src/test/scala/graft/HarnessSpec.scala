@@ -20,19 +20,35 @@ class HarnessSpec extends AnyFunSuite {
       Some(Set("a", "b")))
   }
 
-  test("only GraftSession calls SparkSession.builder() in main code") {
-    val main = Paths.get(sys.props("user.dir"), "src", "main", "scala")
+  private val main = Paths.get(sys.props("user.dir"), "src", "main", "scala")
+
+  /** Main sources other than `owner` whose text contains any of `calls`,
+    * relative to the main source root.
+    */
+  private def callersBesides(owner: Path, calls: String*): Seq[String] = {
     assert(Files.isDirectory(main), s"no main source tree at $main")
     val sources = Files.walk(main).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
-    val factory = main.resolve(Paths.get("graft", "core", "GraftSession.scala"))
-    assert(sources.contains(factory))
-    def callsBuilder(p: Path) =
-      Files.readString(p).contains("SparkSession.builder()")
-    val offenders = sources.filter(p => p != factory && callsBuilder(p))
-      .map(main.relativize(_).toString).sorted
+    assert(sources.contains(owner))
+    sources.filter { p =>
+      p != owner && { val text = Files.readString(p); calls.exists(text.contains) }
+    }.map(main.relativize(_).toString).sorted
+  }
+
+  test("only GraftSession calls SparkSession.builder() in main code") {
+    val offenders = callersBesides(
+      main.resolve(Paths.get("graft", "core", "GraftSession.scala")),
+      "SparkSession.builder()")
     assert(offenders.isEmpty,
       s"build sessions through graft.core.GraftSession.builder(): $offenders")
+  }
+
+  test("only TableStore builds a target merge in main code") {
+    val offenders = callersBesides(
+      main.resolve(Paths.get("graft", "store", "TableStore.scala")),
+      "Publish.mergePlan(", "Publish.emptyTarget(")
+    assert(offenders.isEmpty,
+      s"publish a target through graft.store.Sink.publish: $offenders")
   }
 
   test("Gauge.measured reports exactly the rows its block read") {

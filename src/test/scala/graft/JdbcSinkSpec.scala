@@ -140,13 +140,13 @@ class JdbcSinkSpec extends AnyFunSuite with BeforeAndAfterEach {
         .toDF("k", "v", "etl_row_hash", "source_filename", "file_load_log_id")
     val sink = new JdbcSink(spark, url)
     val ts1 = java.sql.Timestamp.valueOf("2026-08-13 00:00:00")
-    val Some((i1, u1)) = sink.mergeInPlace("null_grain_target", stage(1, 100L), src, ts1)
+    val (i1, u1) = sink.publish("null_grain_target", stage(1, 100L), src, ts1)
     assert(i1 == 1 && u1 == 0)
     // second publish of the SAME (NULL-keyed) logical row with a changed
     // hash: plain `=` never matches NULL, which would re-INSERT it on
     // every run — the null-safe predicate must UPDATE in place instead
     val ts2 = java.sql.Timestamp.valueOf("2026-08-13 00:01:00")
-    val Some((i2, u2)) = sink.mergeInPlace("null_grain_target", stage(2, 200L), src, ts2)
+    val (i2, u2) = sink.publish("null_grain_target", stage(2, 200L), src, ts2)
     assert(i2 == 0 && u2 == 1, "NULL grain key must match null-safe")
     assert(query1("SELECT COUNT(*) FROM null_grain_target")(_.getInt(1)) == 1)
     assert(query1("""SELECT "v" FROM null_grain_target""")(_.getInt(1)) == 2)
@@ -155,7 +155,7 @@ class JdbcSinkSpec extends AnyFunSuite with BeforeAndAfterEach {
     val pgSink = new JdbcSink(spark, url,
       dialect = graft.store.PostgresOnConflictDialect)
     val e = intercept[IllegalArgumentException] {
-      pgSink.mergeInPlace("null_grain_target", stage(3, 300L), src, ts2)
+      pgSink.publish("null_grain_target", stage(3, 300L), src, ts2)
     }
     assert(e.getMessage.contains("nullable"))
   }

@@ -56,9 +56,9 @@ class MorPublishSpec extends AnyFunSuite {
 
     def publishBoth(file: String, logId: Long, now: java.sql.Timestamp,
                     rows: (Long, String)*): Unit = {
-      val cc = cow.mergeInPlace("mt", stageDf(file, logId, rows: _*),
+      val cc = cow.publish("mt", stageDf(file, logId, rows: _*),
         cowSource, now)
-      val mc = mor.mergeInPlace("mt", stageDf(file, logId, rows: _*),
+      val mc = mor.publish("mt", stageDf(file, logId, rows: _*),
         morSource, now)
       assert(mc === cc, s"insert/update counts diverged on $file")
       assert(snap(mor) === snap(cow), s"resolved rows diverged after $file")
@@ -101,17 +101,17 @@ class MorPublishSpec extends AnyFunSuite {
     def usegCount() = Files.list(root.resolve("mt")).toArray
       .map(_.toString).count(_.contains("/useg_"))
 
-    mor.mergeInPlace("mt", stageDf("f1.parquet", 1L,
+    mor.publish("mt", stageDf("f1.parquet", 1L,
       (1L to 10L).map(i => i -> s"v$i"): _*), morSource, ts(1000))
     assert(usegCount() === 0, "base publish is bucketed, not a segment")
-    mor.mergeInPlace("mt", stageDf("f2.parquet", 2L,
+    mor.publish("mt", stageDf("f2.parquet", 2L,
       Seq(1L -> "X1", 11L -> "v11"): _*), morSource, ts(2000))
     assert(usegCount() === 1)
     val before = snap(mor)
     // threshold 2: this publish commits segment 2, then folds both away
-    val c = mor.mergeInPlace("mt", stageDf("f3.parquet", 3L,
+    val c = mor.publish("mt", stageDf("f3.parquet", 3L,
       Seq(2L -> "X2", 12L -> "v12"): _*), morSource, ts(3000))
-    assert(c === Some((1L, 1L)))
+    assert(c === ((1L, 1L)))
     assert(usegCount() === 0, "threshold reached: segments folded into base")
     val after = snap(mor)
     assert(after.size === before.size + 1)
@@ -119,7 +119,7 @@ class MorPublishSpec extends AnyFunSuite {
     assert(after.find(_._1 == 1L).get._7 === ts(2000),
       "fold preserves resolved updated_at")
     // the folded table keeps publishing: next delta opens a fresh segment
-    mor.mergeInPlace("mt", stageDf("f4.parquet", 4L,
+    mor.publish("mt", stageDf("f4.parquet", 4L,
       Seq(3L -> "X3"): _*), morSource, ts(4000))
     assert(usegCount() === 1)
     assert(snap(mor).find(_._1 == 3L).get._7 === ts(4000))

@@ -100,7 +100,48 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .getAs[java.sql.Timestamp]("etl_updated_at") == null)
   }
 
-  test("jdbcMergeStream: epoch-guarded exactly-once merge across restarts") {
+  test("streaming merge-publish into a user-partitioned target keeps one live version") {
+    val drop = tmp("smp-drop")
+    val ckpt = tmp("smp-ckpt")
+    val wh = tmp("smp-wh")
+    val store = new graft.store.TableStore(spark, wh)
+    val source = SourceConfig(
+      name = "smp", filePattern = "sales_*.csv", sourceType = "csv",
+      columns = Seq(
+        ColumnSpec.string("transaction_id", nullable = false),
+        ColumnSpec.string("region", nullable = false),
+        ColumnSpec.int("quantity", nullable = false)),
+      tableName = "smp_target", grain = Seq("transaction_id"),
+      targetPartitionBy = Seq("region"))
+    def versionDirs(): Seq[String] = {
+      val s = Files.list(java.nio.file.Paths.get(wh, "smp_target"))
+      try s.toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+        .filter(_.startsWith("v_")).toSeq
+      finally s.close()
+    }
+
+    Files.writeString(java.nio.file.Paths.get(s"$drop/sales_p1.csv"),
+      "transaction_id,region,quantity\nT1,east,1\nT2,west,2\n")
+    StreamingPipeline.dropFolderMergeStream(spark, source, store, drop, ckpt)
+      .awaitTermination()
+    assert(versionDirs().size == 1)
+
+    // second micro-batch: updates T2, inserts T3
+    Files.writeString(java.nio.file.Paths.get(s"$drop/sales_p2.csv"),
+      "transaction_id,region,quantity\nT2,west,20\nT3,east,3\n")
+    StreamingPipeline.dropFolderMergeStream(spark, source, store, drop, ckpt)
+      .awaitTermination()
+    val rows = store.readIfExists("smp_target").get.collect()
+      .map(r => r.getAs[String]("transaction_id") ->
+        (r.getAs[String]("region"), r.getAs[Int]("quantity"),
+          r.getAs[Timestamp]("etl_updated_at") != null)).toMap
+    assert(rows == Map("T1" -> (("east", 1, false)),
+      "T2" -> (("west", 20, true)), "T3" -> (("east", 3, false))))
+    // the superseded full version is vacuumed, not left on disk per batch
+    assert(versionDirs().size == 1, s"stale versions left: ${versionDirs()}")
+  }
+
+  test("merge stream into a JdbcSink: epoch-guarded exactly-once merge across restarts") {
     val drop = tmp("sj-drop")
     val ckpt = tmp("sj-ckpt")
     val db = tmp("sj-db")
@@ -122,7 +163,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     Files.writeString(java.nio.file.Paths.get(s"$drop/sales_j1.csv"),
       "transaction_id,quantity\nT1,1\nT2,2\n")
-    StreamingPipeline.jdbcMergeStream(spark, source, sink, drop, ckpt)
+    StreamingPipeline.dropFolderMergeStream(spark, source, sink, drop, ckpt)
       .awaitTermination()
     assert(query1("SELECT COUNT(*) FROM sj_target")(_.getInt(1)) == 2)
     val epochs1 = query1("SELECT COUNT(*) FROM sj_target__epochs")(_.getInt(1))
@@ -130,7 +171,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // restart over the same checkpoint with NO new files: file tracking
     // yields no batch, so no new epoch rows and no target change
-    StreamingPipeline.jdbcMergeStream(spark, source, sink, drop, ckpt)
+    StreamingPipeline.dropFolderMergeStream(spark, source, sink, drop, ckpt)
       .awaitTermination()
     assert(query1("SELECT COUNT(*) FROM sj_target__epochs")(_.getInt(1)) == epochs1)
     assert(query1("SELECT COUNT(*) FROM sj_target")(_.getInt(1)) == 2)
@@ -138,7 +179,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // new file after restart: updates T2 in place, inserts T3, new epoch
     Files.writeString(java.nio.file.Paths.get(s"$drop/sales_j2.csv"),
       "transaction_id,quantity\nT2,20\nT3,3\n")
-    StreamingPipeline.jdbcMergeStream(spark, source, sink, drop, ckpt)
+    StreamingPipeline.dropFolderMergeStream(spark, source, sink, drop, ckpt)
       .awaitTermination()
     assert(query1("SELECT COUNT(*) FROM sj_target")(_.getInt(1)) == 3)
     assert(query1(
@@ -184,16 +225,18 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val work = java.nio.file.Files.createTempDirectory("graft_sidx")
     val idx = work.resolve("idx").toString
     graft.operators.VectorIndex.buildIvf(all.filter(col("vec_id") < 400), idx)
-    // stream the late vectors in as two micro-batches
+    // stream the late vectors in as two micro-batches, one run each: an
+    // AvailableNow query only drains what was added before it started
     val late = all.filter(col("vec_id") >= 400)
       .as[(Long, Array[Double])].collect().toSeq
     val mem = MemoryStream[(Long, Array[Double])]
-    val q = StreamingPipeline.streamingIndexAppend(
+    def drain(): Unit = StreamingPipeline.streamingIndexAppend(
       mem.toDF().toDF("vec_id", "nv"), idx,
-      work.resolve("ckpt").toString)
+      work.resolve("ckpt").toString).awaitTermination()
     mem.addData(late.take(50))
+    drain()
     mem.addData(late.drop(50))
-    q.awaitTermination()
+    drain()
     val postings = spark.read.parquet(s"$idx/postings")
     assert(postings.count() == all.count(), "all vectors indexed after the stream")
     // a probe retrieves a streamed-in vector from the index

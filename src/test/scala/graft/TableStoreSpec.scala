@@ -144,9 +144,9 @@ class TableStoreSpec extends AnyFunSuite {
     val t0 = new java.sql.Timestamp(1000L)
 
     // first publish: all-insert, establishes the bucketed layout
-    val c1 = store.mergeInPlace("bt", stageDf(ids.map(i => i -> s"v$i"): _*),
+    val c1 = store.publish("bt", stageDf(ids.map(i => i -> s"v$i"): _*),
       btSource, t0)
-    assert(c1.contains((200L, 0L)))
+    assert(c1 == ((200L, 0L)))
     assert(store.readIfExists("bt").get.count() == 200)
 
     val tableDir = root.resolve("bt")
@@ -164,9 +164,9 @@ class TableStoreSpec extends AnyFunSuite {
 
     // delta publish: one update (id=1 new value) + one insert (id=1000)
     val t1 = new java.sql.Timestamp(2000L)
-    val c2 = store.mergeInPlace("bt",
+    val c2 = store.publish("bt",
       stageDf(1L -> "CHANGED", 1000L -> "v1000"), btSource, t1)
-    assert(c2.contains((1L, 1L)))
+    assert(c2 == ((1L, 1L)))
 
     // untouched buckets: the exact same files, not rewritten copies
     untouched.foreach { b =>
@@ -190,10 +190,10 @@ class TableStoreSpec extends AnyFunSuite {
     assert(got(1000L) == (("v1000", t1, null)), "inserted row stamped created_at")
 
     // idempotent republish of the same delta: hash-equal rows are no-ops
-    val c3 = store.mergeInPlace("bt",
+    val c3 = store.publish("bt",
       stageDf(1L -> "CHANGED", 1000L -> "v1000"), btSource,
       new java.sql.Timestamp(3000L))
-    assert(c3.contains((0L, 0L)))
+    assert(c3 == ((0L, 0L)))
     assert(store.readIfExists("bt").get.count() == 201)
   }
 
@@ -204,16 +204,16 @@ class TableStoreSpec extends AnyFunSuite {
     store.overwrite("m", stageDf(1L -> "a", 2L -> "b")
       .withColumn("etl_created_at", lit(new java.sql.Timestamp(1L)))
       .withColumn("etl_updated_at", lit(null).cast("timestamp")))
-    val c = store.mergeInPlace("m", stageDf(2L -> "B2", 3L -> "c"),
+    val c = store.publish("m", stageDf(2L -> "B2", 3L -> "c"),
       btSource.copy(tableName = "m"), new java.sql.Timestamp(2000L))
-    assert(c.contains((1L, 1L)))
+    assert(c == ((1L, 1L)))
     val got = store.readIfExists("m").get.select("id", "v")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got == Map(1L -> "a", 2L -> "B2", 3L -> "c"))
     // now bucketed: a second delta leaves other buckets' files alone
-    val c2 = store.mergeInPlace("m", stageDf(4L -> "d"),
+    val c2 = store.publish("m", stageDf(4L -> "d"),
       btSource.copy(tableName = "m"), new java.sql.Timestamp(3000L))
-    assert(c2.contains((1L, 0L)))
+    assert(c2 == ((1L, 0L)))
     assert(store.readIfExists("m").get.count() == 4)
   }
 
@@ -222,7 +222,7 @@ class TableStoreSpec extends AnyFunSuite {
     val store = new TableStore(spark, root.toString, publishBuckets = 64)
     val src = btSource.copy(tableName = "r")
     // tiny first file pins the floor bucket count (16)
-    store.mergeInPlace("r", stageDf(1L -> "a"), src, new java.sql.Timestamp(1000L))
+    store.publish("r", stageDf(1L -> "a"), src, new java.sql.Timestamp(1000L))
     def bucketDirs(): Int = {
       val v = new String(Files.readAllBytes(root.resolve("r").resolve("_VERSION"))).trim
       Files.list(root.resolve("r").resolve(v)).toArray
@@ -238,7 +238,7 @@ class TableStoreSpec extends AnyFunSuite {
       .withColumn("etl_row_hash", xxhash64(concat_ws("|", col("id"), col("v"))))
       .withColumn("source_filename", lit("x.parquet"))
       .withColumn("file_load_log_id", lit(1L))
-    store.mergeInPlace("r", big, src, new java.sql.Timestamp(2000L))
+    store.publish("r", big, src, new java.sql.Timestamp(2000L))
     assert(store.readIfExists("r").get.count() == 70001)
     // rebucket resizes from CURRENT rows: 70001/4096 -> 32 buckets
     assert(store.rebucket("r", Seq("id")).contains(32))
@@ -247,9 +247,9 @@ class TableStoreSpec extends AnyFunSuite {
     assert(got.count() == 70001)
     assert(got.filter(col("id") === 1L).head().getString(1) == "a")
     // subsequent deltas merge into the NEW layout
-    val c = store.mergeInPlace("r", stageDf(1L -> "a2"), src,
+    val c = store.publish("r", stageDf(1L -> "a2"), src,
       new java.sql.Timestamp(3000L))
-    assert(c.contains((0L, 1L)))
+    assert(c == ((0L, 1L)))
     // explicit-target rebucket: the operator override pins EXACTLY the
     // requested geometry (pre-sizing / instrument seam), contents intact
     assert(store.rebucket("r", Seq("id"), target = Some(128)).contains(128))
@@ -266,7 +266,7 @@ class TableStoreSpec extends AnyFunSuite {
     val store = new TableStore(spark, root.toString, publishBuckets = 128)
     val src = btSource.copy(tableName = "g")
     // tiny first file pins the floor bucket count
-    store.mergeInPlace("g", stageDf(1L -> "a"), src,
+    store.publish("g", stageDf(1L -> "a"), src,
       new java.sql.Timestamp(1000L))
     def bucketDirs(): Int = {
       val v = new String(
@@ -287,7 +287,7 @@ class TableStoreSpec extends AnyFunSuite {
         xxhash64(concat_ws("|", col("id"), col("v"))))
       .withColumn("source_filename", lit("x.parquet"))
       .withColumn("file_load_log_id", lit(1L))
-    store.mergeInPlace("g", big, src, new java.sql.Timestamp(2000L))
+    store.publish("g", big, src, new java.sql.Timestamp(2000L))
     def contentHash(): Long = store.readIfExists("g").get
       .agg(expr("bit_xor(xxhash64(id, v))")).head().getLong(0)
     val h0 = contentHash()
@@ -299,9 +299,9 @@ class TableStoreSpec extends AnyFunSuite {
     // at max granularity the policy skips even the row-count gauge
     assert(store.maybeRebucket("g", Seq("id")).isEmpty)
     // subsequent deltas merge into the NEW layout
-    val c = store.mergeInPlace("g", stageDf(1L -> "a2"), src,
+    val c = store.publish("g", stageDf(1L -> "a2"), src,
       new java.sql.Timestamp(3000L))
-    assert(c.contains((0L, 1L)))
+    assert(c == ((0L, 1L)))
   }
 
   test("readBuckets reads ONLY the requested buckets' files; " +
@@ -310,7 +310,7 @@ class TableStoreSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_store")
     val store = new TableStore(spark, root.toString, publishBuckets = 8)
     val src = btSource.copy(tableName = "pb")
-    store.mergeInPlace("pb", stageDf((1L to 400L).map(i => i -> s"v$i"): _*),
+    store.publish("pb", stageDf((1L to 400L).map(i => i -> s"v$i"): _*),
       src, new java.sql.Timestamp(1000L))
     val delta = stageDf(1L -> "x", 2L -> "y", 3L -> "z")
     val planned = store.plannedBuckets("pb", Seq("id"), delta)
@@ -345,12 +345,35 @@ class TableStoreSpec extends AnyFunSuite {
     assert(store.readBuckets("plain", Set(0)).get.count() === 2)
   }
 
-  test("mergeInPlace declines user-partitioned targets (layout preserved)") {
+  test("publish merges user-partitioned targets (layout preserved)") {
     val root = Files.createTempDirectory("graft_store")
     val store = new TableStore(spark, root.toString)
-    assert(store.mergeInPlace("p", stageDf(1L -> "a"),
-      btSource.copy(tableName = "p", targetPartitionBy = Seq("v")),
-      new java.sql.Timestamp(0L)).isEmpty)
+    val src = btSource.copy(tableName = "p", targetPartitionBy = Seq("v"))
+    assert(store.publish("p", stageDf(1L -> "a", 2L -> "b"), src,
+      new java.sql.Timestamp(0L)) == ((2L, 0L)))
+    // one update (2) and one insert (3); 1 is carried unchanged
+    assert(store.publish("p", stageDf(2L -> "B2", 3L -> "c"), src,
+      new java.sql.Timestamp(1000L)) == ((1L, 1L)))
+    def children(d: java.nio.file.Path, prefix: String): Seq[String] = {
+      val s = Files.list(d)
+      try s.toArray.map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+        .filter(_.startsWith(prefix)).sorted.toSeq
+      finally s.close()
+    }
+    // the superseded version was vacuumed inline: one live version dir
+    val versions = children(root.resolve("p"), "v_")
+    assert(versions.size == 1, s"expected one live version, got $versions")
+    // the user's hive layout, not grain buckets
+    assert(children(root.resolve("p").resolve(versions.head), "v=") ==
+      Seq("v=B2", "v=a", "v=c"))
+    assert(children(root.resolve("p").resolve(versions.head), "_bucket=").isEmpty)
+    val got = store.readIfExists("p").get
+      .select("id", "v", "etl_created_at", "etl_updated_at").collect()
+      .map(r => r.getLong(0) -> (r.getString(1), r.getTimestamp(2),
+        r.getTimestamp(3))).toMap
+    val (t0, t1) = (new java.sql.Timestamp(0L), new java.sql.Timestamp(1000L))
+    assert(got == Map(1L -> (("a", t0, null)), 2L -> (("B2", t0, t1)),
+      3L -> (("c", t1, null))))
   }
 
   test("snapshot pins merge-published state across publishes and vacuums; " +
@@ -358,7 +381,7 @@ class TableStoreSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_store")
     val store = new TableStore(spark, root.toString, publishBuckets = 8)
     val ids = (1L to 200L)
-    store.mergeInPlace("bt", stageDf(ids.map(i => i -> s"v$i"): _*),
+    store.publish("bt", stageDf(ids.map(i => i -> s"v$i"): _*),
       btSource, new java.sql.Timestamp(1000L))
     store.snapshot("bt", "run1")
     assert(store.listSnapshots("bt") == Seq("run1"))
@@ -373,7 +396,7 @@ class TableStoreSpec extends AnyFunSuite {
 
     // delta publish (merge runs vacuum internally): without the snapshot,
     // v1's touched-bucket generations would be pruned here
-    store.mergeInPlace("bt", stageDf(1L -> "CHANGED", 1000L -> "v1000"),
+    store.publish("bt", stageDf(1L -> "CHANGED", 1000L -> "v1000"),
       btSource, new java.sql.Timestamp(2000L))
     store.vacuum("bt") // belt and braces: an explicit pass must also hold
     touched.foreach(b => assert(Files.exists(v1.resolve(s"_bucket=$b")),
@@ -402,7 +425,7 @@ class TableStoreSpec extends AnyFunSuite {
        "later cannot widen the read") {
     val root = Files.createTempDirectory("graft_store")
     val store = new TableStore(spark, root.toString, publishBuckets = 8)
-    store.mergeInPlace("bt", stageDf((1L to 50L).map(i => i -> s"v$i"): _*),
+    store.publish("bt", stageDf((1L to 50L).map(i => i -> s"v$i"): _*),
       btSource, new java.sql.Timestamp(1000L))
     store.snapshot("bt", "pin")
     // the pin carries the Delta/Iceberg-style file list (F\t lines)
@@ -576,7 +599,7 @@ class TableStoreSpec extends AnyFunSuite {
     val src = btSource.copy(name = "mor", tableName = "mor", mergeOnRead = true)
     def publish(rows: (Long, String)*): Unit = {
       store.withTableLock("mor") {
-        store.mergeInPlace("mor", stageDf(rows: _*), src,
+        store.publish("mor", stageDf(rows: _*), src,
           new java.sql.Timestamp(1000L))
       }
       ()
@@ -634,7 +657,7 @@ class TableStoreSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_store")
     val store = new TableStore(spark, root.toString, publishBuckets = 8)
     val ids = (1L to 200L)
-    store.mergeInPlace("bt", stageDf(ids.map(i => i -> s"v$i"): _*),
+    store.publish("bt", stageDf(ids.map(i => i -> s"v$i"): _*),
       btSource, new java.sql.Timestamp(1000L))
     store.snapshot("bt", "pre")
 
@@ -665,7 +688,7 @@ class TableStoreSpec extends AnyFunSuite {
     // fresh publish re-establishes it
     assert(store.deleteRows("bt", ids.toDF("id"), Seq("id")) === 198L)
     assert(store.readIfExists("bt").isEmpty)
-    store.mergeInPlace("bt", stageDf(7L -> "back"), btSource,
+    store.publish("bt", stageDf(7L -> "back"), btSource,
       new java.sql.Timestamp(2000L))
     assert(store.readIfExists("bt").get.count() === 1L)
   }
@@ -677,7 +700,7 @@ class TableStoreSpec extends AnyFunSuite {
     import sp.implicits._
     val root = Files.createTempDirectory("graft_store")
     val store = new TableStore(spark, root.toString, publishBuckets = 8)
-    store.mergeInPlace("bt2", stageDf((1L to 50L).map(i => i -> s"v$i"): _*),
+    store.publish("bt2", stageDf((1L to 50L).map(i => i -> s"v$i"): _*),
       btSource, new java.sql.Timestamp(1000L))
     // keys arriving as INT (a takedown list parsed narrow): the equi-join
     // matches via implicit cast either way, but the bucket hash of the
@@ -726,7 +749,7 @@ class TableStoreSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_store")
     val store = new TableStore(spark, root.toString, publishBuckets = 8)
     val ids = (1L to 200L)
-    store.mergeInPlace("bt", stageDf(ids.map(i => i -> s"v$i"): _*),
+    store.publish("bt", stageDf(ids.map(i => i -> s"v$i"): _*),
       btSource, new java.sql.Timestamp(1000L))
     store.snapshot("bt", "pre-evolve")
     val v1 = Files.list(root.resolve("bt")).toArray
@@ -748,10 +771,10 @@ class TableStoreSpec extends AnyFunSuite {
       b -> fileSnapshot(v1.resolve(s"_bucket=$b"))).toMap
 
     // pre-fix this publish threw AnalysisException (target lacks `w`)
-    val c = store.mergeInPlace("bt",
+    val c = store.publish("bt",
       stage2((1L, "CHANGED", "W1"), (1000L, "v1000", "W1000")),
       src2, new java.sql.Timestamp(2000L))
-    assert(c.contains((1L, 1L)))
+    assert(c == ((1L, 1L)))
     // evolution did NOT rewrite untouched buckets
     untouched.foreach(b => assert(
       fileSnapshot(v1.resolve(s"_bucket=$b")) == before(b),
@@ -776,9 +799,9 @@ class TableStoreSpec extends AnyFunSuite {
     // resolves with nulls for pre-evolution rows
     val morSrc = btSource.copy(name = "morE", tableName = "morE",
       mergeOnRead = true)
-    store.mergeInPlace("morE", stageDf((1L to 40L).map(i => i -> s"v$i"): _*),
+    store.publish("morE", stageDf((1L to 40L).map(i => i -> s"v$i"): _*),
       morSrc, new java.sql.Timestamp(1000L))
-    store.mergeInPlace("morE", stage2((1L, "u1", "W1"), (41L, "v41", "W41")),
+    store.publish("morE", stage2((1L, "u1", "W1"), (41L, "v41", "W41")),
       morSrc.copy(columns = morSrc.columns :+ ColumnSpec.string("w")),
       new java.sql.Timestamp(2000L))
     val mor = store.readIfExists("morE").get.select("id", "v", "w").collect()
@@ -796,7 +819,7 @@ class TableStoreSpec extends AnyFunSuite {
     val src = btSource.copy(name = "mor", tableName = "mor", mergeOnRead = true)
     def publish(rows: (Long, String)*): Unit = {
       store.withTableLock("mor") {
-        store.mergeInPlace("mor", stageDf(rows: _*), src,
+        store.publish("mor", stageDf(rows: _*), src,
           new java.sql.Timestamp(1000L))
       }
       ()
@@ -860,11 +883,11 @@ class TableStoreSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("graft_store")
     val store = new TableStore(spark, root.toString, publishBuckets = 8)
     val ids = (1L to 200L)
-    store.mergeInPlace("bt", stageDf(ids.map(i => i -> s"v$i"): _*),
+    store.publish("bt", stageDf(ids.map(i => i -> s"v$i"): _*),
       btSource, new java.sql.Timestamp(1000L))
     store.snapshot("bt", "run1")
     // update key 1, insert key 1000
-    store.mergeInPlace("bt", stageDf(1L -> "CHANGED", 1000L -> "v1000"),
+    store.publish("bt", stageDf(1L -> "CHANGED", 1000L -> "v1000"),
       btSource, new java.sql.Timestamp(2000L))
 
     // O(1) metadata answer: exactly the merge's touched buckets
