@@ -13,6 +13,15 @@ import org.apache.spark.sql.SparkSession
   *  - shuffle partitions sized to the local core count rather than the 200
   *    default; on a real cluster this is expected to be overridden to
   *    ~2-3x total cores
+  *  - the `file:` scheme on [[NioLocalFileSystem]] / [[NioLocalFs]]
+  *    (`fs.file.impl`, `fs.AbstractFileSystem.file.impl`): without
+  *    libhadoop the stock local filesystem forks a shell command for every
+  *    file and directory it creates, every `FileContext.rename` and every
+  *    permission read (~260 per 200k-row bulk load, milliseconds each).
+  *    Every `FileSystem` and `FileContext` user reaches it through the
+  *    session's Hadoop conf. `FileSystem`'s cache keys on scheme and user,
+  *    not on the conf, so main code never builds a bare `Configuration` or
+  *    calls `FileSystem.get` (a HarnessSpec source scan pins this).
   */
 object GraftSession {
   def localCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -37,6 +46,8 @@ object GraftSession {
       // whichever type arrives (sources/SchemaProbe).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
   }
 
   def getOrCreate(): SparkSession = {

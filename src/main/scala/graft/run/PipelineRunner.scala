@@ -289,8 +289,10 @@ final class PipelineRunner(
     if (rows.nonEmpty) {
       import scala.jdk.CollectionConverters._
       Trace.withJobDesc(spark, "pipeline:log-append") {
+        // a handful of driver rows: one task and one part file, not one
+        // per core (a local relation splits into defaultParallelism tasks)
         store.append(Schemas.LogTable,
-          spark.createDataFrame(rows.asJava, Schemas.LogSchema))
+          spark.createDataFrame(rows.asJava, Schemas.LogSchema).coalesce(1))
       }
       logBuffer.set(Vector.empty)
     }

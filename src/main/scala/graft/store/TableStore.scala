@@ -349,14 +349,15 @@ final class TableStore(spark: SparkSession, root: String,
     * callers never join one path set with itself un-checkpointed, and
     * the analyzer fails LOUDLY on ambiguity, never silently. Stale
     * entries are only ever dead keys (vacuumed dirs are never
-    * re-requested — no live manifest references them); the maps are
-    * cleared past a bound like [[graft.operators.KeyProbe]]'s dirBytes
-    * memo.
+    * re-requested — no live manifest references them); each map is
+    * cleared past its own bound like [[graft.operators.KeyProbe]]'s
+    * dirBytes memo, so an overflow of the frames (which pin file listings)
+    * never costs the schemas' footer passes.
     */
-  private val mergedSchemaMemo =
+  private[graft] val mergedSchemaMemo =
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
-  private val unionedDfMemo =
+  private[graft] val unionedDfMemo =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   private def readUnioned(paths: Seq[String]): DataFrame = {
@@ -369,10 +370,9 @@ final class TableStore(spark: SparkSession, root: String,
           case None =>
             spark.read.option("mergeSchema", "true").parquet(paths: _*)
         }
-        if (unionedDfMemo.size > 1024) {
-          unionedDfMemo.clear(); mergedSchemaMemo.clear()
-        }
+        if (unionedDfMemo.size >= TableStore.FrameMemoMax) unionedDfMemo.clear()
         unionedDfMemo.put(key, df)
+        if (mergedSchemaMemo.size >= TableStore.SchemaMemoMax) mergedSchemaMemo.clear()
         mergedSchemaMemo.put(key, df.schema)
         df
     }
@@ -1536,4 +1536,10 @@ object TableStore {
     * means small drifts are routine.
     */
   val RebucketRatio: Long = 8L
+
+  /** Bounds of [[TableStore]]'s read memos: a resolved frame pins its
+    * plan and file listing, a merged schema only the column set.
+    */
+  val FrameMemoMax: Int = 256
+  val SchemaMemoMax: Int = 4096
 }

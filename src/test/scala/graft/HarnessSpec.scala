@@ -51,6 +51,18 @@ class HarnessSpec extends AnyFunSuite {
       s"publish a target through graft.store.Sink.publish: $offenders")
   }
 
+  test("main code reaches Hadoop filesystems only through the session conf") {
+    // FileSystem's cache keys on scheme and user, not on the conf: one
+    // FileSystem.get made from a bare Configuration before the session
+    // exists would pin the forking local filesystem for the whole JVM
+    val offenders = callersBesides(
+      main.resolve(Paths.get("graft", "core", "LocalFs.scala")),
+      "new Configuration(", "new org.apache.hadoop.conf.Configuration(",
+      "FileSystem.get(", "FileSystem.newInstance(")
+    assert(offenders.isEmpty,
+      s"take filesystems from the session's hadoop conf (path.getFileSystem): $offenders")
+  }
+
   test("Gauge.measured reports exactly the rows its block read") {
     val dir = Files.createTempDirectory("graft_gauge").resolve("t").toString
     spark.range(1000).coalesce(1).write.parquet(dir)

@@ -63,6 +63,25 @@ class TableStoreSpec extends AnyFunSuite {
       .sameElements(Array(1L, 2L)))
   }
 
+  test("a frame-memo overflow keeps the memoized merged schemas") {
+    val (store, _) = mkStore()
+    store.overwrite("t", df(1, 2))
+    assert(store.readIfExists("t").get.count() == 2)
+    val schemas = store.mergedSchemaMemo.keySet.toArray.toSet
+    assert(schemas.nonEmpty && schemas.forall(store.unionedDfMemo.containsKey))
+    // fill the frame memo to its bound; the next miss overflows it
+    val filler = spark.emptyDataFrame
+    (store.unionedDfMemo.size until TableStore.FrameMemoMax)
+      .foreach(i => store.unionedDfMemo.put(s"filler$i", filler))
+    store.overwrite("u", df(3))
+    assert(store.readIfExists("u").get.count() == 1)
+    assert(store.unionedDfMemo.size == 1)
+    assert(schemas.forall(store.mergedSchemaMemo.containsKey),
+      "a frame-memo overflow must not cost the schemas' footer passes")
+    assert(store.readIfExists("t").get.collect().map(_.getLong(0)).sorted
+      .sameElements(Array(1L, 2L)))
+  }
+
   test("withTableLock serializes read-modify-write cycles") {
     val (store, _) = mkStore()
     store.overwrite("c", df(0))

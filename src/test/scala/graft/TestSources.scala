@@ -146,13 +146,8 @@ object TestSources {
 /** One shared local session for the whole test run. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    // the production session, fork-free local filesystem included
+    val s = GraftSession.builder(master = "local[4]", shufflePartitions = 4)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
