@@ -16,8 +16,8 @@ import org.apache.spark.sql.SparkSession
   *  - the `file:` scheme on [[NioLocalFileSystem]] / [[NioLocalFs]]
   *    (`fs.file.impl`, `fs.AbstractFileSystem.file.impl`): without
   *    libhadoop the stock local filesystem forks a shell command for every
-  *    file and directory it creates, every `FileContext.rename` and every
-  *    permission read (~260 per 200k-row bulk load, milliseconds each).
+  *    file and directory it creates and every `FileContext.rename` (~260
+  *    per 200k-row bulk load, milliseconds each).
   *    Every `FileSystem` and `FileContext` user reaches it through the
   *    session's Hadoop conf. `FileSystem`'s cache keys on scheme and user,
   *    not on the conf, so main code never builds a bare `Configuration` or

@@ -7,22 +7,22 @@ import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsCon
   FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 
 import java.net.URI
-import java.nio.file.{FileSystems, Files, LinkOption, NoSuchFileException}
-import java.nio.file.attribute.{GroupPrincipal, PosixFilePermission, UserPrincipal}
+import java.nio.file.{FileSystems, Files}
+import java.nio.file.attribute.PosixFilePermission
 
-/** The local filesystem without forked shell commands.
+/** The local filesystem without forked shell commands on its write path.
   *
   * Without libhadoop (`NativeCodeLoader.isNativeCodeLoaded == false`)
   * Hadoop's `RawLocalFileSystem` forks `chmod` for every file it creates
-  * and every directory `mkdirs` makes, `readlink` on every
-  * `FileContext.rename`, and `ls -ld` whenever a status's permission,
-  * owner or group is read. Each fork costs milliseconds in a large-heap
+  * and every directory `mkdirs` makes, and `readlink` on every
+  * `FileContext.rename`. Each fork costs milliseconds in a large-heap
   * JVM, and a parquet write creates several files per task. This subclass
   * makes the same changes through `java.nio` syscalls: the same mode bits,
-  * the same statuses, the same `.crc` sidecars (the checksummed wrappers
-  * below are Hadoop's own). Whatever NIO cannot express exactly (a sticky
-  * bit, a filesystem without POSIX attributes, a real symlink) takes the
-  * inherited path.
+  * the same `.crc` sidecars (the checksummed wrappers below are Hadoop's
+  * own). Whatever NIO cannot express exactly (a sticky bit, a filesystem
+  * without POSIX attributes, a real symlink) takes the inherited path, as
+  * does a status's lazily loaded permission, owner and group (one `ls -ld`
+  * per status read, a few per load).
   */
 class NioRawLocalFileSystem extends RawLocalFileSystem {
 
@@ -38,21 +38,12 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
   override def getFileLinkStatus(f: Path): FileStatus =
     if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
     else getFileStatus(f)
-
-  override def getFileStatus(f: Path): FileStatus = nioStatus(super.getFileStatus(f))
-
-  override def listStatus(f: Path): Array[FileStatus] = super.listStatus(f).map(nioStatus)
-
-  private def nioStatus(s: FileStatus): FileStatus =
-    if (!NioRawLocalFileSystem.unix || s.isInstanceOf[NioRawLocalFileSystem.Status]) s
-    else new NioRawLocalFileSystem.Status(s, pathToFile(s.getPath).toPath)
 }
 
 object NioRawLocalFileSystem {
 
   private val views = FileSystems.getDefault.supportedFileAttributeViews
   private val posix = views.contains("posix")
-  private val unix = views.contains("unix")
 
   private def modeSet(mode: Int): java.util.Set[PosixFilePermission] = {
     val set = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
@@ -61,36 +52,6 @@ object NioRawLocalFileSystem {
       if ((mode & (0x100 >> i)) != 0) set.add(b)
     }
     set
-  }
-
-  /** A status whose permission, owner and group load on first read from
-    * one `lstat` (the `unix:mode` attribute keeps the sticky bit), where
-    * the inherited status forks `ls -ld`. A file gone before the first
-    * read keeps the defaults, as the inherited status does.
-    */
-  private final class Status(s: FileStatus, file: java.nio.file.Path)
-      extends FileStatus(s.getLen, s.isDirectory, s.getReplication, s.getBlockSize,
-        s.getModificationTime, s.getAccessTime, null, null, null, null, s.getPath) {
-    @volatile private var loaded = false
-
-    private def load(): Unit = if (!loaded) synchronized {
-      if (!loaded) {
-        try {
-          val a = Files.readAttributes(file, "unix:mode,owner,group", LinkOption.NOFOLLOW_LINKS)
-          setPermission(new FsPermission((a.get("mode").asInstanceOf[Int] & 0x3ff).toShort))
-          setOwner(a.get("owner").asInstanceOf[UserPrincipal].getName)
-          setGroup(a.get("group").asInstanceOf[GroupPrincipal].getName)
-        } catch {
-          case _: NoSuchFileException =>
-          case e: java.io.IOException => throw new java.io.UncheckedIOException(e)
-        }
-        loaded = true
-      }
-    }
-
-    override def getPermission: FsPermission = { load(); super.getPermission }
-    override def getOwner: String = { load(); super.getOwner }
-    override def getGroup: String = { load(); super.getGroup }
   }
 }
 

@@ -1540,6 +1540,6 @@ object TableStore {
   /** Bounds of [[TableStore]]'s read memos: a resolved frame pins its
     * plan and file listing, a merged schema only the column set.
     */
-  val FrameMemoMax: Int = 256
-  val SchemaMemoMax: Int = 4096
+  val FrameMemoMax: Int = 1024
+  val SchemaMemoMax: Int = 8192
 }

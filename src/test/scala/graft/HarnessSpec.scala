@@ -22,17 +22,21 @@ class HarnessSpec extends AnyFunSuite {
 
   private val main = Paths.get(sys.props("user.dir"), "src", "main", "scala")
 
-  /** Main sources other than `owner` whose text contains any of `calls`,
-    * relative to the main source root.
+  /** Main sources whose text contains any of `calls`, relative to the
+    * main source root.
     */
-  private def callersBesides(owner: Path, calls: String*): Seq[String] = {
+  private def callers(calls: String*): Seq[String] = {
     assert(Files.isDirectory(main), s"no main source tree at $main")
-    val sources = Files.walk(main).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-    assert(sources.contains(owner))
-    sources.filter { p =>
-      p != owner && { val text = Files.readString(p); calls.exists(text.contains) }
-    }.map(main.relativize(_).toString).sorted
+    Files.walk(main).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && {
+        val text = Files.readString(p); calls.exists(text.contains) })
+      .map(main.relativize(_).toString).toSeq.sorted
+  }
+
+  /** [[callers]] other than `owner`, which must exist. */
+  private def callersBesides(owner: Path, calls: String*): Seq[String] = {
+    assert(Files.isRegularFile(owner), s"no owner source $owner")
+    callers(calls: _*).filterNot(_ == main.relativize(owner).toString)
   }
 
   test("only GraftSession calls SparkSession.builder() in main code") {
@@ -54,11 +58,13 @@ class HarnessSpec extends AnyFunSuite {
   test("main code reaches Hadoop filesystems only through the session conf") {
     // FileSystem's cache keys on scheme and user, not on the conf: one
     // FileSystem.get made from a bare Configuration before the session
-    // exists would pin the forking local filesystem for the whole JVM
-    val offenders = callersBesides(
-      main.resolve(Paths.get("graft", "core", "LocalFs.scala")),
+    // exists would pin the forking local filesystem for the whole JVM. The
+    // no-argument FileContext factories build a bare Configuration inside
+    // Hadoop and so reach the forking AbstractFileSystem. No file owns these.
+    val offenders = callers(
       "new Configuration(", "new org.apache.hadoop.conf.Configuration(",
-      "FileSystem.get(", "FileSystem.newInstance(")
+      "FileSystem.get(", "FileSystem.newInstance(",
+      "FileContext.getFileContext()", "getLocalFSFileContext(")
     assert(offenders.isEmpty,
       s"take filesystems from the session's hadoop conf (path.getFileSystem): $offenders")
   }
