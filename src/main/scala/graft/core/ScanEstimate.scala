@@ -2,7 +2,12 @@ package graft.core
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** What a parquet file's footer says of it: its exact row count and its
+  * row-group count.
+  */
+final case class ParquetFooter(rows: Long, rowGroups: Long)
 
 /** Effective scan-parallelism estimate for a file or directory WITHOUT
   * converting a plan to an RDD (`df.rdd.getNumPartitions` forces full plan
@@ -32,7 +37,7 @@ object ScanEstimate {
       if (!name.startsWith("_") && !name.startsWith(".")) est += {
         if (name.endsWith(".gz")) 1L
         else if (name.endsWith(".parquet"))
-          parquetRowGroups(conf, f.getPath)
+          parquetFooter(conf, f.getPath).map(_.rowGroups)
             .getOrElse(math.max(1L, f.getLen / SplitBytes))
         else math.max(1L, f.getLen / SplitBytes)
       }
@@ -40,42 +45,44 @@ object ScanEstimate {
     math.max(1L, est)
   }
 
-  /** `df`, the scan of `path`, spread over the session's parallelism when
-    * the file layout cannot spread it. A single-row-group parquet file
-    * scans as ONE task no matter the split config, and every narrow
-    * per-row stage behind it (validation, shingling, vector math) would run
-    * single-threaded. Fires only when [[effectiveTasks]] is at most half
-    * the parallelism; multi-split data keeps its native, shuffle-free
-    * layout, and an unreadable estimate leaves `df` untouched.
-    *
-    * With `keys` the fan-out hash-partitions on them: a round-robin
-    * repartition first sorts every row inside the single scan task (Spark
-    * sorts before a round-robin repartition so retries are deterministic),
-    * the hash needs no sort, and the output stays clustered by the keys.
-    * Rows sharing one key value land in one task. Without `keys` it is
-    * round-robin.
+  /** `df`, the scan of `path`, spread round-robin over the session's
+    * parallelism when the file layout cannot spread it. A
+    * single-row-group parquet file scans as ONE task no matter the split
+    * config, and every narrow per-row stage behind it (validation,
+    * shingling, vector math) would run single-threaded. Fires only when
+    * [[isNarrow]]; multi-split data keeps its native, shuffle-free layout,
+    * and an unreadable estimate leaves `df` untouched.
     */
-  def fanOut(df: DataFrame, path: String, keys: Seq[Column] = Nil): DataFrame = {
-    val sc = df.sparkSession.sparkContext
+  def fanOut(df: DataFrame, path: String): DataFrame =
+    if (isNarrow(df.sparkSession, path))
+      df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    else df
+
+  /** Whether a scan of `path` runs at most half the session's parallelism
+    * in tasks: [[fanOut]]'s trigger. `rowGroups`, the count of a parquet
+    * file whose footer the caller already read, stands in for
+    * [[effectiveTasks]]; an unreadable estimate counts as wide.
+    */
+  def isNarrow(spark: SparkSession, path: String,
+               rowGroups: Option[Long] = None): Boolean = {
+    val sc = spark.sparkContext
     val par = sc.defaultParallelism
-    val estTasks =
+    val estTasks = rowGroups.map(math.max(1L, _)).getOrElse {
       try effectiveTasks(sc.hadoopConfiguration, path)
       catch { case _: java.io.IOException => par.toLong } // unknown: don't touch
-    if (estTasks * 2 > par) df
-    else if (keys.isEmpty) df.repartition(par)
-    else df.repartition(par, keys: _*)
+    }
+    estTasks * 2 <= par
   }
 
-  /** Row-group count from the parquet footer; None when the footer cannot
-    * be read (corrupt/not-actually-parquet — the caller's length fallback
-    * keeps orchestration error handling in the read stage where it
-    * belongs).
+  /** The parquet footer of `file`; None when it cannot be read
+    * (corrupt/not-actually-parquet — callers fall back, which keeps
+    * orchestration error handling in the read stage where it belongs).
     */
-  private def parquetRowGroups(conf: Configuration, file: Path): Option[Long] =
+  def parquetFooter(conf: Configuration, file: Path): Option[ParquetFooter] =
     try {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf)
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try Some(reader.getRowGroups.size.toLong)
+      try Some(ParquetFooter(reader.getRecordCount, reader.getRowGroups.size.toLong))
       finally reader.close()
     } catch { case scala.util.control.NonFatal(_) => None }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.core._
+import graft.store.BucketLayout
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -88,13 +89,21 @@ object Audit {
     * plus the example query at db_utils.py:331-351). With AQE the partial
     * (map-side) aggregation collapses most groups before the exchange, so at
     * 100 TB this is one well-formed hash-agg, not a sort.
+    *
+    * A stage that carries `_bucket` groups on its layout's hash keys
+    * ([[BucketLayout.keys]]) as well as the grain. Those are functions of
+    * the grain, so the groups are the grain's own, and a stage
+    * hash-partitioned on the keys aggregates with no Exchange.
     */
   def grainAudit(stage: DataFrame, source: SourceConfig, fileName: String): Unit = {
+    val grain = source.grain.map(col)
+    val layoutKeys = BucketLayout.carried(stage).map(_.keys(grain)).getOrElse(Nil)
     val dups = stage
-      .groupBy(source.grain.map(col): _*)
+      .groupBy(layoutKeys ++ grain: _*)
       .agg(count(lit(1)).as("duplicate_count"))
       .filter(col("duplicate_count") > 1)
-      .orderBy(source.grain.map(col): _*)
+      .select(grain :+ col("duplicate_count"): _*)
+      .orderBy(grain: _*)
       .limit(5)
       .collect()
     if (dups.nonEmpty) {
@@ -116,7 +125,7 @@ object Audit {
     source.auditQuery.foreach { q =>
       val view = FileUtils.sanitizeTableName(
         s"stage__${source.tableName}_${System.nanoTime()}")
-      stage.createOrReplaceTempView(view)
+      BucketLayout.dropCarried(stage).createOrReplaceTempView(view)
       try {
         // a query yielding no rows cannot certify anything — fail the audit
         // cleanly instead of NoSuchElementException

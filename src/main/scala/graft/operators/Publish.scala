@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core.SourceConfig
-import graft.store.Schemas
+import graft.store.{BucketLayout, Schemas}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
@@ -104,8 +104,10 @@ object Publish {
     * join. `counts()` blocks until an action has run the plan.
     *
     * `targetKnownEmpty = true` (first publish of a table) skips the
-    * full-outer join entirely — every staged row is an insert, the plan is a
-    * narrow projection, and the publish write involves NO shuffle at all.
+    * full-outer join entirely — every staged row is an insert and the plan
+    * is a narrow projection. It keeps the `_bucket` the stage carries from
+    * its fan-out ([[graft.store.BucketLayout]]), so a stage already
+    * hash-partitioned on its layout is written with no shuffle at all.
     */
   final case class MergePlan(merged: DataFrame, counts: () => (Long, Long))
 
@@ -116,7 +118,8 @@ object Publish {
     if (targetKnownEmpty) {
       val modelCols = source.columns.map(_.name)
       val dataCols = modelCols ++ Seq("etl_row_hash", "source_filename", "file_load_log_id")
-      val merged = stage.select(dataCols.map(col): _*)
+      val carried = Seq(BucketLayout.BucketCol).filter(stage.columns.contains)
+      val merged = stage.select((dataCols ++ carried).map(col): _*)
         .withColumn("etl_created_at", lit(now))
         .withColumn("etl_updated_at", lit(null).cast(TimestampType))
         .observe(obs, count(lit(1)).as("inserts"))

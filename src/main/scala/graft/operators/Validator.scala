@@ -2,19 +2,22 @@ package graft.operators
 
 import graft.core._
 import graft.sources.Reader
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.store.BucketLayout
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.MaterializedRows
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Result of validating one file's rows. All three frames read one cached
-  * plan; `valid`/`dlq` are filters over `all` (the reference's tagged-row
-  * union stream, validator.py:97-148, split at write/base.py:50-75).
+/** Result of validating one file's rows. All three frames read one set of
+  * materialized rows; `valid`/`dlq` are filters over `all` (the reference's
+  * tagged-row union stream, validator.py:97-148, split at
+  * write/base.py:50-75).
   *
-  * `release()` uncaches that plan. Callers must use it (not
-  * `all.unpersist()`): `all` is a projection of the per-file constants
-  * OVER the cached rows, and Dataset.unpersist only drops a cache entry
-  * whose plan equals the dataset's own — unpersisting the projection is a
-  * no-op.
+  * `release()` frees those rows; call it once every frame here is done
+  * with. A frame read after it recomputes the rows from the raw read. It
+  * is the only way to free them: the rows are a persisted RDD, not a
+  * cache entry, so neither `all.unpersist()` nor clearing the session's
+  * cache drops them.
   */
 final case class ValidationResult(
     all: DataFrame,
@@ -56,7 +59,8 @@ object Validator {
   val RawRecordCol = "file_record_data"
 
   /** Valid rows as the publish stage takes them: the validation columns
-    * and the file row number dropped.
+    * and the file row number dropped. A `_bucket` the raw frame carried
+    * ([[BucketLayout]]) stays.
     */
   def staged(valid: DataFrame): DataFrame =
     valid.drop(ErrorsCol, IsValidCol, RawRecordCol, "file_row_number")
@@ -87,9 +91,29 @@ object Validator {
   private val ExcelEpochSecs = -2209161600L
   private val NumericRe = "^-?\\d+(\\.\\d+)?$"
 
-  /** Cleaned (pre-cast) expression for a spec. */
-  private def cleaned(spec: ColumnSpec): Column =
-    spec.cleaners.foldLeft(col(spec.name))((c, f) => f(c))
+  /** Cleaned (pre-cast) expression for a spec over `input`. */
+  private def cleaned(spec: ColumnSpec, input: Column): Column =
+    spec.cleaners.foldLeft(input)((c, f) => f(c))
+
+  /** A spec's value as validation types it: its cleaners, then the cast.
+    * The validate projection and a load's fan-out share this definition,
+    * so a fan-out keyed on it places each row by its validated values.
+    */
+  private def typed(spec: ColumnSpec, input: Column, excelDates: Boolean): Column =
+    castExpr(cleaned(spec, input), spec.dataType, excelDates)
+
+  /** The grain as validation types it, computed over a raw read's file
+    * columns, in grain order: (name, value) per grain column. A grain
+    * column whose file column is absent types a null, as validation does.
+    */
+  def typedGrain(raw: DataFrame, source: SourceConfig,
+                 excelDates: Boolean): Seq[(String, Column)] = {
+    val present = raw.columns.toSet
+    source.grain.flatMap(g => source.columns.find(_.name == g)).map { s =>
+      s.name -> typed(s, if (present.contains(s.fileAlias)) col(s.fileAlias)
+                         else lit(null).cast(StringType), excelDates)
+    }
+  }
 
   /** Cast with try semantics plus the Excel-serial date path when enabled
     * (reference excel.py:62-84: serial days/fractional-seconds against the
@@ -134,7 +158,8 @@ object Validator {
 
   /** The columns of [[compile]] that vary by row: every cast target column,
     * `file_row_number` when the input is numbered, the optional raw record,
-    * `_errors`, `is_valid` and `etl_row_hash`.
+    * `_errors`, the `_bucket` `raw` carries, `is_valid` and
+    * `etl_row_hash`.
     */
   private def rowLevel(raw: DataFrame, source: SourceConfig,
                        excelDates: Boolean, withRawRecord: Boolean): DataFrame = {
@@ -147,10 +172,11 @@ object Validator {
     // unnumbered frame (no zipWithIndex pass) and only error files get
     // re-validated with real numbers for DLQ records
     val rowNum = if (present.contains(Reader.RowNumCol)) Seq("file_row_number") else Nil
+    val carried = Seq(BucketLayout.BucketCol).filter(present).map(col)
     val aliased = raw.select(
       specs.map(s => (if (present.contains(s.fileAlias)) col(s.fileAlias)
                       else lit(null).cast(StringType)).as(s.name)) ++
-        rowNum.map(col(Reader.RowNumCol).as(_)): _*)
+        rowNum.map(col(Reader.RowNumCol).as(_)) ++ carried: _*)
 
     val rawRecord =
       if (withRawRecord) Seq(to_json(struct(specs.map(s => col(s.name)): _*)).as(RawRecordCol))
@@ -158,12 +184,10 @@ object Validator {
 
     // Per-spec: cleaned -> cast, with every violated rule contributing one
     // error struct, concatenated in spec then rule order.
-    val castCols = specs.map { s =>
-      castExpr(cleaned(s), s.dataType, excelDates).as(s.name)
-    }
+    val castCols = specs.map(s => typed(s, col(s.name), excelDates).as(s.name))
     val rules: Seq[Column] = specs.flatMap { s =>
-      val c = cleaned(s)
-      val casted = castExpr(c, s.dataType, excelDates)
+      val c = cleaned(s, col(s.name))
+      val casted = typed(s, col(s.name), excelDates)
       Seq(
         Some(rule(c.isNotNull && casted.isNull, s.name, c, "type_error",
           s"value is not a valid ${s.dataType.simpleString}")),
@@ -182,7 +206,7 @@ object Validator {
     val errorsArr = (if (rules.isEmpty) NoErrors else concat(rules: _*)).as(ErrorsCol)
 
     val projected = aliased.select(
-      castCols ++ rowNum.map(col) ++ rawRecord ++ Seq(errorsArr): _*)
+      castCols ++ rowNum.map(col) ++ rawRecord ++ Seq(errorsArr) ++ carried: _*)
 
     // V4 row hash over sorted model fields (applied to the CAST values; the
     // reference hashes the validated/coerced record, validator.py:110-112).
@@ -210,11 +234,24 @@ object Validator {
       Seq(lit(fileName).as("source_filename"), lit(logId).as("file_load_log_id")): _*)
   }
 
-  /** Run validation, cache, count, apply the threshold gate.
+  /** Run validation, materialize the rows and count them in one action.
     *
-    * The cache holds only [[rowLevel]]'s columns; the per-file constants
-    * are projected over it, so no row stores them and the cached plan's
-    * generated code is the same for every file of a source.
+    * The rows are materialized row-level ([[MaterializedRows]]: persisted
+    * uncompressed, keeping their lineage, so a lost executor's blocks are
+    * recomputed), not into the compressed columnar cache: building that
+    * cache ran a dictionary-compressibility scan over every long and string
+    * value, a third of the validate stage's executor time. The counts come
+    * from an observation on the same action. The rows hold only
+    * [[rowLevel]]'s columns; the per-file constants are projected over
+    * them, so no row stores them and the plan's generated code is the same
+    * for every file of a source. [[ValidationResult.release]] frees them.
+    *
+    * `hashedBy = Some((keys, n))` declares the materialized rows
+    * hash-partitioned on `keys`, expressions over the output columns, into
+    * `n` partitions, so the grain audit and the publish plan no second
+    * Exchange. The caller vouches for it: `raw` must end in a hash
+    * repartition into `n` partitions on expressions whose values `keys`
+    * compute after validation (the typed grain, `_bucket`, the salt lane).
     *
     * The gate is `error_rate >= threshold` — the default 0.0 fails on ANY
     * error; a rate strictly below the threshold passes and still writes its
@@ -224,15 +261,19 @@ object Validator {
     */
   def validate(raw: DataFrame, source: SourceConfig, fileName: String,
                logId: Long, excelDates: Boolean = false,
-               withRawRecord: Boolean = true): ValidationResult = {
-    val rows = rowLevel(raw, source, excelDates, withRawRecord).cache()
-    val counts = rows.agg(
-      count(lit(1)).as("total"),
-      count(when(!col(IsValidCol), 1)).as("errors")).head()
-    val (total, errors) = (counts.getLong(0), counts.getLong(1))
+               withRawRecord: Boolean = true,
+               hashedBy: Option[(Seq[Column], Int)] = None): ValidationResult = {
+    val obs = Observation()
+    val (rows, release) = MaterializedRows(
+      rowLevel(raw, source, excelDates, withRawRecord).observe(obs,
+        count(lit(1)).as("total"),
+        count(when(!col(IsValidCol), 1)).as("errors")),
+      hashedBy)
+    val counts = obs.get
     val all = withFileConstants(rows, source, fileName, logId)
     ValidationResult(all, all.filter(col(IsValidCol)), all.filter(!col(IsValidCol)),
-      total, errors, release = () => { rows.unpersist(); () })
+      counts("total").asInstanceOf[Long], counts("errors").asInstanceOf[Long],
+      release)
   }
 
   /** Throws [[ValidationThresholdExceededError]] when the gate trips. */

@@ -2,9 +2,9 @@ package graft.run
 
 import graft.core._
 import graft.operators.{Audit, Validator}
-import graft.sources.{ExcelReader, ReaderFactory}
+import graft.sources.{ExcelReader, RawRead, ReaderFactory}
 import graft.store.{Schemas, Sink, TableStore}
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Outcome of processing one file (reference returns `(success, file,
@@ -124,22 +124,12 @@ final class PipelineRunner(
     // numbering pass nor a to_json over every row. Files with errors
     // re-validate over the numbered frame with payloads enabled so DLQ
     // records carry real file_row_numbers and file_record_data.
-    //
-    // A single-file drop often scans as one task; the fan-out hash-partitions
-    // on the grain's file columns, so the cached validation is clustered by
-    // grain and the grain audit aggregates with no Exchange when the grain
-    // columns pass through uncast. Rows sharing one grain value land in one
-    // validate task, including every row whose grain is null or will not
-    // cast (those go to the DLQ): under a nonzero error threshold such a
-    // skewed file still loads, with one task doing that share of the work.
-    // A file carrying none of the grain columns fans out round-robin.
-    val grainKeys = source.columns.filter(c => source.grain.contains(c.name))
-      .map(_.fileAlias).filter(raw.df.columns.toSet).map(col)
+    val excelDates = reader.isInstanceOf[ExcelReader]
     val vr = Trace.stage(spark, "validate", s"pipeline:validate $fileName",
         "file" -> fileName) {
-      Validator.validate(ScanEstimate.fanOut(raw.df, path, grainKeys), source,
-        fileName, logId, excelDates = reader.isInstanceOf[ExcelReader],
-        withRawRecord = false)
+      val (fanned, hashedBy) = fanOut(raw, path, source, excelDates)
+      Validator.validate(fanned, source, fileName, logId, excelDates,
+        withRawRecord = false, hashedBy = hashedBy)
     }
     var vrNumbered: Option[graft.operators.ValidationResult] = None
     try {
@@ -148,7 +138,7 @@ final class PipelineRunner(
       if (vr.errorCount > 0) {
         val vrN = {
           val n = Validator.validate(raw.numbered(), source, fileName, logId,
-            excelDates = reader.isInstanceOf[ExcelReader])
+            excelDates = excelDates)
           vrNumbered = Some(n)
           n
         }
@@ -257,6 +247,47 @@ final class PipelineRunner(
     } finally {
       vr.release()
       vrNumbered.foreach(_.release())
+    }
+  }
+
+  /** The raw read spread over the session's parallelism when its scan
+    * cannot spread it ([[ScanEstimate.isNarrow]]: a single-file drop often
+    * scans as one task), and the hash partitioning the validated rows
+    * then have, as keys over validation's output columns and a partition
+    * count.
+    *
+    * A parquet file bound for an empty bucketed target is hash-partitioned
+    * on the layout its first publish will write, sized from the footer's
+    * exact row count: the rows carry `_bucket` through validation, the
+    * grain audit groups on the layout's keys, and the publish writes them
+    * with no second Exchange. Any other file is hash-partitioned on
+    * its grain as validation types it, so the validated rows are clustered
+    * by grain and the grain audit aggregates with no Exchange. Either way
+    * rows sharing one grain value land in one validate task, including
+    * every row whose grain is null or will not cast (those go to the DLQ):
+    * under a nonzero error threshold such a skewed file still loads, with
+    * one task doing that share of the work. A hash repartition needs no
+    * sort, where a round-robin one first sorts every row inside the single
+    * scan task (so that retries are deterministic); only a file carrying
+    * none of the grain columns fans out round-robin.
+    */
+  private def fanOut(raw: RawRead, path: String, source: SourceConfig,
+                     excelDates: Boolean): (DataFrame, Option[(Seq[Column], Int)]) = {
+    val df = raw.df
+    val par = spark.sparkContext.defaultParallelism
+    val grain = Validator.typedGrain(df, source, excelDates)
+    val inFile = grain.filter { case (g, _) =>
+      source.columns.exists(c => c.name == g && df.columns.contains(c.fileAlias)) }
+    if (!ScanEstimate.isNarrow(spark, path, raw.footer.map(_.rowGroups))) (df, None)
+    else if (inFile.isEmpty) (df.repartition(par), None)
+    else raw.footer.flatMap(f =>
+        sink.firstPublishLayout(source.tableName, source, f.rows)) match {
+      case Some(layout) =>
+        val typed = grain.map(_._2)
+        (layout.withBucket(df, typed).repartition(layout.partitions, layout.keys(typed): _*),
+          Some((layout.keys(grain.map(g => col(g._1))), layout.partitions)))
+      case None =>
+        (df.repartition(par, inFile.map(_._2): _*), Some((inFile.map(g => col(g._1)), par)))
     }
   }
 

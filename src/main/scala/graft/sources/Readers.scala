@@ -16,9 +16,13 @@ import org.apache.spark.sql.types._
   * it when DLQ records actually need numbering. Readers whose options
   * already force numbering (CSV skip_rows) return a pre-numbered `df` and
   * an identity `numbered`.
+  *
+  * `footer` is a parquet file's footer as the reader read it, so later
+  * stages need not open it again.
   */
 final case class RawRead(df: DataFrame, startingRowNumber: Int,
-                         numbered: () => DataFrame)
+                         numbered: () => DataFrame,
+                         footer: Option[ParquetFooter] = None)
 
 /** File readers. Each returns the file's rows with *no type inference* —
   * CSV/Excel as all-strings, JSON flattened to scalars, Parquet native — so
@@ -210,7 +214,9 @@ object JsonFlatten {
 }
 
 /** Parquet reader (reference src/pipeline/read/parquet.py:31-86): native read
-  * + emptiness/schema checks.
+  * + emptiness/schema checks. Emptiness comes from the footer's row count
+  * (one small ranged read, no Spark job), and falls back to a one-row
+  * probe job when the footer cannot be read.
   */
 final class ParquetReader extends Reader {
   val sourceType = "parquet"
@@ -219,9 +225,11 @@ final class ParquetReader extends Reader {
     val fileName = FileUtils.bareName(path)
     val df = spark.read.parquet(path)
     if (df.schema.isEmpty) throw MissingHeaderError(fileName)
-    if (df.isEmpty) throw NoDataInFileError(fileName)
+    val footer = ScanEstimate.parquetFooter(
+      spark.sparkContext.hadoopConfiguration, new Path(path))
+    if (footer.fold(df.isEmpty)(_.rows == 0)) throw NoDataInFileError(fileName)
     val checked = checkColumns(df, source, fileName)
-    RawRead(checked, 1, () => Reader.withRowNumbers(checked, 1))
+    RawRead(checked, 1, () => Reader.withRowNumbers(checked, 1), footer)
   }
 }
 

@@ -52,6 +52,15 @@ trait Sink {
     * layout to outgrow. Returns the new bucket count when a fold ran.
     */
   def maybeRebucket(name: String, grain: Seq[String]): Option[Int] = None
+
+  /** The bucket layout a publish of `rows` staged rows into `name` will
+    * write when that publish is `name`'s first. A load that knows it
+    * before validating can bucket its rows at the fan-out and carry the
+    * layout's columns to the publish ([[BucketLayout]]). None for sinks
+    * without such a layout and for targets that already hold data.
+    */
+  def firstPublishLayout(name: String, source: SourceConfig,
+                         rows: Long): Option[BucketLayout] = None
 }
 
 object JdbcSink {

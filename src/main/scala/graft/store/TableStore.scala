@@ -4,7 +4,7 @@ import graft.core.SourceConfig
 import graft.operators.Publish
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, max_by, md5, pmod, struct, to_json, when, xxhash64}
+import org.apache.spark.sql.functions.{col, lit, max_by, md5, struct, to_json, when}
 import org.apache.spark.sql.types.StructType
 
 import java.nio.charset.StandardCharsets
@@ -428,7 +428,7 @@ final class TableStore(spark: SparkSession, root: String,
     currentManifest(name).map { m =>
       val n = m.numBuckets
       val touched = df
-        .select(pmod(xxhash64(grain.map(col): _*), lit(n.toLong)).as("_b"))
+        .select(BucketLayout.bucketOf(grain.map(col), n).as("_b"))
         .distinct().collect().map(_.getLong(0).toInt).toSet
       (n, touched)
     }
@@ -517,7 +517,7 @@ final class TableStore(spark: SparkSession, root: String,
     // below into an ambiguous self-join
     val k = keys.select(keyCols: _*).distinct().localCheckpoint()
     val touched = k
-      .select(pmod(xxhash64(grain.map(col): _*), lit(n.toLong)).as("_b"))
+      .select(BucketLayout.bucketOf(grain.map(col), n).as("_b"))
       .distinct().collect().map(_.getLong(0).toInt).toSet
     val paths = man.buckets.toSeq.sortBy(_._1).collect {
       case (b, v) if touched(b) => bucketDir(name, v, b).toString
@@ -673,7 +673,7 @@ final class TableStore(spark: SparkSession, root: String,
         bucketedPublish(name, stage, source, now, planned, stageRows)
       else {
         val existing = readIfExists(name)
-        val plan = Publish.mergePlan(stage,
+        val plan = Publish.mergePlan(BucketLayout.dropCarried(stage),
           existing.getOrElse(Publish.emptyTarget(spark, source)), source, now,
           targetKnownEmpty = existing.isEmpty)
         overwrite(name, plan.merged, source.targetPartitionBy)
@@ -709,7 +709,7 @@ final class TableStore(spark: SparkSession, root: String,
       else publishBuckets
     }
     def bucketOf(grain: Seq[String]): Column =
-      pmod(xxhash64(grain.map(col): _*), lit(n.toLong))
+      BucketLayout.bucketOf(grain.map(col), n)
 
     // One O(delta) pass: which buckets does this file's grain set reach?
     // Bounded by n small ints — never scales with the corpus. A first
@@ -805,6 +805,19 @@ final class TableStore(spark: SparkSession, root: String,
     (inserts, updates)
   }
 
+  /** The layout a first publish of `rows` staged rows into `name` will
+    * write, while `name` is an empty bucketed target of this store; None
+    * once it holds data or when its source declares hive partitioning.
+    */
+  override def firstPublishLayout(name: String, source: SourceConfig,
+                                  rows: Long): Option[BucketLayout] =
+    if (source.targetPartitionBy.nonEmpty || currentVersion(name).nonEmpty ||
+        segments(name).nonEmpty || upsertSegments(name).nonEmpty) None
+    else {
+      val n = chooseBucketCount(rows)
+      Some(BucketLayout.of(n, n, spark.sessionState.conf.numShufflePartitions))
+    }
+
   /** First-publish / rebucket sizing rule — see the `publishBuckets` doc. */
   private def chooseBucketCount(rows: Long): Int = {
     var b = math.min(16, publishBuckets)
@@ -817,28 +830,25 @@ final class TableStore(spark: SparkSession, root: String,
     * whatever `_bucket=K/` dirs the write produced on top of `carried`,
     * swap the pointer, fold `foldSegs`, vacuum.
     *
-    * The repartition bounds output files — `filesPerBucket` salt lanes give
-    * within-bucket write parallelism when the delta is huge (initial 100 TB
-    * load: shuffle-partition-many tasks, ~P/touched files per bucket)
-    * while a routine small publish collapses to one lane and at most
-    * min(P, touched) tasks. The salt hash is seeded differently from the
-    * bucket hash — an unseeded reuse would make salt a pure function of
-    * bucket (h mod fpb determined by h mod n when fpb | n) and kill the
-    * within-bucket split.
+    * The repartition bounds output files ([[BucketLayout.of]]): salt
+    * lanes give within-bucket write parallelism when the delta is huge
+    * (initial 100 TB load: shuffle-partition-many tasks, ~P/touched files
+    * per bucket) while a routine small publish collapses to one lane and
+    * at most min(P, touched) tasks. `_bucket` and the lane columns `out`
+    * carries from a load's fan-out are reused only when computed for this
+    * exact layout ([[BucketLayout.repartitioned]]); after a lost
+    * first-publish race, say, they are recomputed.
     */
   private def commitBucketedVersion(name: String, out: DataFrame,
       grain: Seq[String], n: Int, touchedCount: Int,
       carried: Map[Int, String], foldSegs: Seq[Path]): Unit = {
-    val p = spark.sessionState.conf.numShufflePartitions
-    val fpb = math.max(1, p / math.max(1, touchedCount))
-    val saltCols = lit("graft#salt") +: grain.map(col)
-    val salt = pmod(xxhash64(saltCols: _*), lit(fpb.toLong))
+    val layout = BucketLayout.of(n, touchedCount,
+      spark.sessionState.conf.numShufflePartitions)
     val version = s"v_${counter.incrementAndGet()}"
     val outDir = new Path(tableDir(name), version)
-    out.withColumn("_bucket",
-        pmod(xxhash64(grain.map(col): _*), lit(n.toLong)))
-      .repartition(math.min(p, touchedCount * fpb), col("_bucket"), salt)
-      .write.partitionBy("_bucket").mode("overwrite").parquet(outDir.toString)
+    BucketLayout.repartitioned(out, layout, grain)
+      .write.partitionBy(BucketLayout.BucketCol).mode("overwrite")
+      .parquet(outDir.toString)
 
     // Ground truth of what the new version owns = the bucket dirs the write
     // actually produced (an all-invalid file yields an empty delta and no

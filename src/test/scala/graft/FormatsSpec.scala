@@ -137,6 +137,34 @@ class FormatsSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(r.success && r.recordsRead == 2 && r.publishInserts == 2)
   }
 
+  test("Parquet: a zero-row file with a schema raises NoDataInFileError") {
+    val sp = spark
+    import sp.implicits._
+    val tmp = workDir.resolve("pq_empty").toString
+    Seq((10, "AC10")).toDF("entry_id", "account_code").limit(0)
+      .coalesce(1).write.parquet(tmp)
+    val part = Files.list(java.nio.file.Paths.get(tmp)).toArray
+      .map(_.toString).filter(_.endsWith(".parquet")).head
+    assert(ScanEstimate.parquetFooter(spark.sparkContext.hadoopConfiguration,
+      new org.apache.hadoop.fs.Path(part)).map(_.rows) == Some(0L))
+    val p = dropDir.resolve("ledger_empty.parquet")
+    Files.copy(java.nio.file.Paths.get(part), p)
+    val r = processor.processFile(p.toString).get
+    assert(!r.success && r.errorName.contains("NoDataInFileError"), r.toString)
+  }
+
+  test("Parquet: a corrupt file fails in the read stage with Spark's read error") {
+    val p = dropDir.resolve("ledger_corrupt.parquet")
+    Files.write(p, "this is not parquet".getBytes("UTF-8"))
+    val e = intercept[org.apache.spark.SparkException](processor.processFile(p.toString))
+    assert(e.getMessage.startsWith("Job aborted due to stage failure"), e.getMessage)
+    // the run logged its start and nothing after: the read stage failed
+    val stages = store.readIfExists(graft.store.Schemas.LogTable).get
+      .filter(col("source_filename") === "ledger_corrupt.parquet")
+      .select("stage").collect().map(_.getString(0)).toSeq
+    assert(stages == Seq("start"), stages.toString)
+  }
+
   test("ORC: native types end-to-end, validation failure DLQs, junk bytes fail cleanly") {
     val sp = spark
     import sp.implicits._

@@ -69,6 +69,17 @@ class HarnessSpec extends AnyFunSuite {
       s"take filesystems from the session's hadoop conf (path.getFileSystem): $offenders")
   }
 
+  test("one bridge file reaches Spark's sql-private planner API") {
+    val bridge = Paths.get("org", "apache", "spark", "sql", "MaterializedRows.scala")
+    val under = main.resolve(Paths.get("org", "apache", "spark"))
+    val inSparkPackage = Files.walk(under).iterator().asScala
+      .filter(Files.isRegularFile(_)).map(main.relativize(_).toString).toSeq
+    assert(inSparkPackage == Seq(bridge.toString),
+      s"only $bridge may live under $under: $inSparkPackage")
+    val offenders = callersBesides(main.resolve(bridge), "LogicalRDD", "classic.Dataset")
+    assert(offenders.isEmpty, s"go through $bridge: $offenders")
+  }
+
   test("Gauge.measured reports exactly the rows its block read") {
     val dir = Files.createTempDirectory("graft_gauge").resolve("t").toString
     spark.range(1000).coalesce(1).write.parquet(dir)

@@ -212,14 +212,18 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(!Files.exists(dropDir.resolve("unknown_stuff.csv")))
   }
 
-  test("processFile leaves no cached relation: clean file, DLQ rows below " +
-       "the threshold, and a file failing the gate") {
+  test("processFile leaves no cached relation or stored RDD: clean file, DLQ " +
+       "rows below the threshold, and a file failing the gate") {
     val cache = spark.sharedState.cacheManager
+    val sc = spark.sparkContext
+    // start clean of whatever earlier suites left
     spark.catalog.clearCache()
+    sc.getPersistentRDDs.values.foreach(_.unpersist())
     def leaves(name: String, lines: Seq[String])(expect: FileResult => Boolean): Unit = {
       val r = processor.processFile(dropFile(name, lines)).get
       assert(expect(r), s"$name: $r")
       assert(cache.isEmpty, s"$name left a cached relation")
+      assert(sc.getPersistentRDDs.isEmpty, s"$name left stored RDDs ${sc.getPersistentRDDs}")
     }
     leaves("sales_clean.csv", Seq(SalesHeader, salesRow("TXN001"), salesRow("TXN002"))) { r =>
       r.success && r.errorName.isEmpty && r.publishInserts == 2

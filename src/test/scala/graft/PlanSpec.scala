@@ -586,86 +586,93 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("validation cache holds only row-varying columns; release() uncaches it") {
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    def cached(df: DataFrame) =
-      spark.sessionState.executePlan(df.queryExecution.logical).withCachedData
-        .collect { case r: InMemoryRelation => r.output.map(_.name) }
+  test("validation materializes only row-varying columns; release() frees them") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    def stored(df: DataFrame) = df.queryExecution.logical.collect { case r: LogicalRDD => r }
+    val sc = spark.sparkContext
     val vr = Validator.validate(ordersRaw(50), OrdersSource, "orders_x.parquet", 42L)
-    try {
-      val cols = cached(vr.all)
-      assert(cols.size == 1, s"one cached relation, got $cols")
-      assert(cols.head.intersect(Seq("source_filename", "file_load_log_id",
-        "file_row_number")).isEmpty, s"per-file constant cached: ${cols.head}")
+    val rdd = try {
+      val rows = stored(vr.all)
+      assert(rows.size == 1, s"one set of materialized rows, got $rows")
+      val cols = rows.head.output.map(_.name)
+      assert(cols.intersect(Seq("source_filename", "file_load_log_id",
+        "file_row_number")).isEmpty, s"per-file constant materialized: $cols")
       assert(vr.all.select("source_filename", "file_load_log_id", "file_row_number")
         .distinct().collect().toSeq == Seq(Row("orders_x.parquet", 42L, -1L)))
       assert(vr.totalCount == 50 && vr.validCount == 50)
+      assert(sc.getPersistentRDDs.contains(rows.head.rdd.id), "rows not stored")
+      rows.head.rdd.id
     } finally vr.release()
-    assert(cached(vr.all).isEmpty, "release() must drop the cache entry")
+    assert(!sc.getPersistentRDDs.contains(rdd), "release() must free the stored rows")
   }
 
-  test("clean single-row-group parquet load: at most 13 Spark jobs, grain " +
-       "audit aggregates the cached stage with no Exchange") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.SparkPlanInfo
-    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+  test("materialized validation rows whose blocks are lost are recomputed") {
+    // a lost executor drops its blocks; the rows keep their lineage, so a
+    // read recomputes them (a truncated local checkpoint fails instead)
+    import org.apache.spark.sql.execution.LogicalRDD
+    val vr = Validator.validate(ordersRaw(50), OrdersSource, "orders_x.parquet", 42L)
+    try {
+      val rdd = vr.all.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }.get
+      rdd.unpersist(blocking = true)
+      assert(vr.all.count() == 50 && vr.valid.count() == 50 && vr.dlq.count() == 0)
+    } finally vr.release()
+  }
+
+  /** One load of a copy of `src` named `name` through a fresh Processor
+    * over `sources`, into an empty warehouse, with what its jobs did.
+    */
+  private def tracedLoad(work: java.nio.file.Path, src: java.nio.file.Path, name: String,
+                         sources: Seq[graft.core.SourceConfig])
+      : (graft.run.FileResult, PlanCapture) = {
+    val drop = java.nio.file.Files.createDirectories(work.resolve("drop"))
+    val f = java.nio.file.Files.copy(src, drop.resolve(name))
+    val proc = new graft.run.Processor(spark, new graft.core.SourceRegistry(sources),
+      new graft.store.TableStore(spark, work.resolve(s"wh_$name").toString),
+      new graft.run.FileOps(spark.sparkContext.hadoopConfiguration,
+        work.resolve("archive").toString, work.resolve("dup").toString),
+      new graft.run.CollectingNotifier, drop.toString)
+    PlanCapture(spark)(proc.processFile(f.toString).get)
+  }
+
+  /** The grain audit's plans: the audit plans ending in the top-5 sort. */
+  private def grainAuditPlans(c: PlanCapture): Seq[Seq[String]] =
+    c.nodesOf("pipeline:audit").filter(_.exists(_.startsWith("TakeOrderedAndProject")))
+
+  test("clean single-row-group parquet load: at most 9 Spark jobs, grain " +
+       "audit and publish write plan no Exchange") {
     val work = java.nio.file.Files.createTempDirectory("graft_budget")
     ordersRaw(2000).coalesce(1).write.parquet(work.resolve("src").toString)
     val part = java.nio.file.Files.list(work.resolve("src")).toArray
       .map(_.asInstanceOf[java.nio.file.Path])
       .find(_.getFileName.toString.endsWith(".parquet")).get
-    val drop = java.nio.file.Files.createDirectories(work.resolve("drop"))
-    def load(name: String) = {
-      val f = java.nio.file.Files.copy(part, drop.resolve(name))
-      new graft.run.Processor(spark, new graft.core.SourceRegistry(Seq(OrdersSource)),
-        new graft.store.TableStore(spark, work.resolve(s"wh_$name").toString),
-        new graft.run.FileOps(spark.sparkContext.hadoopConfiguration,
-          work.resolve("archive").toString, work.resolve("dup").toString),
-        new graft.run.CollectingNotifier, drop.toString).processFile(f.toString).get
-    }
-    assert(load("orders_warm.parquet").success)
+    assert(tracedLoad(work, part, "orders_warm.parquet", Seq(OrdersSource))._1.success)
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val barrier = new java.util.concurrent.CountDownLatch(1)
-    val auditPlans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlanInfo]
-    val auditExecs = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties.getProperty("spark.jobGroup.id")) match {
-          case Some("budget") => jobs.incrementAndGet()
-          case Some("budget-barrier") => barrier.countDown()
-          case _ =>
-        }
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart if s.description.startsWith("pipeline:audit") =>
-          auditExecs.add(s.executionId)
-          auditPlans.add(s.sparkPlanInfo)
-        case u: SparkListenerSQLAdaptiveExecutionUpdate if auditExecs.contains(u.executionId) =>
-          auditPlans.add(u.sparkPlanInfo)
-        case _ =>
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("budget", "clean load")
-      val r = try load("orders_budget.parquet") finally sc.clearJobGroup()
-      assert(r.success && r.errorName.isEmpty && r.publishInserts == 2000, r.toString)
-      // listener events arrive in order: once the barrier job is seen, so
-      // is every job of the load
-      sc.setJobGroup("budget-barrier", "barrier")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      assert(barrier.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get() <= 13, s"a clean load submitted ${jobs.get()} Spark jobs")
+    val (r, c) = tracedLoad(work, part, "orders_budget.parquet", Seq(OrdersSource))
+    assert(r.success && r.errorName.isEmpty && r.publishInserts == 2000, r.toString)
+    assert(c.jobs.size <= 9, s"a clean load submitted ${c.jobs.size} Spark jobs: ${c.jobSummary}")
 
-    // nodes above the cached stage (a cache scan's child is the cached plan)
-    def aboveCache(p: SparkPlanInfo): Seq[String] =
-      p.nodeName +: (if (p.nodeName == "InMemoryTableScan") Nil
-                     else p.children.toSeq.flatMap(aboveCache))
-    import scala.jdk.CollectionConverters._
-    val grain = auditPlans.asScala.toSeq.map(aboveCache)
-      .filter(_.exists(_.startsWith("TakeOrderedAndProject")))
+    val grain = grainAuditPlans(c)
+    assert(grain.nonEmpty, "grain audit plan not seen")
+    grain.foreach(nodes => assert(!nodes.exists(_.contains("Exchange")),
+      s"grain audit shuffles: ${nodes.mkString(" > ")}"))
+    val publish = c.nodesOf("pipeline:publish")
+    assert(publish.exists(_.exists(_.contains("InsertIntoHadoopFsRelationCommand"))),
+      s"publish write plan not seen: $publish")
+    publish.foreach(nodes => assert(!nodes.exists(_.contains("Exchange")),
+      s"publish shuffles: ${nodes.mkString(" > ")}"))
+  }
+
+  test("clean CSV load: the grain audit aggregates the typed-grain fan-out " +
+       "with no Exchange") {
+    // the grain passes through a cleaner, so it differs from its file column
+    val trimmed = TestSources.salesCsv.copy(columns = TestSources.transactions.map(c =>
+      if (c.name == "transaction_id") c.copy(cleaners = Seq(trim(_))) else c))
+    val work = java.nio.file.Files.createTempDirectory("graft_budget_csv")
+    val src = java.nio.file.Paths.get(TestSources.writeText(work, "src.csv",
+      TestSources.SalesHeader +: (1 to 200).map(i => TestSources.salesRow(f" TXN$i%04d "))))
+    val (r, c) = tracedLoad(work, src, "sales_budget.csv", Seq(trimmed))
+    assert(r.success && r.errorName.isEmpty && r.publishInserts == 200, r.toString)
+    val grain = grainAuditPlans(c)
     assert(grain.nonEmpty, "grain audit plan not seen")
     grain.foreach(nodes => assert(!nodes.exists(_.contains("Exchange")),
       s"grain audit shuffles: ${nodes.mkString(" > ")}"))
