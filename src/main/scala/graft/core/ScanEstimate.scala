@@ -2,7 +2,15 @@ package graft.core
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** What a parquet file's footer says of it: its exact row count and its
   * row-group count.
@@ -79,10 +87,34 @@ object ScanEstimate {
     * orchestration error handling in the read stage where it belongs).
     */
   def parquetFooter(conf: Configuration, file: Path): Option[ParquetFooter] =
+    readFooter(conf, file)(footerOf)
+
+  /** [[parquetFooter]] with the schema `spark.read.parquet` would infer
+    * for `file` alone, from the same footer read and by the same rule:
+    * Spark's row metadata when the writer left it, else the parquet
+    * schema converted under the session's settings. Spark's inference
+    * reads the footer in a Spark job; this one reads it on the driver.
+    * None when the footer cannot be read or its schema cannot be
+    * converted (say, nanosecond timestamps without
+    * `spark.sql.legacy.parquet.nanosAsLong`); the caller's own
+    * `spark.read.parquet` then raises Spark's error for it.
+    */
+  def parquetFooterWithSchema(spark: SparkSession,
+                              file: Path): Option[(ParquetFooter, StructType)] = {
+    val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    readFooter(spark.sparkContext.hadoopConfiguration, file) { m =>
+      (footerOf(m), ParquetFileFormat.readSchemaFromFooter(new Footer(file, m), converter))
+    }
+  }
+
+  private def footerOf(m: ParquetMetadata): ParquetFooter = {
+    val groups = m.getBlocks.asScala
+    ParquetFooter(groups.iterator.map(_.getRowCount).sum, groups.size.toLong)
+  }
+
+  private def readFooter[T](conf: Configuration, file: Path)(f: ParquetMetadata => T): Option[T] =
     try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try Some(ParquetFooter(reader.getRecordCount, reader.getRowGroups.size.toLong))
-      finally reader.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+      try Some(f(reader.getFooter)) finally reader.close()
+    } catch { case NonFatal(_) => None }
 }

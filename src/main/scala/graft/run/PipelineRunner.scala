@@ -50,8 +50,8 @@ final class PipelineRunner(
     val fileName = FileUtils.bareName(path)
     val logId = store.nextId()
     // Per-stage log events buffer on the driver and flush as ONE segment
-    // append per file — per-event table writes would add a Spark job per
-    // stage (and at scale, a quadratic log-rewrite; see TableStore.append).
+    // per file, written on the driver with no Spark job: a segment per
+    // event would make every log read list and open one file per stage.
     logBuffer.set(Vector.empty)
     log(logId, fileName, Some(source.tableName), "start", success = None)
     // Only delete the drop file once a copy exists elsewhere: an engine /
@@ -99,7 +99,7 @@ final class PipelineRunner(
     * the difference between O(files-loaded) and O(data).
     */
   private def checkDuplicate(fileName: String, source: SourceConfig): Unit = {
-    val sidecar = s"${source.tableName}__filenames"
+    val sidecar = Schemas.sidecarTable(source.tableName)
     val names =
       if (store.exists(sidecar)) store.readIfExists(sidecar)
         .map(_.select("source_filename"))
@@ -113,7 +113,7 @@ final class PipelineRunner(
 
   private def runStages(path: String, fileName: String, source: SourceConfig,
                         logId: Long): FileResult = {
-    val sidecar = s"${source.tableName}__filenames"
+    val sidecar = Schemas.sidecarTable(source.tableName)
     val reader = ReaderFactory.readerFor(fileName)
     val raw = Trace.stage(spark, "read", s"pipeline:read $fileName",
       "file" -> fileName)(reader.read(spark, path, source))
@@ -188,18 +188,14 @@ final class PipelineRunner(
           // detected as duplicates once the sidecar appears
           if (!store.exists(sidecar)) sink.readIfExists(source.tableName).foreach { t =>
             store.append(sidecar, t.select(col("source_filename")).distinct()
-              .withColumn("file_load_log_id", lit(-1L))
-              .withColumn("published_at", lit(now)))
+              .select(col("source_filename"), lit(-1L).as("file_load_log_id"),
+                lit(now).as("published_at"))
+              .to(Schemas.SidecarSchema))
           }
           val counts = sink.publish(source.tableName, stage, source, now,
             stageRows = Some(vr.validCount))
           // record the filename in the probe sidecar (atomic segment append)
-          val sp = spark
-          import sp.implicits._
-          Trace.withJobDesc(spark, s"pipeline:sidecar-append ${source.tableName}") {
-            store.append(sidecar, Seq((fileName, logId, now))
-              .toDF("source_filename", "file_load_log_id", "published_at"))
-          }
+          store.appendRows(sidecar, Schemas.SidecarSchema, Seq(Row(fileName, logId, now)))
           counts
         }
       }
@@ -318,13 +314,7 @@ final class PipelineRunner(
   private def flushLog(): Unit = {
     val rows = logBuffer.get()
     if (rows.nonEmpty) {
-      import scala.jdk.CollectionConverters._
-      Trace.withJobDesc(spark, "pipeline:log-append") {
-        // a handful of driver rows: one task and one part file, not one
-        // per core (a local relation splits into defaultParallelism tasks)
-        store.append(Schemas.LogTable,
-          spark.createDataFrame(rows.asJava, Schemas.LogSchema).coalesce(1))
-      }
+      store.appendRows(Schemas.LogTable, Schemas.LogSchema, rows)
       logBuffer.set(Vector.empty)
     }
   }

@@ -2,7 +2,7 @@ package graft.run
 
 import graft.core.{FileUtils, SourceConfig, SourceRegistry}
 import org.apache.spark.sql.SparkSession
-import graft.store.TableStore
+import graft.store.{Schemas, TableStore}
 
 import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
 import scala.collection.mutable
@@ -95,7 +95,7 @@ final class Processor(
     // loaded). Concurrent-append safe; see TableStore.compact.
     store.compact(graft.store.Schemas.LogTable)
     store.compact(graft.store.Schemas.DlqTable)
-    registry.all.foreach(s => store.compact(s"${s.tableName}__filenames"))
+    registry.all.foreach(s => store.compact(Schemas.sidecarTable(s.tableName)))
 
     import scala.jdk.CollectionConverters._
     val all = results.asScala.toSeq

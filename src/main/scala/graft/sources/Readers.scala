@@ -214,22 +214,24 @@ object JsonFlatten {
 }
 
 /** Parquet reader (reference src/pipeline/read/parquet.py:31-86): native read
-  * + emptiness/schema checks. Emptiness comes from the footer's row count
-  * (one small ranged read, no Spark job), and falls back to a one-row
-  * probe job when the footer cannot be read.
+  * + emptiness/schema checks. The footer, one small ranged read on the
+  * driver, gives the schema Spark would infer, so the read plans no
+  * inference job, and the row count, so emptiness needs no probe job. A
+  * footer that cannot be read leaves both to Spark (`spark.read.parquet`
+  * and a one-row probe), which then raises its own error for the file.
   */
 final class ParquetReader extends Reader {
   val sourceType = "parquet"
 
   def read(spark: SparkSession, path: String, source: SourceConfig): RawRead = {
     val fileName = FileUtils.bareName(path)
-    val df = spark.read.parquet(path)
+    val footer = ScanEstimate.parquetFooterWithSchema(spark, new Path(path))
+    val df = footer.fold(spark.read.parquet(path)) { case (_, schema) =>
+      spark.read.schema(schema).parquet(path) }
     if (df.schema.isEmpty) throw MissingHeaderError(fileName)
-    val footer = ScanEstimate.parquetFooter(
-      spark.sparkContext.hadoopConfiguration, new Path(path))
-    if (footer.fold(df.isEmpty)(_.rows == 0)) throw NoDataInFileError(fileName)
+    if (footer.fold(df.isEmpty)(_._1.rows == 0)) throw NoDataInFileError(fileName)
     val checked = checkColumns(df, source, fileName)
-    RawRead(checked, 1, () => Reader.withRowNumbers(checked, 1), footer)
+    RawRead(checked, 1, () => Reader.withRowNumbers(checked, 1), footer.map(_._1))
   }
 }
 

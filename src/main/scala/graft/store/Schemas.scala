@@ -50,4 +50,16 @@ object Schemas {
     StructField("error_message", StringType, nullable = true)))
 
   val LogTable = "file_load_log"
+
+  /** A target's filename sidecar: one row per file published into it, the
+    * duplicate probe's index. Filenames backfilled from a target loaded
+    * before its sidecar existed carry log id -1; their name column comes
+    * from a parquet read, hence nullable.
+    */
+  val SidecarSchema: StructType = StructType(Seq(
+    StructField("source_filename", StringType, nullable = true),
+    StructField("file_load_log_id", LongType, nullable = false),
+    StructField("published_at", TimestampType, nullable = false)))
+
+  def sidecarTable(target: String): String = s"${target}__filenames"
 }

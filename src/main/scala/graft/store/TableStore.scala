@@ -3,7 +3,11 @@ package graft.store
 import graft.core.SourceConfig
 import graft.operators.Publish
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
 import org.apache.spark.sql.functions.{col, lit, max_by, md5, struct, to_json, when}
 import org.apache.spark.sql.types.StructType
 
@@ -148,7 +152,7 @@ final class TableStore(spark: SparkSession, root: String,
     */
   private def segments(name: String): Seq[Path] = {
     val retired = readRetired(name)
-    listSegDirs(name, "seg_").filterNot(p => retired(p.getName))
+    listSegDirs(name, SegPrefix).filterNot(p => retired(p.getName))
   }
 
   /** Committed LIVE merge-on-read upsert segments (useg_<id>), generation
@@ -222,6 +226,7 @@ final class TableStore(spark: SparkSession, root: String,
 
   private val ManifestFile = "_MANIFEST"
   private val BucketPrefix = "_bucket="
+  private val SegPrefix = "seg_"
   private val UsegPrefix = "useg_"
   private val GrainFile = "_GRAIN"
 
@@ -398,7 +403,7 @@ final class TableStore(spark: SparkSession, root: String,
         m.buckets.toSeq.sortBy(_._1).map { case (b, v) => bucketDir(name, v, b) }
       case None => cur.map(v => new Path(tableDir(name), v)).toSeq
     }
-    val segs = listSegDirs(name, "seg_").filterNot(p => retired(p.getName))
+    val segs = listSegDirs(name, SegPrefix).filterNot(p => retired(p.getName))
     val paths = (base ++ segs).map(_.toString)
     val usegs = listSegDirs(name, UsegPrefix)
       .filterNot(p => retired(p.getName))
@@ -781,18 +786,11 @@ final class TableStore(spark: SparkSession, root: String,
     val (inserts, updates) = Publish.counts(stage, curKv, grain)
 
     writeGrain(name, grain)
-    // never reuse a name the retired list still carries (see append)
-    val retired = readRetired(name)
-    var id = counter.incrementAndGet()
-    while (retired(s"$UsegPrefix$id")) id = counter.incrementAndGet()
-    val dir = tableDir(name)
-    val f = fs(dir)
-    val tmp = new Path(dir, s".tmp_$UsegPrefix$id")
-    stage.select(Publish.dataCols(source).map(col): _*)
-      .withColumn("etl_load_ts", lit(now))
-      .write.mode("overwrite").parquet(tmp.toString)
-    if (!f.rename(tmp, new Path(dir, s"$UsegPrefix$id")))
-      throw new java.io.IOException(s"upsert segment commit failed for $name")
+    commitSegment(name, UsegPrefix) { tmp =>
+      stage.select(Publish.dataCols(source).map(col): _*)
+        .withColumn("etl_load_ts", lit(now))
+        .write.mode("overwrite").parquet(tmp.toString)
+    }
 
     if (usegsNow.size + 1 >= morCompactSegments) {
       val resolved = readIfExists(name)
@@ -963,20 +961,48 @@ final class TableStore(spark: SparkSession, root: String,
     * Readers union the current version with all committed segments;
     * [[overwrite]] compacts segments away.
     */
-  def append(name: String, df: DataFrame): Unit = {
+  def append(name: String, df: DataFrame): Unit =
+    commitSegment(name, SegPrefix)(tmp => df.write.mode("overwrite").parquet(tmp.toString))
+
+  /** [[append]] of rows the driver holds (a file's run-log events, one
+    * sidecar row), written as one parquet file by Spark's own parquet
+    * writer on the driver: the data file a one-partition `df.write` would
+    * write for `schema` (Spark's row metadata, the session's codec and
+    * timestamp type), with no Spark job, and committed the same way. The
+    * writer factory is Spark-internal API; HarnessSpec keeps it here.
+    */
+  def appendRows(name: String, schema: StructType, rows: Seq[Row]): Unit =
+    commitSegment(name, SegPrefix) { tmp =>
+      val sqlConf = spark.sessionState.conf
+      val job = Job.getInstance(conf)
+      val factory = ParquetUtils.prepareWrite(sqlConf, job, schema,
+        new ParquetOptions(Map.empty[String, String], sqlConf))
+      val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+      val file = new Path(tmp,
+        s"part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}")
+      val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
+      val writer = factory.newInstance(file.toString, schema, ctx)
+      try rows.foreach(r => writer.write(toInternal(r).asInstanceOf[InternalRow]))
+      finally writer.close()
+    }
+
+  /** The segment commit both appends and the merge-on-read publish use:
+    * claim an id, let `write` fill `.tmp_<prefix><id>`, then make it
+    * visible as `<prefix><id>` with one atomic rename. A name the
+    * pointer's retired list still carries is never reused — the lister
+    * would hide the new segment as "folded". The millis-seeded counter
+    * makes collisions vanishingly rare; this makes them impossible.
+    */
+  private def commitSegment(name: String, prefix: String)(write: Path => Unit): Unit = {
     val dir = tableDir(name)
     val f = fs(dir)
     f.mkdirs(dir)
-    // a name the pointer's retired list still carries must never be
-    // reused — the lister would hide the new segment as "folded". The
-    // millis-seeded counter makes collisions vanishingly rare; this makes
-    // them impossible.
     val retired = readRetired(name)
     var id = counter.incrementAndGet()
-    while (retired(s"seg_$id")) id = counter.incrementAndGet()
-    val tmp = new Path(dir, s".tmp_seg_$id")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    if (!f.rename(tmp, new Path(dir, s"seg_$id")))
+    while (retired(s"$prefix$id")) id = counter.incrementAndGet()
+    val tmp = new Path(dir, s".tmp_$prefix$id")
+    write(tmp)
+    if (!f.rename(tmp, new Path(dir, s"$prefix$id")))
       throw new java.io.IOException(s"segment commit failed for $name")
   }
 

@@ -151,6 +151,82 @@ class FormatsSpec extends AnyFunSuite with BeforeAndAfterEach {
     Files.copy(java.nio.file.Paths.get(part), p)
     val r = processor.processFile(p.toString).get
     assert(!r.success && r.errorName.contains("NoDataInFileError"), r.toString)
+    val events = store.readIfExists(graft.store.Schemas.LogTable).get
+      .filter(col("source_filename") === "ledger_empty.parquet")
+      .select("stage", "error_name").collect().map(x => (x.getString(0), x.getString(1))).toSeq
+    assert(events == Seq(("start", null), ("error", "NoDataInFileError")), events.toString)
+  }
+
+  test("Parquet: the footer gives the schema spark.read.parquet infers") {
+    import org.apache.hadoop.fs.{Path => HPath}
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val conf = spark.sparkContext.hadoopConfiguration
+    def footerSchema(p: String) =
+      ScanEstimate.parquetFooterWithSchema(spark, new HPath(p)).map(_._2)
+    // what the reader reads with the footer's schema is what Spark's
+    // inference reads: same schema, same rows
+    def sameAsInferred(p: String): Unit = {
+      val s = footerSchema(p)
+      assert(s.isDefined, s"footer schema unreadable: $p")
+      val (given, inferred) = (spark.read.schema(s.get).parquet(p), spark.read.parquet(p))
+      assert(given.schema == inferred.schema)
+      assert(given.collect().toSeq == inferred.collect().toSeq)
+    }
+
+    // written by Spark: carries Spark's row metadata
+    val tmp = workDir.resolve("pq_meta").toString
+    spark.range(3).select(col("id"),
+      col("id").cast("decimal(38,18)").as("big_dec"),
+      (col("id") / 4).cast("decimal(9,2)").as("small_dec"),
+      col("id").cast("string").as("name"),
+      lit(java.sql.Timestamp.valueOf("2025-01-02 03:04:05.123456")).as("ts"),
+      lit(java.sql.Date.valueOf("2025-01-02")).as("d"))
+      .coalesce(1).write.parquet(tmp)
+    val withMeta = Files.list(java.nio.file.Paths.get(tmp)).toArray
+      .map(_.toString).filter(_.endsWith(".parquet")).head
+    sameAsInferred(withMeta)
+
+    // written by plain parquet-mr: no Spark metadata, schema converted
+    def write(name: String, schema: String)(fill: org.apache.parquet.example.data.Group => Unit) = {
+      val p = workDir.resolve(name).toString
+      val t = MessageTypeParser.parseMessageType(schema)
+      val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(new HPath(p), conf))
+        .withType(t).withConf(conf).build()
+      try (1 to 2).foreach { i =>
+        val g = new SimpleGroupFactory(t).newGroup()
+        fill(g.append("id", i.toLong))
+        w.write(g)
+      } finally w.close()
+      p
+    }
+    val plain = write("plain.parquet",
+      """message m { required int64 id; optional binary name (STRING);
+        |  optional int32 small_dec (DECIMAL(9,2)); optional int64 dec18 (DECIMAL(18,4));
+        |  optional int64 ts (TIMESTAMP(MICROS,true)); optional int32 d (DATE); }""".stripMargin) {
+      g => g.append("name", "n").append("small_dec", 12345).append("dec18", 987654321L)
+        .append("ts", 1700000000123456L).append("d", 20000)
+    }
+    sameAsInferred(plain)
+
+    val nanos = write("nanos.parquet",
+      "message m { required int64 id; optional int64 ts (TIMESTAMP(NANOS,true)); }") {
+      g => g.append("ts", 1700000000123456789L)
+    }
+    // the session reads nanosecond timestamps as longs
+    val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+    assert(spark.conf.get(nanosAsLong) == "true")
+    assert(footerSchema(nanos).exists(_("ts").dataType == org.apache.spark.sql.types.LongType))
+    sameAsInferred(nanos)
+    // without the flag the type is unconvertible: no footer schema, and the
+    // reader's fallback raises Spark's own error
+    spark.conf.set(nanosAsLong, "false")
+    try {
+      assert(footerSchema(nanos).isEmpty)
+      intercept[org.apache.spark.sql.AnalysisException](spark.read.parquet(nanos))
+    } finally spark.conf.set(nanosAsLong, "true")
   }
 
   test("Parquet: a corrupt file fails in the read stage with Spark's read error") {

@@ -80,6 +80,18 @@ class HarnessSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"go through $bridge: $offenders")
   }
 
+  test("Spark's parquet writer and footer-schema internals each have one caller") {
+    val writer = callersBesides(
+      main.resolve(Paths.get("graft", "store", "TableStore.scala")),
+      "ParquetUtils.prepareWrite", "OutputWriterFactory")
+    assert(writer.isEmpty, s"write driver-side rows through TableStore.appendRows: $writer")
+    val footer = callersBesides(
+      main.resolve(Paths.get("graft", "core", "ScanEstimate.scala")),
+      "readSchemaFromFooter")
+    assert(footer.isEmpty,
+      s"read a footer's schema through ScanEstimate.parquetFooterWithSchema: $footer")
+  }
+
   test("Gauge.measured reports exactly the rows its block read") {
     val dir = Files.createTempDirectory("graft_gauge").resolve("t").toString
     spark.range(1000).coalesce(1).write.parquet(dir)

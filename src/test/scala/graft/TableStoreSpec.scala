@@ -1,12 +1,13 @@
 package graft
 
 import graft.core.{ColumnSpec, SourceConfig}
-import graft.store.TableStore
-import org.apache.spark.sql.DataFrame
+import graft.store.{Schemas, TableStore}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Direct contract tests for the versioned table store: pointer swaps,
   * segment appends, compaction, vacuum, and lock-serialized overwrites.
@@ -80,6 +81,58 @@ class TableStoreSpec extends AnyFunSuite {
       "a frame-memo overflow must not cost the schemas' footer passes")
     assert(store.readIfExists("t").get.collect().map(_.getLong(0)).sorted
       .sameElements(Array(1L, 2L)))
+  }
+
+  test("appendRows writes the segment an append of the same rows writes; " +
+       "neither reuses a retired segment name") {
+    val (store, root) = mkStore()
+    val rows = Seq(
+      Row(7L, "a.csv", "t", "start", new java.sql.Timestamp(1000L),
+        null, null, null, null, null, null, null, null),
+      Row(7L, "a.csv", null, "complete", new java.sql.Timestamp(2001L),
+        true, 5L, 5L, 1L, 3L, 1L, null, null),
+      Row(8L, "b.csv", "t", "error", new java.sql.Timestamp(-1000L),
+        false, null, null, null, null, null, "NoDataInFileError", "no rows"))
+    val empty = spark.createDataFrame(java.util.List.of[Row](), Schemas.LogSchema)
+    // the next three ids each table would claim are retired: a segment
+    // under one of those names would be hidden from readers
+    def retireNext(t: String): Set[String] = {
+      store.overwrite(t, empty)
+      val pointer = root.resolve(t).resolve("_VERSION")
+      val next = store.nextId()
+      val retired = (next + 1 to next + 3).map(i => s"seg_$i").toSet
+      Files.writeString(pointer, (Files.readString(pointer).trim +: retired.toSeq)
+        .mkString("\n"))
+      Files.deleteIfExists(pointer.resolveSibling("._VERSION.crc"))
+      retired
+    }
+    val retiredA = retireNext("a")
+    store.append("a", spark.createDataFrame(rows.asJava, Schemas.LogSchema).coalesce(1))
+    val retiredR = retireNext("r")
+    store.appendRows("r", Schemas.LogSchema, rows)
+
+    def segFiles(t: String): Seq[java.nio.file.Path] = {
+      val s = Files.walk(root.resolve(t))
+      try s.toArray.map(_.asInstanceOf[java.nio.file.Path]).toSeq
+        .filter(p => p.getFileName.toString.endsWith(".parquet") &&
+          p.getParent.getFileName.toString.startsWith("seg_"))
+      finally s.close()
+    }
+    val (segA, segR) = (segFiles("a"), segFiles("r"))
+    assert(segA.size == 1 && segR.size == 1, s"$segA $segR")
+    assert(!retiredA(segA.head.getParent.getFileName.toString))
+    assert(!retiredR(segR.head.getParent.getFileName.toString))
+
+    val (a, r) = (store.readIfExists("a").get, store.readIfExists("r").get)
+    assert(a.schema == r.schema)
+    def sorted(df: DataFrame) = df.orderBy("file_load_log_id", "event_time").collect().toSeq
+    assert(sorted(r) == rows.sortBy(x => (x.getLong(0), x.getTimestamp(4).getTime)))
+    assert(sorted(a) == sorted(r))
+    // the files declare the same schema, nullability included
+    def declared(p: java.nio.file.Path) = graft.core.ScanEstimate.parquetFooterWithSchema(
+      spark, new org.apache.hadoop.fs.Path(p.toString)).map(_._2)
+    assert(declared(segR.head) == Some(Schemas.LogSchema))
+    assert(declared(segA.head) == declared(segR.head))
   }
 
   test("withTableLock serializes read-modify-write cycles") {
@@ -214,6 +267,24 @@ class TableStoreSpec extends AnyFunSuite {
       new java.sql.Timestamp(3000L))
     assert(c3 == ((0L, 0L)))
     assert(store.readIfExists("bt").get.count() == 201)
+  }
+
+  test("a first publish of an empty stage with a projection above its " +
+       "repartition counts 0 inserts") {
+    val root = Files.createTempDirectory("graft_store")
+    val store = new TableStore(spark, root.toString)
+    // a stage read from disk and filtered at run time to no rows, bucketed
+    // for the first-publish layout, with a column dropped after the
+    // repartition
+    val src = root.resolve("src").toString
+    stageDf(1L -> "a", 2L -> "b").withColumn("extra", lit(1)).write.parquet(src)
+    val layout = store.firstPublishLayout("bt", btSource, 0L).get
+    val g = Seq(col("id"))
+    val stage = layout.withBucket(spark.read.parquet(src).filter(col("id") < 0), g)
+      .repartition(layout.partitions, layout.keys(g): _*).drop("extra")
+    assert(store.publish("bt", stage, btSource, new java.sql.Timestamp(1000L),
+      stageRows = Some(0L), epoch = None) == ((0L, 0L)))
+    assert(store.readIfExists("bt").forall(_.isEmpty))
   }
 
   test("bucketed merge adopts a legacy (unbucketed) target via one-time migration") {
