@@ -261,15 +261,14 @@ object Bench {
     val contended = spreadP90 > SpreadBound ||
       loadStart > cores.toDouble / 2 || inflated
     // the probe decision ledger (round 18): which pruning arm each
-    // persisted-index probe actually ran — seam, dir bytes, verdict,
-    // literal count — so a driver-environment wall discrepancy names its
+    // persisted-index probe actually ran — dir bytes, verdict, literal
+    // count — so a driver-environment wall discrepancy names its
     // arm in the artifact itself instead of needing a rebuild-and-guess
     // (the r16/r17 decontam_index_probe 58x gap was unadjudicable for
     // two rounds for want of exactly this)
-    // keys derive from filesystem paths and values embed the
-    // GRAFT_CHUNKED_PROBE env value verbatim — escape JSON string
-    // metacharacters so an unusual path or seam value can never yield an
-    // invalid bench artifact
+    // keys derive from filesystem paths — escape JSON string
+    // metacharacters so an unusual path can never yield an invalid bench
+    // artifact
     def jstr(s: String): String = "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"

@@ -49,9 +49,8 @@ object Audit {
     * properties are inheritable thread-locals captured when a pool
     * thread is FIRST CREATED, so a reused cached-pool thread would
     * otherwise label these jobs with whatever it inherited at birth —
-    * mislabeling per-job listener output (the tools' `GRAFT_JOB_ROWS`
-    * attribution, the bench ledger) and detaching the jobs from a
-    * caller-side cancelJobGroup.
+    * mislabeling per-job listener output (the bench ledger) and
+    * detaching the jobs from a caller-side cancelJobGroup.
     *
     * This is the pipeline's crash-isolation-preserving concurrency
     * primitive: it overlaps INDEPENDENT jobs without merging their

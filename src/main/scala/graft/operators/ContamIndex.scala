@@ -303,17 +303,17 @@ object ContamIndex {
         // release loop's accretion step carried a per-micro-batch read
         // term that grew with the corpus (measured in the bench notes).
         val hKeys = hashed.select(col("h"), hp(col("h")).as("p"))
-          .distinct().limit(KeyProbe.chunkBound + 1).collect()
+          .distinct().limit(KeyProbe.ChunkedKeyLiterals + 1).collect()
         if (hKeys.isEmpty) return // empty batch
         val hps =
-          if (hKeys.length > KeyProbe.chunkBound)
+          if (hKeys.length > KeyProbe.ChunkedKeyLiterals)
             hashed.select(hp(col("h")).as("p")).distinct()
               .collect().map(_.getInt(0)).toSeq
           else hKeys.map(_.getInt(1)).distinct.toSeq
         val reg0 = spark.read.parquet(offeredDir)
           .filter(col("hp").isin(hps: _*))
         val reg =
-          if (hKeys.length > KeyProbe.chunkBound) reg0
+          if (hKeys.length > KeyProbe.ChunkedKeyLiterals) reg0
           else KeyProbe.keyFiltered(reg0, "h",
             hKeys.map(_.getString(0)).sorted.toSeq, offeredDir)
         hashed.join(reg.select("h"), Seq("h"), "left_anti")
@@ -345,9 +345,9 @@ object ContamIndex {
       val gKeys =
         if (pushGramLits)
           dfRows.select(col("id"), gp(col("id")).as("p"))
-            .limit(KeyProbe.chunkBound + 1).collect()
+            .limit(KeyProbe.ChunkedKeyLiterals + 1).collect()
         else Array.empty[org.apache.spark.sql.Row]
-      val overCap = gKeys.length > KeyProbe.chunkBound
+      val overCap = gKeys.length > KeyProbe.ChunkedKeyLiterals
       val gps =
         if (!pushGramLits) Seq.empty[Int]
         else if (overCap)
@@ -500,9 +500,9 @@ object ContamIndex {
     val gKeys =
       if (pushGramLits)
         bGrams.select(col("id"), gp(col("id")).as("p")).distinct()
-          .limit(KeyProbe.chunkBound + 1).collect()
+          .limit(KeyProbe.ChunkedKeyLiterals + 1).collect()
       else Array.empty[org.apache.spark.sql.Row]
-    val overCap = gKeys.length > KeyProbe.chunkBound
+    val overCap = gKeys.length > KeyProbe.ChunkedKeyLiterals
     val gps =
       if (!pushGramLits) Seq.empty[Int]
       else if (overCap)

@@ -48,29 +48,16 @@ private[graft] object KeyProbe {
     * skipped exactly as under the cap. Past THIS bound (0.5M keys ≈
     * 16 MB of md5 strings on the driver) callers fall back to partition
     * pruning alone — a batch that large is a bulk rebuild's job.
-    * `GRAFT_CHUNKED_PROBE=0` forces the pre-chunking fallback at
-    * [[MaxKeyLiterals]] (measurement seam for rows-axis A/Bs in the
-    * bench notes); it never changes answers, only pruning.
     */
   private[operators] val ChunkedKeyLiterals = 8 * MaxKeyLiterals
 
-  /** The probe seams, readable from the environment (production /
-    * bench-tool runs) or a system property (in-JVM test toggling — env
-    * is immutable inside a forked test JVM). Values: `force` bypasses
-    * the cost gates (rows-axis pins exercise the pruned path at test
-    * scale), `off` forces the gates to DECLINE (the round-19
-    * above-boundary measurement arm: wherever the gate would push,
-    * the decline side of the trade is otherwise unmeasurable — this
-    * seam produced the `bulk_probe_gate_above_r19` crossover data),
-    * `0` forces the pre-chunking fallback past [[MaxKeyLiterals]]. All
-    * three are pruning-only — answers never change, only which arm runs.
+  /** The test seam: the system property `graft.chunked.probe=force`
+    * bypasses the cost gates, so rows-axis specs exercise the pruned
+    * path on toy data. Pruning-only — answers never change, only which
+    * arm runs.
     */
-  private def seam: Option[String] =
-    sys.env.get("GRAFT_CHUNKED_PROBE")
-      .orElse(sys.props.get("graft.chunked.probe"))
-
-  private[operators] def chunkBound: Int =
-    if (seam.contains("0")) MaxKeyLiterals else ChunkedKeyLiterals
+  private def forced: Boolean =
+    sys.props.get("graft.chunked.probe").contains("force")
 
   /** Minimum scanned-table size for the sliced-In escalation. The slices
     * trade a FIXED per-task cost (filter serialization — ~3 MB task
@@ -108,6 +95,13 @@ private[graft] object KeyProbe {
     * is dwarfed by dir bytes and every real push proceeds — and the
     * ROWS axis (the bounded-read guarantee the blooms exist for) is
     * measured working at every size.
+    *
+    * Stale blooms: index files written before round 19 carry the parquet
+    * default fpp=0.01 blooms, not [[withKeyBloom]]'s bulk-grade ones. The
+    * gate reads only dir bytes, so above ~2 GB it still pushes against
+    * them, and there a pushed probe reads up to 2.1× MORE rows than the
+    * declining scan (`bulk_probe_gate_above_r19`). Answers stay exact;
+    * the extra reads last until a compaction rewrites those files.
     */
   private[operators] val BytesPerLiteral = 32768L
 
@@ -140,13 +134,10 @@ private[graft] object KeyProbe {
     * break-even the frame comes back UNFILTERED (the partition pruning
     * the caller already applied stands, and the full scan is
     * wall-cheaper at that size — the r16 committed regression was
-    * exactly the ungated under-cap push against a toy index).
-    * `GRAFT_CHUNKED_PROBE=force` (env or `graft.chunked.probe` sysprop)
-    * bypasses the gate so rows-axis pins exercise the pruned path at
-    * test scale; `=0` forces the pre-chunking fallback past the cap. An
-    * unreadable dir size errs toward pushing (bounded reads beat a
-    * possibly-huge scan when in doubt). Pruning only — never changes
-    * answers.
+    * exactly the ungated under-cap push against a toy index). The
+    * [[forced]] test seam bypasses the gate. An unreadable dir size errs
+    * toward pushing (bounded reads beat a possibly-huge scan when in
+    * doubt). Pruning only — never changes answers.
     */
   private[operators] def keyFiltered(df: DataFrame, key: String,
                                      lits: Seq[Any],
@@ -158,17 +149,9 @@ private[graft] object KeyProbe {
     // leaning on caller discipline, so an empty set always returns the
     // frame unfiltered (and skips the gate's dir-size lookup entirely)
     if (lits.isEmpty) df
-    else if (seam.contains("force")) {
+    else if (forced) {
       record(scannedDir, "keyFiltered", "force", None, lits.size)
       inSlices(df, key, lits)
-    }
-    else if (seam.contains("off")) {
-      record(scannedDir, "keyFiltered", "seam-off", None, lits.size)
-      df
-    }
-    else if (lits.size > MaxKeyLiterals && seam.contains("0")) {
-      record(scannedDir, "keyFiltered", "seam0-fallback", None, lits.size)
-      df
     }
     else dirBytes(df.sparkSession, scannedDir) match {
       case Some(b) if pushWorthIt(lits.size, b) =>
@@ -185,7 +168,7 @@ private[graft] object KeyProbe {
     }
 
   /** Whether a probe should even COLLECT literals for `dir`: true when
-    * the dir is at least [[ChunkedScanMinBytes]] (or the force seam is
+    * the dir is at least [[ChunkedScanMinBytes]] (or [[forced]] is
     * set). For keys whose cardinality scales with batch CONTENT rather
     * than batch rows — gram ids run O(batch tokens), hundreds of
     * thousands per small batch — the driver-side distinct+collect itself
@@ -200,12 +183,9 @@ private[graft] object KeyProbe {
     */
   private[operators] def literalsWorthIt(
       spark: org.apache.spark.sql.SparkSession, dir: String): Boolean =
-    if (seam.contains("force")) {
+    if (forced) {
       record(dir, "literalsWorthIt", "force", None, -1)
       true
-    } else if (seam.contains("off")) {
-      record(dir, "literalsWorthIt", "off", None, -1)
-      false
     } else {
       val b = dirBytes(spark, dir)
       val verdict = b.exists(_ >= ChunkedScanMinBytes)
@@ -216,7 +196,7 @@ private[graft] object KeyProbe {
     }
 
   /** The probe DECISION LEDGER (round 18): every gate verdict records
-    * which arm actually ran — seam value, dir bytes (or unsized), the
+    * which arm actually ran — dir bytes (or unsized), the
     * verdict, and the literal count for pushes — keyed by the scanned
     * dir's layout name (UUID scratch components stripped). The r16/r17
     * driver benches spent 113 s / 71.9 s on an entry the committed
@@ -254,7 +234,7 @@ private[graft] object KeyProbe {
     val b = bytes.map(_.toString).getOrElse("unsized")
     val lits = if (nLits >= 0) s",lits=$nLits" else ""
     decisionLedger.put(s"$op:${layoutKey(dir)}",
-      s"seam=${seam.getOrElse("unset")},bytes=$b,verdict=$verdict$lits")
+      s"bytes=$b,verdict=$verdict$lits")
     ()
   }
 
@@ -339,20 +319,13 @@ private[graft] object KeyProbe {
     * size a row group holds ≤~230k distinct ≥16-byte keys, inside the
     * 1 MB adaptive cap's bulk-grade capacity (~290k), and adaptive
     * sizing keeps small row groups at the 64 KB candidate floor — dir
-    * bytes still track data, the r18 invariant. `GRAFT_KEYBLOOM=0`
-    * writes the same
-    * row-group geometry WITHOUT the bloom (measurement seam: the paired
-    * build-overhead A/B in the bench notes isolates the bloom-write cost
-    * alone; probes against bloomless files are correct, just unpruned at
-    * the row-group level).
+    * bytes still track data, the r18 invariant. The bloom's write cost
+    * is the `bloom_write_overhead_r16` ledger key.
     */
   private[operators] def withKeyBloom[T](
-      w: org.apache.spark.sql.DataFrameWriter[T], key: String) = {
-    val sized = w.option("parquet.block.size", (4 << 20).toString)
-    if (sys.env.get("GRAFT_KEYBLOOM").contains("0")) sized
-    else sized
+      w: org.apache.spark.sql.DataFrameWriter[T], key: String) =
+    w.option("parquet.block.size", (4 << 20).toString)
       .option(s"parquet.bloom.filter.enabled#$key", "true")
       .option("parquet.bloom.filter.adaptive.enabled", "true")
       .option(s"parquet.bloom.filter.fpp#$key", "0.000001")
-  }
 }

@@ -71,9 +71,8 @@ object MinhashIndex {
   // The probe-pruning primitives — single-`In` cap, sorted-slice chunked
   // probing past it, and the per-row-group key-bloom write options — live
   // in [[KeyProbe]], shared with [[ContamIndex]]. Every cap/fallback note
-  // below refers to those bounds; `GRAFT_CHUNKED_PROBE=0` is the rows-axis
-  // A/B seam that disables slicing (answers never change, only pruning).
-  import KeyProbe.{chunkBound, keyFiltered, withKeyBloom}
+  // below refers to those bounds.
+  import KeyProbe.{ChunkedKeyLiterals, keyFiltered, withKeyBloom}
 
   /** Commit marker written as the LAST step of [[build]]/[[append]]. Its
     * absence means a mutation crashed mid-flight (or the index predates
@@ -544,8 +543,9 @@ object MinhashIndex {
     // sampled-schema read could drop (or null out) the column either way
     // cached like keep: hashes has two consumers of its own (the keep
     // aggregation and the superseded-registry anti-join) — uncached,
-    // compaction paid TWO full hash-table scans per fold (ReleaseCost's
-    // per-job forensics under the "index compact" phase)
+    // compaction paid TWO full hash-table scans per fold (the read set
+    // with one read per term is ledger key
+    // `streaming_20x_r14_rows_fixed.release_cost_attribution`)
     val hashes = withAseq(spark.read.option("mergeSchema", "true")
       .parquet(genHashesDir(spark, indexDir, live))).cache()
     // newest content per doc_id; the GC point. O(index) once per
@@ -769,9 +769,9 @@ object MinhashIndex {
     // the pushes themselves), while the full scans they'd avoid cost
     // less than the collects. Past [[KeyProbe.ChunkedScanMinBytes]] the
     // skipped reads dominate and every collect pays for itself many
-    // times over; `GRAFT_CHUNKED_PROBE=force` keeps the pruned path
-    // testable at toy scale. Pruning-only — both arms answer identically
-    // (spec-pinned).
+    // times over; the `graft.chunked.probe=force` test seam keeps the
+    // pruned path testable at toy scale. Pruning-only — both arms answer
+    // identically (spec-pinned).
     val prune = graft.operators.KeyProbe.literalsWorthIt(spark, live)
     // ONE bounded collect serves both prunes: (h, hp) pairs — h literals
     // for row-group skipping (in sorted ≤64k slices past the single-In
@@ -779,17 +779,17 @@ object MinhashIndex {
     // partition pruning. Cap overflow recomputes the tiny hp set alone.
     val hKeys =
       if (prune) s.select(col("h"), hp(col("h")).as("p")).distinct()
-        .limit(chunkBound + 1).collect()
+        .limit(ChunkedKeyLiterals + 1).collect()
       else Array.empty[org.apache.spark.sql.Row]
     val batchHs = hKeys.map(_.getString(0)).sorted.toSeq
     val hps =
       if (!prune) Seq.empty[Int]
-      else if (hKeys.length > chunkBound)
+      else if (hKeys.length > ChunkedKeyLiterals)
         s.select(hp(col("h")).as("p")).distinct()
           .collect().map(_.getInt(0)).toSeq
       else hKeys.map(_.getInt(1)).distinct.toSeq
     val lim: DataFrame => DataFrame = df =>
-      if (prune && hKeys.length <= chunkBound)
+      if (prune && hKeys.length <= ChunkedKeyLiterals)
         keyFiltered(df, "h", batchHs, hashesDir)
       else df
     val hashes0 = spark.read.parquet(hashesDir)
@@ -822,12 +822,12 @@ object MinhashIndex {
     // empty bBand cost nothing at that size).
     val bandKeyRows =
       if (prune) bBand.select(col("band"), col("bp")).distinct()
-        .limit(chunkBound + 1).collect()
+        .limit(ChunkedKeyLiterals + 1).collect()
       else Array.empty[org.apache.spark.sql.Row]
     val batchBands = bandKeyRows.map(_.getString(0)).sorted.toSeq
     val bps =
       if (!prune) Seq.empty[Int]
-      else if (bandKeyRows.length > chunkBound)
+      else if (bandKeyRows.length > ChunkedKeyLiterals)
         bBand.select("bp").distinct().collect().map(_.getInt(0)).toSeq
       else bandKeyRows.map(_.getInt(1)).distinct.toSeq
     // the all-dup/zero-band shortcut: under the gate the bp list answers
@@ -856,7 +856,7 @@ object MinhashIndex {
           if (prune) spark.read.parquet(live)
             .filter(col("bp").isin(bps: _*))
           else spark.read.parquet(live)
-        val scan = if (prune && bandKeyRows.length <= chunkBound)
+        val scan = if (prune && bandKeyRows.length <= ChunkedKeyLiterals)
           keyFiltered(scan0, "band", batchBands, live) else scan0
         val cand = scan
           .withColumn("_bc", count(lit(1)).over(Window.partitionBy("band")))
@@ -885,11 +885,11 @@ object MinhashIndex {
         val candKeys =
           if (prune) pairs
             .select(idp(col("cand_id")).as("ip"), col("cand_id")).distinct()
-            .limit(chunkBound + 1).collect()
+            .limit(ChunkedKeyLiterals + 1).collect()
           else Array.empty[org.apache.spark.sql.Row]
         val (ips, candIds) =
           if (!prune) (Seq.empty[Int], Seq.empty[Long])
-          else if (candKeys.length > chunkBound)
+          else if (candKeys.length > ChunkedKeyLiterals)
             (pairs.select(idp(col("cand_id")).as("ip")).distinct()
               .collect().map(_.getInt(0)).toSeq, Seq.empty[Long])
           else (candKeys.map(_.getInt(0)).distinct.toSeq,

@@ -314,8 +314,9 @@ object PipelineBench {
       // from the changed buckets only on both sides (snapshotDelta).
       // The PRUNING is pinned, not assumed: every parquet file the feed
       // plan opens must live under a changed bucket's dir — unchanged
-      // buckets stay unopened (the economics CdcScaleBench measures at
-      // 3M rows, demonstrated here inside the committed per-query bench)
+      // buckets stay unopened (the economics at 3M rows are the ledger
+      // `BENCH_cdc-scale.json`, demonstrated here inside the per-query
+      // bench)
       val changed = store
         .snapshotChangedBuckets(source.tableName, "train-run-1")
         .getOrElse(sys.error("changed-bucket metadata missing"))

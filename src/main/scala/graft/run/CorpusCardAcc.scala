@@ -75,8 +75,8 @@ object CorpusCardAcc {
     // Three aggregations (counters, token histogram, language counts)
     // consume the contribution stream; left lazy each would recompute it
     // — for [[delta]] that is THREE reads of the old-slice's touched
-    // buckets per release (ReleaseCost measured 3x corpus-sized jobs
-    // under the "card delta" phase). The stream is NARROW (no text:
+    // buckets per release (the one-read-per-term release read set is
+    // ledger key `streaming_20x_r14_rows_fixed.release_cost_attribution`). The stream is NARROW (no text:
     // source/lang/counts/md5), so the cache is cheap at any corpus size;
     // the result is localCheckpoint-materialized before the cache drops.
     val c = c0.persist()

@@ -25,8 +25,7 @@ object CorpusOps {
   /** Label every Spark job a release phase launches (the Spark UI /
     * listener `spark.job.description`): the release is ~a dozen jobs and
     * at scale the expensive ones are corpus-sized — phase labels are what
-    * make a slow release attributable (and what
-    * [[graft.tools.ReleaseCost]]'s per-job forensics read).
+    * make a slow release attributable in a listener's per-job output.
     */
   private def phase[T](spark: SparkSession, label: String)(f: => T): T = {
     spark.sparkContext.setJobDescription(s"corpus: $label")

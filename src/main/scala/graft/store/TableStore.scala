@@ -916,32 +916,10 @@ final class TableStore(spark: SparkSession, root: String,
     * bucket count, or None when the table has never been written.
     */
   def rebucket(name: String, grain: Seq[String]): Option[Int] =
-    rebucket(name, grain, target = None)
-
-  /** [[rebucket]] to an EXPLICIT bucket count — the operator override
-    * for pre-sizing a table ahead of a known load burst (the automatic
-    * rule sizes from CURRENT rows, which is exactly wrong when the
-    * operator knows what is coming) and for geometry instruments (the
-    * bucket-count sweep behind the O(touched-buckets) release-term
-    * bound). Same one-full-publish cost and copy-on-write safety as the
-    * automatic resize; the count is manifest-pinned afterwards like any
-    * other.
-    *
-    * Interaction with the automatic policy ([[maybeRebucket]]): an
-    * explicit target ABOVE `publishBuckets` opts the table out of
-    * automatic resizing permanently (the reachability filter
-    * `numBuckets * RebucketRatio <= publishBuckets` can never fire), and
-    * a target BELOW the sizing rule's ideal for the current row count is
-    * undone by the next `maybeRebucket` fold — pre-sizing is durable
-    * only upward past the cap, or within ratio of the rule's own choice.
-    */
-  def rebucket(name: String, grain: Seq[String],
-               target: Option[Int]): Option[Int] =
     withTableLock(name) {
-      target.foreach(t => require(t >= 1, s"bucket count $t must be >= 1"))
       readIfExists(name).map { df =>
         val rows = df.count()
-        val n = target.getOrElse(chooseBucketCount(rows))
+        val n = chooseBucketCount(rows)
         // fold upsert segments too: readIfExists already resolved them into
         // df, so the rewrite subsumes them (leaving them would be a
         // harmless-but-wasteful no-op replay on every later read)

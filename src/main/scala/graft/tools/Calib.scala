@@ -29,10 +29,11 @@ object Calib {
   val QuietSec = 0.607
 
   /** Inflation factor over [[QuietSec]] past which a run is flagged:
-    * generous vs the probe's own quiet jitter (<±10%) but well under the
-    * 1.5-1.9x inflations that needed manual forensics.
+    * above the probe's own quiet jitter (<±10%) and below the r19 driver
+    * run's 1.215, which inflated its entries yet did not flag itself at
+    * the earlier 1.3.
     */
-  val InflatedBound = 1.3
+  val InflatedBound = 1.15
 
   /** Quiet-host timing of [[onceParallel]] (seconds): minimum of several
     * best-of-5 runs on the idle dev host (0.700/1.086/0.766 — the middle

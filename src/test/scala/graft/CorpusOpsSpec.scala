@@ -920,10 +920,9 @@ class CorpusOpsSpec extends AnyFunSuite {
     val MI = graft.operators.MinhashIndex
     val idx = java.nio.file.Files
       .createTempDirectory("graft_mh_bloom").toString
-    // rows-read attribution SCOPED by job group (the StreamScaleBench
-    // listener idiom): a process-global recordsRead sum would absorb any
-    // concurrent Spark jobs in the shared test session and flake the
-    // quarter-of-postings bound below
+    // rows-read attribution SCOPED by job group: a process-global
+    // recordsRead sum would absorb any concurrent Spark jobs in the shared
+    // test session and flake the quarter-of-postings bound below
     val group = "mh-bloom-pin"
     val rowsRead = new java.util.concurrent.atomic.AtomicLong()
     val scoped = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()

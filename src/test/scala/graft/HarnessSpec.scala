@@ -1,16 +1,15 @@
 package graft
 
-import graft.tools.Gauge
 import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** Contracts of the measurement harness shared by Bench, Verify and the
-  * tools: the `SPARK_GRAFT_ONLY` entry filter, the one session factory,
-  * and the input-rows gauge.
+/** Contracts of the main code's shape, checked on its sources: the
+  * `SPARK_GRAFT_ONLY` entry filter, the entry points, the settings read
+  * from the environment, the one session factory, and the one owner of
+  * each Spark internal the code reaches.
   */
 class HarnessSpec extends AnyFunSuite {
-  private def spark = TestSpark.spark
 
   test("SPARK_GRAFT_ONLY: unset or blank selects every entry") {
     assert(SparkEntry.selected(Map.empty) === None)
@@ -37,6 +36,36 @@ class HarnessSpec extends AnyFunSuite {
   private def callersBesides(owner: Path, calls: String*): Seq[String] = {
     assert(Files.isRegularFile(owner), s"no owner source $owner")
     callers(calls: _*).filterNot(_ == main.relativize(owner).toString)
+  }
+
+  test("main code has exactly five entry points") {
+    val mains = callers("def main(")
+    val kept = Seq(
+      Paths.get("graft", "Bench.scala"), Paths.get("graft", "Verify.scala"),
+      Paths.get("graft", "tools", "DumpPlan.scala"),
+      Paths.get("graft", "tools", "Calib.scala"),
+      Paths.get("graft", "run", "Main.scala")).map(_.toString).sorted
+    assert(mains === kept,
+      s"run a measurement through Bench, perfbench or a test, not a new main: $mains")
+  }
+
+  test("only the named settings owners read the environment or system properties") {
+    val keyProbe = Paths.get("graft", "operators", "KeyProbe.scala") // the force test seam
+    val owners = Seq(
+      Paths.get("graft", "core", "GraftSession.scala"),
+      Paths.get("graft", "core", "Retry.scala"), // GraftConfig.load
+      Paths.get("graft", "core", "CloudCredentials.scala"),
+      Paths.get("graft", "core", "Secrets.scala"),
+      Paths.get("graft", "Bench.scala"),
+      Paths.get("graft", "SparkEntry.scala"),
+      keyProbe)
+    owners.foreach(o => assert(Files.isRegularFile(main.resolve(o)), s"no owner source $o"))
+    val offenders = callers("sys.env", "System.getenv", "sys.props", "System.getProperty")
+      .filterNot(owners.map(_.toString).contains)
+    assert(offenders.isEmpty,
+      s"read settings through GraftConfig, GraftSession or CLI options: $offenders")
+    assert(!Files.readString(main.resolve(keyProbe)).contains("sys.env"),
+      "KeyProbe's seam is a test system property, not an environment variable")
   }
 
   test("only GraftSession calls SparkSession.builder() in main code") {
@@ -90,21 +119,5 @@ class HarnessSpec extends AnyFunSuite {
       "readSchemaFromFooter")
     assert(footer.isEmpty,
       s"read a footer's schema through ScanEstimate.parquetFooterWithSchema: $footer")
-  }
-
-  test("Gauge.measured reports exactly the rows its block read") {
-    val dir = Files.createTempDirectory("graft_gauge").resolve("t").toString
-    spark.range(1000).coalesce(1).write.parquet(dir)
-    val gauge = new Gauge(spark)
-    val (n, wall, krows) = gauge.measured(spark.read.parquet(dir).count())
-    assert(n === 1000L)
-    assert(wall > 0.0)
-    assert(krows === 1.0)
-    // back to back: neither block's rows leak into the other (a range
-    // scan counts its generated rows as input records)
-    val (_, _, again) = gauge.measured(spark.read.parquet(dir).count())
-    val (_, _, ten) = gauge.measured(spark.range(10).count())
-    assert(again === 1.0)
-    assert(ten === 0.01)
   }
 }

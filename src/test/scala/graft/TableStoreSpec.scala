@@ -340,14 +340,6 @@ class TableStoreSpec extends AnyFunSuite {
     val c = store.publish("r", stageDf(1L -> "a2"), src,
       new java.sql.Timestamp(3000L))
     assert(c == ((0L, 1L)))
-    // explicit-target rebucket: the operator override pins EXACTLY the
-    // requested geometry (pre-sizing / instrument seam), contents intact
-    assert(store.rebucket("r", Seq("id"), target = Some(128)).contains(128))
-    assert(bucketDirs() == 128)
-    assert(store.bucketCount("r").contains(128))
-    assert(store.readIfExists("r").get.count() == 70001)
-    assert(store.readIfExists("r").get
-      .filter(col("id") === 1L).head().getString(1) == "a2")
   }
 
   test("maybeRebucket upgrades an outgrown pinned layout automatically " +

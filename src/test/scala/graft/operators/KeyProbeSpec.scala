@@ -100,17 +100,6 @@ class KeyProbeSpec extends AnyFunSuite {
       val some = KeyProbe.keyFiltered(df, "k", Seq("k1", "k2", "kxx"), dir)
       assert(some.count() === 2L,
         "3 literals against a ~1MB dir are past break-even: must push")
-      // the off seam forces the DECLINE arm where the gate would push —
-      // the r19 above-boundary measurement seam. Pruning-only: the
-      // superset comes back, and literalsWorthIt stops the collect too.
-      sys.props("graft.chunked.probe") = "off"
-      try {
-        assert(KeyProbe.keyFiltered(df, "k", Seq("k1", "k2", "kxx"), dir)
-          .count() === 2000L,
-          "off seam must decline the push the gate would make")
-        assert(!KeyProbe.literalsWorthIt(spark, dir),
-          "off seam must decline the literal collect at any size")
-      } finally { sys.props.remove("graft.chunked.probe"); () }
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
