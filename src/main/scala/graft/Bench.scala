@@ -1,5 +1,5 @@
 package graft
-import graft.core.GraftSession
+import graft.core.{GraftSession, Json}
 import graft.queries.{PipelineBench, TrainingData}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
@@ -18,9 +18,8 @@ object Bench {
     val calibStart = graft.tools.Calib.best()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.builder().getOrCreate()
-    // ERROR: Spark's "function X replaced a previously registered function"
-    // WARNs (and executor chatter) must not interleave with the one-line
-    // JSON result the driver parses from stdout.
+    // ERROR: executor chatter (task retries, spill and broadcast WARNs)
+    // must not interleave with the one-line JSON result parsed from stdout.
     spark.sparkContext.setLogLevel("ERROR")
     // warmup: JVM/Janino-codegen/broadcast/window/shuffle machinery and
     // parquet footers all initialize here, not inside the first measured
@@ -45,7 +44,6 @@ object Bench {
       .foreach(t => warm(spark.read.parquet(s"$sfDir/$t.parquet").count()))
     warm {
       // first evaluation of the custom expressions compiles their codegen
-      graft.functions.VectorFunctions.register(spark)
       spark.sql(
         """SELECT jaccard_ids(minhash_sig(shingle_ids('a b c d e', 2), 16),
           |                   minhash_sig(shingle_ids('a b c x y', 2), 16)),
@@ -266,17 +264,8 @@ object Bench {
     // arm in the artifact itself instead of needing a rebuild-and-guess
     // (the r16/r17 decontam_index_probe 58x gap was unadjudicable for
     // two rounds for want of exactly this)
-    // keys derive from filesystem paths — escape JSON string
-    // metacharacters so an unusual path can never yield an invalid bench
-    // artifact
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val probeJson = graft.operators.KeyProbe.decisions().toSeq.sorted
-      .map { case (k, v) => jstr(k) + ":" + jstr(v) }
+      .map { case (k, v) => Json.str(k) + ":" + Json.str(v) }
       .mkString("{", ",", "}")
     val envJson = s""""probe_decisions":$probeJson,""" +
       s""""contended":$contended,"spread_p90":${fmt(spreadP90)},""" +

@@ -2,16 +2,19 @@ package graft.core
 
 import org.apache.spark.sql.SparkSessionExtensions
 
-/** SparkSessionExtensions hook: makes the engine's custom Catalyst
-  * expressions available to ANY session — including pure-SQL users — via
+/** The one declaration of the engine's SQL functions and of the
+  * [[graft.functions.FuseCosine]] rule. [[GraftSession.builder]] installs it
+  * (`withExtensions`), so every engine session and each of its
+  * `newSession()` siblings has them; a session built elsewhere gets them
+  * with
   *
   *   spark.sql.extensions=graft.core.GraftExtensions
   *
   * after which `SELECT vec_dot(a, b)`, `shingle_ids(text, 2)`,
   * `minhash_sig(ids, 16)`, `jaccard_ids(a, b)`, `shingle_strings(text, 2)`,
-  * `intersect_size_ids(a, b)`, `vec_normalize(v)`, and `simhash_md5(text)`
-  * parse natively. Library users can equivalently call
-  * [[graft.functions.VectorFunctions.register]] on an existing session.
+  * `intersect_size_ids(a, b)`, `vec_normalize(v)`, `simhash_md5(text)` and
+  * `cosine_sim(a, b)` parse natively, and the Column API
+  * ([[graft.functions.VectorFunctions]]) resolves.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

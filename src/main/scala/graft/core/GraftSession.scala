@@ -22,6 +22,8 @@ import org.apache.spark.sql.SparkSession
   *    session's Hadoop conf. `FileSystem`'s cache keys on scheme and user,
   *    not on the conf, so main code never builds a bare `Configuration` or
   *    calls `FileSystem.get` (a HarnessSpec source scan pins this).
+  *  - [[GraftExtensions]]: the engine's SQL functions and optimizer rule,
+  *    inherited by `newSession()` siblings
   */
 object GraftSession {
   def localCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -48,6 +50,7 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
+      .withExtensions(new GraftExtensions)
   }
 
   def getOrCreate(): SparkSession = {

@@ -88,16 +88,6 @@ final class OtlpHttpExporter(
     exportThread.awaitTermination(5, java.util.concurrent.TimeUnit.SECONDS)
   }
 
-  private def esc(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   private def hex(bytes: Int): String = {
     val b = new Array[Byte](bytes)
     ThreadLocalRandom.current().nextBytes(b)
@@ -105,14 +95,14 @@ final class OtlpHttpExporter(
   }
 
   private def attrJson(k: String, v: Any): String = v match {
-    case i: Int => s"""{"key":"${esc(k)}","value":{"intValue":"$i"}}"""
-    case l: Long => s"""{"key":"${esc(k)}","value":{"intValue":"$l"}}"""
-    case b: Boolean => s"""{"key":"${esc(k)}","value":{"boolValue":$b}}"""
+    case i: Int => s"""{"key":${Json.str(k)},"value":{"intValue":"$i"}}"""
+    case l: Long => s"""{"key":${Json.str(k)},"value":{"intValue":"$l"}}"""
+    case b: Boolean => s"""{"key":${Json.str(k)},"value":{"boolValue":$b}}"""
     case d: Double if !d.isNaN && !d.isInfinite =>
-      s"""{"key":"${esc(k)}","value":{"doubleValue":$d}}"""
+      s"""{"key":${Json.str(k)},"value":{"doubleValue":$d}}"""
     case d: Double => // NaN/Infinity are not valid JSON numbers
-      s"""{"key":"${esc(k)}","value":{"stringValue":"$d"}}"""
-    case other => s"""{"key":"${esc(k)}","value":{"stringValue":"${esc(String.valueOf(other))}"}}"""
+      s"""{"key":${Json.str(k)},"value":{"stringValue":"$d"}}"""
+    case other => s"""{"key":${Json.str(k)},"value":{"stringValue":${Json.str(String.valueOf(other))}}}"""
   }
 
   private def spanJson(s: Trace.SpanData): String = {
@@ -121,10 +111,10 @@ final class OtlpHttpExporter(
     // OTLP status: 1 = OK, 2 = ERROR
     val status =
       if (s.ok) """{"code":1}"""
-      else s"""{"code":2,"message":"${esc(s.errorClass.getOrElse(""))}"}"""
+      else s"""{"code":2,"message":${Json.str(s.errorClass.getOrElse(""))}}"""
     val attrs = (s.attrs.map { case (k, v) => attrJson(k, v) } ++
       s.errorClass.map(c => attrJson("error.type", c))).mkString(",")
-    s"""{"traceId":"${hex(16)}","spanId":"${hex(8)}","name":"${esc(s.name)}",""" +
+    s"""{"traceId":"${hex(16)}","spanId":"${hex(8)}","name":${Json.str(s.name)},""" +
       s""""kind":1,"startTimeUnixNano":"$startNano","endTimeUnixNano":"$endNano",""" +
       s""""status":$status,"attributes":[$attrs]}"""
   }

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
@@ -759,12 +758,10 @@ case class CosineSim(left: Expression, right: Expression)
 /** Optimizer rule: fuse `vec_dot(vec_normalize(a), vec_normalize(b))` into
   * [[CosineSim]] — the composed form allocates two normalized arrays per
   * row; the fused form allocates nothing and produces bit-identical
-  * results (see [[CosineSim]]'s rounding-order note). Runs on every plan
-  * (registered via [[graft.core.GraftExtensions]] `injectOptimizerRule`
-  * for config-built sessions, and through
-  * `spark.experimental.extraOptimizations` by
-  * [[VectorFunctions.register]] for live ones); a no-op unless the
-  * pattern occurs.
+  * results (see [[CosineSim]]'s rounding-order note). Runs in the
+  * operator-optimization batch of every session that has
+  * [[graft.core.GraftExtensions]] (its `injectOptimizerRule`); a no-op
+  * unless the pattern occurs.
   */
 object FuseCosine
     extends org.apache.spark.sql.catalyst.rules.Rule[
@@ -777,88 +774,42 @@ object FuseCosine
     }
 }
 
-/** Session registration + Column API for the vector expressions. */
+/** Column API for the vector expressions. Each function resolves by name,
+  * so it needs a session that has the engine's functions: any
+  * [[graft.core.GraftSession]] session, or one started with
+  * `spark.sql.extensions=graft.core.GraftExtensions`.
+  */
 object VectorFunctions {
 
-  /** Idempotent per-session registration (the registry is session-scoped;
-    * re-registering overwrites with an identical builder).
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => VecDot(exprs.head, exprs(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_sig"),
-      (exprs: Seq[Expression]) => MinHashSignature(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("shingle_ids"),
-      new ExpressionInfo(classOf[ShingleIds].getName, "shingle_ids"),
-      (exprs: Seq[Expression]) => ShingleIds(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("jaccard_ids"),
-      new ExpressionInfo(classOf[JaccardIds].getName, "jaccard_ids"),
-      (exprs: Seq[Expression]) => JaccardIds(exprs.head, exprs(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("shingle_strings"),
-      new ExpressionInfo(classOf[ShingleStrings].getName, "shingle_strings"),
-      (exprs: Seq[Expression]) => ShingleStrings(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("intersect_size_ids"),
-      new ExpressionInfo(classOf[IntersectSizeIds].getName, "intersect_size_ids"),
-      (exprs: Seq[Expression]) => IntersectSizeIds(exprs.head, exprs(1)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("vec_normalize"),
-      new ExpressionInfo(classOf[VecNormalize].getName, "vec_normalize"),
-      (exprs: Seq[Expression]) => VecNormalize(exprs.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("simhash_md5"),
-      new ExpressionInfo(classOf[SimhashMd5].getName, "simhash_md5"),
-      (exprs: Seq[Expression]) => SimhashMd5(exprs.head))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSim].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSim(exprs.head, exprs(1)))
-    // live-session path for the fusion rule (config-built sessions get it
-    // via GraftExtensions.injectOptimizerRule); idempotent by identity
-    if (!spark.experimental.extraOptimizations.contains(FuseCosine))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ FuseCosine
-  }
-
-  /** Codegen'd dot product; requires [[register]] on the session. */
+  /** Codegen'd dot product (`vec_dot`). */
   def vecDot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
 
-  /** One-pass k-component MinHash signature; requires [[register]]. */
+  /** One-pass k-component MinHash signature (`minhash_sig`). */
   def minhashSig(ids: Column, k: Int): Column =
     call_function("minhash_sig", ids, org.apache.spark.sql.functions.lit(k))
 
-  /** Fused distinct word-n-gram shingle ids; requires [[register]]. */
+  /** Fused distinct word-n-gram shingle ids (`shingle_ids`). */
   def shingleIds(text: Column, n: Int): Column =
     call_function("shingle_ids", text, org.apache.spark.sql.functions.lit(n))
 
-  /** Merge-scan Jaccard over sorted id arrays; requires [[register]]. */
+  /** Merge-scan Jaccard over sorted id arrays (`jaccard_ids`). */
   def jaccardIds(a: Column, b: Column): Column = call_function("jaccard_ids", a, b)
 
-  /** Fused distinct word-n-gram shingle strings; requires [[register]]. */
+  /** Fused distinct word-n-gram shingle strings (`shingle_strings`). */
   def shingleStrings(text: Column, n: Int): Column =
     call_function("shingle_strings", text, org.apache.spark.sql.functions.lit(n))
 
-  /** Merge-scan intersection size over sorted id arrays; requires [[register]]. */
+  /** Merge-scan intersection size over sorted id arrays (`intersect_size_ids`). */
   def intersectIds(a: Column, b: Column): Column =
     call_function("intersect_size_ids", a, b)
 
-  /** Fused one-pass L2 normalization; requires [[register]]. */
+  /** Fused one-pass L2 normalization (`vec_normalize`). */
   def vecNormalize(a: Column): Column = call_function("vec_normalize", a)
 
-  /** Fused portable 60-bit md5 SimHash; requires [[register]]. */
+  /** Fused portable 60-bit md5 SimHash (`simhash_md5`). */
   def simhashMd5(text: Column): Column = call_function("simhash_md5", text)
 
-  /** Fused allocation-free cosine similarity; requires [[register]]. */
+  /** Fused allocation-free cosine similarity (`cosine_sim`). */
   def cosineSim(a: Column, b: Column): Column =
     call_function("cosine_sim", a, b)
 }

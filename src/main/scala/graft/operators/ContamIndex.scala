@@ -83,7 +83,6 @@ object ContamIndex {
 
   private def writeGrams(evalDocs: DataFrame, indexDir: String, gramN: Int,
                          overwrite: Boolean): Unit = {
-    graft.functions.VectorFunctions.register(evalDocs.sparkSession)
     // repartition by the layout key (the MinhashIndex build/append rule):
     // without it every shuffle task writes a sliver into every gp dir —
     // numShufflePartitions x 64 files per build (measured 2,049 files /
@@ -262,7 +261,6 @@ object ContamIndex {
   def recordTrainDf(docs: DataFrame, indexDir: String,
                     gramN: Int = 5): Unit = {
     val spark = docs.sparkSession
-    graft.functions.VectorFunctions.register(spark)
     val grams = gramsWithData(spark, indexDir) match {
       case Some(g) => new org.apache.hadoop.fs.Path(g)
       case None => return // no evidence -> the cap can never be consumed
@@ -473,7 +471,6 @@ object ContamIndex {
     */
   def decontaminate(spark: SparkSession, batch: DataFrame, indexDir: String,
                     dfCap: Int = 10000, gramN: Int = 5): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     // evidence absent (or data-less — a zero-gram suite): nothing can be
     // contamination, the batch passes through whole
     val gramsDir = gramsWithData(spark, indexDir) match {

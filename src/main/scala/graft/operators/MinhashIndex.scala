@@ -129,7 +129,6 @@ object MinhashIndex {
     * work paid exactly once per document's life in the index.
     */
   private def signed(docs: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"), md5(col("text")).as("h"),
         shingleIds(col("text"), 2).as("ids"))
       .withColumn("sig", minhashSig(col("ids"), 16))

@@ -59,6 +59,12 @@ object RankOps {
     */
   /** The range-bucketing half of [[withGlobalRank]], exposed for the spec's
     * balance property: the input plus a `_rk_b` bucket id column.
+    *
+    * With `part`, the `buckets * 64` sample is shared by all parts, not
+    * drawn per part: with P parts each part gets ~64/P samples per bucket,
+    * so its buckets' share error grows toward 1/sqrt(64/P). That costs
+    * bucket balance (straggler risk), not correctness: ranks stay exact
+    * whatever the cuts.
     */
   private[graft] def bucketAssign(df: DataFrame, key: Column,
                                   minor: Option[Column],

@@ -107,7 +107,6 @@ object TrainingData {
     // compact long arrays — the string shingles never leave the first
     // projection. (Jaccard over ids == Jaccard over shingles modulo 31-bit
     // collisions; the oracle computes the identical id-based formula.)
-    graft.functions.VectorFunctions.register(spark)
     val withIds = docs(spark, dir).select(col("doc_id"),
         graft.functions.VectorFunctions.shingleIds(col("text"), 2).as("ids"))
       .withColumn("sig",
@@ -182,7 +181,6 @@ object TrainingData {
     * single codegen'd [[graft.functions.VecDot]] — not dot + two norms.
     */
   private def normalized(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.vecNormalize
     val v = col("embedding").cast(ArrayType(DoubleType))
     embs(spark, dir).select(col("vec_id"), vecNormalize(v).as("nv"))
@@ -975,7 +973,6 @@ object TrainingData {
     * 100 TB curation run would use.
     */
   def curateCorpus(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.{jaccardIds, minhashSig, shingleIds}
     import org.apache.spark.sql.expressions.Window
 
@@ -1068,7 +1065,6 @@ object TrainingData {
   private[graft] def curatedFrameWithIds(docsDf: DataFrame,
       onCache: DataFrame => Unit = _ => ()): DataFrame = {
     val spark = docsDf.sparkSession
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.{jaccardIds, minhashSig, shingleIds}
     val quality = docsDf
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
@@ -1120,7 +1116,6 @@ object TrainingData {
   private[graft] def curatedFrameIncremental(batchDocs: DataFrame,
       corpus: DataFrame, onCache: DataFrame => Unit = _ => ()): DataFrame = {
     val spark = batchDocs.sparkSession
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.{jaccardIds, minhashSig, shingleIds}
     // ids/sig arrive precomputed from the batch-internal dedup pass — ONE
     // shingle projection per plan branch (previously the batch was
@@ -1282,7 +1277,6 @@ object TrainingData {
     * joining documents pairwise.
     */
   def dedupIncremental(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.shingleIds
     // cached: the hash + 5-gram projection feeds FIVE subplans (both sides
     // of both semi-joins plus the size counts) — uncached, the shingle
@@ -1316,7 +1310,6 @@ object TrainingData {
     * shuffle; only k rows reach the driver.
     */
   def textNgrams(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     docs(spark, dir)
       .select(explode(graft.functions.VectorFunctions
         .shingleStrings(col("text"), 2)).as("ngram"))
@@ -1341,7 +1334,6 @@ object TrainingData {
     * keep the explode+votes form).
     */
   private def simhashMd5Fps(d: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(d.sparkSession)
     // null-text docs must VANISH from the fingerprint frame (the explode
     // formulation this replaces produced zero rows for them) — without the
     // filter a null fp row would survive into the pairings
@@ -1510,7 +1502,6 @@ object TrainingData {
     */
   private[graft] def dupClusterLabels(
       spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.{jaccardIds, minhashSig, shingleIds}
 
     val withIds = docs(spark, dir).select(col("doc_id"),
@@ -1734,7 +1725,6 @@ object TrainingData {
     * miss band collision — the recall/cost trade every LSH screen makes.
     */
   def dedupContainment(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.{intersectIds, minhashSig, shingleIds}
     val withIds = docs(spark, dir).select(col("doc_id"),
         shingleIds(col("text"), 2).as("ids"))
@@ -1818,7 +1808,6 @@ object TrainingData {
     * components at 6 before reuse, inertia at 2.
     */
   def embKmeans(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.vecDot
     val e = embs(spark, dir).select(col("vec_id"),
         col("embedding").cast(ArrayType(DoubleType)).as("v"))
@@ -1920,7 +1909,6 @@ object TrainingData {
                                               dir: String,
                                               cap: Int,
                                               gramN: Int = 5): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.shingleIds
     val split = when(h60(col("doc_id").cast(StringType)) % 100 < 80, "train")
       .otherwise("eval")
@@ -2084,7 +2072,6 @@ object TrainingData {
 
   private[graft] def sourceOverlapCapped(spark: SparkSession, dir: String,
                                          cap: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.shingleIds
     // (source, id) per DOCUMENT (shingleIds dedups within a doc), so the
     // per-id row count is corpus document frequency; cached because it
@@ -2125,7 +2112,6 @@ object TrainingData {
     * dedups within the doc), so the count IS document frequency.
     */
   def dedupSpans(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.shingleIds
     val df = docs(spark, dir)
       .select(explode(shingleIds(col("text"), 10)).as("id"))
@@ -2274,7 +2260,6 @@ object TrainingData {
     * a doc-keyed rollup — fine-grained keys throughout, nothing pairwise.
     */
   def textNovelty(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.shingleIds
     // cached: the exploded gram frame feeds both the first-owner aggregate
     // and the join-back probe side
@@ -2733,7 +2718,6 @@ object TrainingData {
     * component positive) since eigenvectors are sign-ambiguous.
     */
   def embPca(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.vecDot
     val e = embs(spark, dir).select(col("vec_id"),
         col("embedding").cast(ArrayType(DoubleType)).as("v"))
@@ -2793,7 +2777,6 @@ object TrainingData {
 
   private[graft] def dedupSemanticCapped(spark: SparkSession, dir: String,
                                          cap: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.{vecDot, vecNormalize}
     import org.apache.spark.sql.expressions.Window
     val v = col("embedding").cast(ArrayType(DoubleType))
@@ -2901,7 +2884,6 @@ object TrainingData {
     */
   def knnLabelAgreement(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.VectorFunctions.{vecDot, vecNormalize}
-    graft.functions.VectorFunctions.register(spark)
     val v = col("embedding").cast(ArrayType(DoubleType))
     val e = embs(spark, dir).select(col("vec_id"), col("label"),
       vecNormalize(v).as("nv"))
@@ -3147,7 +3129,6 @@ object TrainingData {
     */
   private[graft] def embOutliersFrames(
       spark: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.{vecDot, vecNormalize}
     // cached: the centroid pass and the similarity pass each consume every
     // normalized vector — uncached, the embedding parquet would scan (and
@@ -3362,7 +3343,6 @@ object TrainingData {
     * TakeOrderedAndProject. Nothing pairwise, nothing windowed.
     */
   def contaminationTopdocs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.shingleIds
     val cap = 10000 // same heavy-gram guard as contaminationCheck
     val split = when(h60(col("doc_id").cast(StringType)) % 100 < 80, "train")
@@ -3487,7 +3467,6 @@ object TrainingData {
     * O(sources²) rows at any corpus size.
     */
   def sourceDupMatrix(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.simhashMd5
     // one scan: the fingerprint and the source label come off the same
     // projection (simhashMd5Fps would drop the payload column)
@@ -3956,7 +3935,6 @@ object TrainingData {
     */
   def contaminationCheckStream(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.shingleIds
     val cap = 10000
     val split = when(h60(col("doc_id").cast(StringType)) % 100 < 80, "train")
@@ -4695,7 +4673,6 @@ object TrainingData {
     * deployment picks b/r for its threshold, with the answer verified.
     */
   def dedupMinhashRecall(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.{jaccardIds, minhashSig, shingleIds}
     val withIds = docs(spark, dir).select(col("doc_id"),
         shingleIds(col("text"), 2).as("ids"))
@@ -4833,7 +4810,6 @@ object TrainingData {
   }
 
   def decontamFilter(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.shingleIds
     val cap = 10000
     val split = when(h60(col("doc_id").cast(StringType)) % 100 < 80, "train")

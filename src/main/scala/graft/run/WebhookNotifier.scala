@@ -1,6 +1,6 @@
 package graft.run
 
-import graft.core.{FileError, Retry}
+import graft.core.{FileError, Json, Retry}
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
@@ -20,20 +20,10 @@ final class WebhookNotifier(url: String,
                               .connectTimeout(Duration.ofSeconds(5)).build())
     extends Notifier {
 
-  private def jsonEscape(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   private def post(level: String, emoji: String, text: String): Unit =
     try Retry.withBackoff() {
       val body =
-        s"""{"level": "${jsonEscape(level)}", "emoji": "$emoji", "text": "${jsonEscape(text)}"}"""
+        s"""{"level": ${Json.str(level)}, "emoji": "$emoji", "text": ${Json.str(text)}}"""
       val req = HttpRequest.newBuilder(URI.create(url))
         .timeout(Duration.ofSeconds(10))
         .header("Content-Type", "application/json")

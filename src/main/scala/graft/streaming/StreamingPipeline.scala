@@ -538,7 +538,6 @@ object StreamingPipeline {
   def streamingNearDup(docs: DataFrame, matchThreshold: Int = 12,
       maxPerBand: Int = 64): Dataset[NearDupHit] = {
     val spark = docs.sparkSession
-    graft.functions.VectorFunctions.register(spark)
     import spark.implicits._
     import graft.functions.VectorFunctions.{minhashSig, shingleIds}
     val banded = docs

@@ -18,7 +18,6 @@ object DumpPlan {
     val out = args(2)
     val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.VectorFunctions.register(spark)
     val df = graft.queries.TrainingData.planOnly.withValue(true) {
       graft.SparkEntry.queries(name)(spark, dir)
     }

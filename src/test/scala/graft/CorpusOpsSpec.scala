@@ -277,7 +277,6 @@ class CorpusOpsSpec extends AnyFunSuite {
     // the update step must actually move centroids: total inertia after the
     // Lloyd iteration is strictly below the seed-centroid assignment's
     // (equality would mean the update silently became a no-op)
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.vecDot
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("v"))
@@ -1214,7 +1213,6 @@ class CorpusOpsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       graft.operators.MinhashIndex.build(emptyDocs, mh)
     }
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.vecNormalize
     // odd-only ids never hit the default % 100 == 3 sample
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
@@ -1330,7 +1328,6 @@ class CorpusOpsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     import graft.functions.VectorFunctions.{minhashSig, shingleIds}
-    graft.functions.VectorFunctions.register(spark)
     def text(tag: String) =
       (1 to 30).map(i => s"${tag}tok$i").mkString(" ")
     val root = java.nio.file.Files.createTempDirectory("legacy_idx")
@@ -1601,7 +1598,6 @@ class CorpusOpsSpec extends AnyFunSuite {
     // probe reads only its nprobe bucket directories
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.vecNormalize
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"),
@@ -1623,7 +1619,6 @@ class CorpusOpsSpec extends AnyFunSuite {
   test("appendIvf: incremental vectors join the index under the base centroids") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.{vecDot, vecNormalize}
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"),
@@ -1680,7 +1675,6 @@ class CorpusOpsSpec extends AnyFunSuite {
   test("deleteIvf: tombstones hide vectors from probes; compact drops them") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.vecNormalize
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"),
@@ -1963,7 +1957,6 @@ class CorpusOpsSpec extends AnyFunSuite {
     import graft.core.Chaos
     import graft.operators.VectorIndex
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.vecNormalize
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"),

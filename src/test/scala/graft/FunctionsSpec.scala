@@ -14,7 +14,6 @@ class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   // one JVM-shared session for the whole test run — suites must never
   // stop it (getOrCreate shares the underlying session across suites)
   private val spark: SparkSession = TestSpark.spark
-  VectorFunctions.register(spark)
 
   private def one(colExpr: org.apache.spark.sql.Column): org.apache.spark.sql.Row =
     spark.range(1).select(colExpr).head()
@@ -89,6 +88,24 @@ class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // and the rewritten plan still computes the right values
     val sims = df.collect().map(_.getDouble(0))
     assert(sims.length == 3 && sims.forall(s => s >= -1.0001 && s <= 1.0001))
+  }
+
+  test("a newSession() sibling has the SQL functions and FuseCosine with no registration call") {
+    import VectorFunctions.{vecDot, vecNormalize}
+    val sibling = spark.newSession()
+    val row = sibling.sql(
+      """SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)),
+        |       cosine_sim(array(1.0D, 0.0D), array(1.0D, 0.0D)),
+        |       size(minhash_sig(array(7L, 9L), 4))""".stripMargin).head()
+    assert(row.getDouble(0) == 11.0 && row.getDouble(1) == 1.0 && row.getInt(2) == 4)
+    val df = sibling.range(2).select(
+      array(col("id").cast(DoubleType), lit(2.0)).as("a"),
+      array(lit(1.0), col("id").cast(DoubleType)).as("b"))
+      .select(vecDot(vecNormalize(col("a")), vecNormalize(col("b"))).as("sim"))
+    val optimized = df.queryExecution.optimizedPlan
+    assert(optimized.exists(_.expressions.exists(
+        _.exists(_.isInstanceOf[graft.functions.CosineSim]))),
+      s"FuseCosine must rewrite the composition, got:\n$optimized")
   }
 
   test("shingle_ids: fused expression matches the composable chain") {

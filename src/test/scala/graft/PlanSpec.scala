@@ -276,7 +276,6 @@ class PlanSpec extends AnyFunSuite {
   test("emb_kmeans assignment: broadcast cross join, no per-vector sort") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.vecDot
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("v"))
@@ -334,7 +333,6 @@ class PlanSpec extends AnyFunSuite {
     // (VectorIndex.assign): the r6 regression came from losing it
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    graft.functions.VectorFunctions.register(spark)
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"),
         col("embedding").cast(ArrayType(DoubleType)).as("nv"))
@@ -462,7 +460,6 @@ class PlanSpec extends AnyFunSuite {
     "pair join keyed on the bucket") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    graft.functions.VectorFunctions.register(spark)
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"),
         col("embedding").cast(ArrayType(DoubleType)).as("nv"))
@@ -499,7 +496,6 @@ class PlanSpec extends AnyFunSuite {
 
   test("text_novelty: gram-keyed min aggregate with map-side partials") {
     import org.apache.spark.sql.functions._
-    graft.functions.VectorFunctions.register(spark)
     val d = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"),
         explode(graft.functions.VectorFunctions.shingleIds(col("text"), 5))

@@ -236,7 +236,6 @@ class PropertiesSpec extends AnyFunSuite {
     assert(IntersectSizeIds(clean, clean).eval(null) == 2L)
     // codegen path through a real DataFrame with containsNull=true schema
     val spark = TestSpark.spark
-    graft.functions.VectorFunctions.register(spark)
     val df = spark.createDataFrame(
       java.util.List.of(
         org.apache.spark.sql.Row(Seq[java.lang.Double](3.0, 4.0)),

@@ -217,7 +217,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import sp.implicits._
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    graft.functions.VectorFunctions.register(spark)
     import graft.functions.VectorFunctions.vecNormalize
     val all = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(col("vec_id"),
@@ -537,7 +536,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx = spark.sqlContext
     val sp = spark
     import sp.implicits._
-    graft.functions.VectorFunctions.register(spark)
     import org.apache.spark.sql.functions._
     import graft.functions.VectorFunctions.shingleIds
     // static train evidence: the 5-gram ids of one known sentence
